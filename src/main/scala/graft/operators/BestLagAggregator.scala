@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
 /** SQL-callable lag-scan correlation: `best_lag(period, v1, v2)` runs the
@@ -20,7 +19,6 @@ import org.apache.spark.sql.functions.udaf
   */
 object BestLagAggregator {
 
-  final case class Pt(period: String, v1: Double, v2: Double)
   final case class BestLag(optimal_lag: Int, correlation: Double, num_periods: Int)
 
   /** Pearson r; NaN for zero variance (caller skips NaN). */
@@ -60,27 +58,12 @@ object BestLagAggregator {
     BestLag(bestL, best, n)
   }
 
-  /** Aggregation buffer: the group's points plus a running count, so the
-    * size guard is O(1) per row (List.length per reduce would be O(n²)). */
-  final case class Buf(n: Int, pts: List[Pt])
-
-  final class Agg(maxLag: Int, maxSeriesLength: Int) extends Aggregator[Pt, Buf, BestLag] {
-    // Same fail-fast as DtwMapping's maxSeriesLength check: a pathological
-    // hot key must error with a diagnosable message, not OOM the executor
-    // while buffering the group.
-    private def guard(n: Int): Unit =
-      if (n > maxSeriesLength)
-        throw new IllegalStateException(
-          s"best_lag group has $n points > maxSeriesLength=$maxSeriesLength")
-    override def zero: Buf = Buf(0, Nil)
-    override def reduce(b: Buf, a: Pt): Buf = { guard(b.n + 1); Buf(b.n + 1, a :: b.pts) }
-    override def merge(a: Buf, b: Buf): Buf = { guard(a.n + b.n); Buf(a.n + b.n, a.pts ::: b.pts) }
-    override def finish(buf: Buf): BestLag = {
+  final class Agg(maxLag: Int, maxSeriesLength: Int)
+      extends PointsAggregator[BestLag]("best_lag", maxSeriesLength) {
+    override def finish(buf: PointsBuf): BestLag = {
       val sorted = buf.pts.sortBy(_.period).toArray
       bestLag(sorted.map(_.v1), sorted.map(_.v2), maxLag)
     }
-    override def bufferEncoder: Encoder[Buf] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Buf]()
     override def outputEncoder: Encoder[BestLag] = Encoders.product[BestLag]
   }
 
@@ -90,5 +73,5 @@ object BestLagAggregator {
       name: String = "best_lag",
       maxLag: Int = 6,
       maxSeriesLength: Int = 100000): Unit =
-    spark.udf.register(name, udaf(new Agg(maxLag, maxSeriesLength), Encoders.product[Pt]))
+    spark.udf.register(name, udaf(new Agg(maxLag, maxSeriesLength), Encoders.product[PeriodPoint]))
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.core.PathStep
+
 /** Dynamic Time Warping kernel — pure Scala, primitive arrays, no
   * dependencies. Runs in-JVM inside `mapGroups` (no Arrow / Python worker
   * boundary, unlike the reference's pandas UDF).
@@ -108,5 +110,29 @@ object Dtw {
       else { ci -= 1; cj -= 1 }
     }
     (get(n, m), path.reverse.toArray)
+  }
+
+  /** One entity's alignment from its (unsorted) points: sort by period
+    * (ISO dates sort chronologically as strings), run [[distance]], and label each path step with its periods and
+    * values. On a kernel error — including an empty series — the result
+    * is the reference's fallback: identity path with zero cost
+    * (mapping_engine.py:313-315). Shared by DtwMapping.summarize and the
+    * SQL `dtw` aggregate. */
+  def align(
+      points: Seq[PeriodPoint],
+      window: Option[Int],
+      normalizeInput: Boolean): (Double, Seq[PathStep]) = {
+    val pts = points.sortBy(_.period).toArray
+    val s1 = pts.map(_.v1)
+    val s2 = pts.map(_.v2)
+    val (cost, path) =
+      try distance(s1, s2, window, normalizeInput)
+      catch {
+        case _: Exception =>
+          (0.0, Array.tabulate(math.min(s1.length, s2.length))(i => (i, i)))
+      }
+    (cost, path.toSeq.map { case (i, j) =>
+      PathStep(i, j, pts(i).period, pts(j).period, s1(i), s2(j))
+    })
   }
 }

@@ -1,67 +1,32 @@
 package graft.operators
 
-import graft.core.{DtwSummary, PathStep}
+import graft.core.PathStep
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
 /** SQL-callable DTW: a typed `Aggregator` wrapping the in-JVM kernel, so
   * DTW is usable from plain SQL —
   *
   * {{{
-  *   spark.udf.register("dtw", DtwAggregator.udafFor(windowOpt, normalize))
-  *   spark.sql("SELECT key, dtw(period, v1, v2) AS d FROM merged GROUP BY key")
+  *   DtwAggregator.register(spark, window = windowOpt, normalize = normalize)
+  *   spark.sql("SELECT key, dtw(CAST(period AS STRING), v1, v2) AS d FROM merged GROUP BY key")
   * }}}
   *
   * This is SURVEY.md §7.1(5)'s optional custom Aggregator: no planner
-  * changes — Catalyst sees an ordinary typed aggregate with partial
-  * buffers (`reduce`/`merge`), so it composes with AQE and hash
-  * aggregation like any built-in. The buffer holds the (still unsorted)
-  * per-entity points; `finish` sorts by period and runs the DP kernel —
-  * identical semantics to DtwMapping.summarize.
+  * changes. The buffer is the shared [[PointsAggregator]] one; `finish`
+  * runs [[Dtw.align]], the same per-entity body as DtwMapping.summarize.
   */
 object DtwAggregator {
 
-  /** (period ISO string, v1, v2) input row for the aggregate. */
-  final case class Pt(period: String, v1: Double, v2: Double)
   /** total cost + warping path, minus the key (GROUP BY carries it). */
   final case class DtwOut(total_cost: Double, num_mappings: Int, path: Seq[PathStep])
 
-  /** Aggregation buffer with a running count so the group-size guard is
-    * O(1) per row (same fail-fast as DtwMapping.summarize / best_lag: a
-    * pathological hot key errors with its size, never OOMs an executor
-    * mid-buffer). */
-  final case class Buf(n: Int, pts: List[Pt])
-
   final class DtwAgg(window: Option[Int], normalize: Boolean, maxSeriesLength: Int = 100000)
-      extends Aggregator[Pt, Buf, DtwOut] {
-    private def guard(n: Int): Unit =
-      if (n > maxSeriesLength)
-        throw new IllegalStateException(
-          s"dtw group has $n points > maxSeriesLength=$maxSeriesLength")
-    override def zero: Buf = Buf(0, Nil)
-    override def reduce(b: Buf, a: Pt): Buf = { guard(b.n + 1); Buf(b.n + 1, a :: b.pts) }
-    override def merge(b1: Buf, b2: Buf): Buf = { guard(b1.n + b2.n); Buf(b1.n + b2.n, b1.pts ::: b2.pts) }
-    override def finish(buf: Buf): DtwOut = {
-      val sorted = buf.pts.sortBy(_.period).toArray
-      if (sorted.isEmpty) DtwOut(0.0, 0, Seq.empty)
-      else {
-        val s1 = sorted.map(_.v1)
-        val s2 = sorted.map(_.v2)
-        val (cost, path) =
-          try Dtw.distance(s1, s2, window, normalize)
-          catch {
-            case _: Exception =>
-              (0.0, Array.tabulate(math.min(s1.length, s2.length))(i => (i, i)))
-          }
-        val steps = path.toSeq.map { case (i, j) =>
-          PathStep(i, j, sorted(i).period, sorted(j).period, s1(i), s2(j))
-        }
-        DtwOut(cost, steps.length, steps)
-      }
+      extends PointsAggregator[DtwOut]("dtw", maxSeriesLength) {
+    override def finish(buf: PointsBuf): DtwOut = {
+      val (cost, steps) = Dtw.align(buf.pts, window, normalize)
+      DtwOut(cost, steps.length, steps)
     }
-    override def bufferEncoder: Encoder[Buf] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Buf]()
     override def outputEncoder: Encoder[DtwOut] = Encoders.product[DtwOut]
   }
 
@@ -73,5 +38,5 @@ object DtwAggregator {
       normalize: Boolean = true,
       maxSeriesLength: Int = 100000): Unit =
     spark.udf.register(
-      name, udaf(new DtwAgg(window, normalize, maxSeriesLength), Encoders.product[Pt]))
+      name, udaf(new DtwAgg(window, normalize, maxSeriesLength), Encoders.product[PeriodPoint]))
 }

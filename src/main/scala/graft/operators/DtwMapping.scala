@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{DtwSummary, MappingConfig, MergedPoint, PathStep}
+import graft.core.{DtwSummary, MappingConfig, MergedPoint}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,25 +28,11 @@ object DtwMapping {
       .as[MergedPoint]
       .groupByKey(_.key)
       .mapGroups { (key, it) =>
-        val pts = it.toArray.sortBy(_.period.getTime)
+        val pts = it.map(p => PeriodPoint(p.period.toString, p.v1, p.v2)).toVector
         if (pts.length > cfg.maxSeriesLength)
           throw new IllegalStateException(
             s"series for key=$key has ${pts.length} points > maxSeriesLength=${cfg.maxSeriesLength}")
-        val s1 = pts.map(_.v1)
-        val s2 = pts.map(_.v2)
-        val periods = pts.map(_.period.toString)
-        // Error fallback mirrors the reference (mapping_engine.py:313-315):
-        // identity path with zero cost. (mapGroups never yields an empty
-        // group, so pts is non-empty here.)
-        val (cost, path) =
-          try Dtw.distance(s1, s2, cfg.dtwWindow, cfg.dtwNormalize)
-          catch {
-            case _: Exception =>
-              (0.0, Array.tabulate(math.min(s1.length, s2.length))(i => (i, i)))
-          }
-        val steps = path.toSeq.map { case (i, j) =>
-          PathStep(i, j, periods(i), periods(j), s1(i), s2(j))
-        }
+        val (cost, steps) = Dtw.align(pts, cfg.dtwWindow, cfg.dtwNormalize)
         DtwSummary(key, cost, steps.length, steps)
       }
   }

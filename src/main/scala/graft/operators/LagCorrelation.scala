@@ -150,17 +150,15 @@ object LagCorrelation {
     * rows may exist for periods absent from the merged set
     * (mapping_engine.py:616-637, SURVEY.md §7.3).
     *
-    * `best` is one row per entity; both join-backs broadcast it when
-    * `cfg.broadcastSummaries` (the reference's choice,
-    * mapping_engine.py:617, 641) — at very high entity counts set it
-    * false and AQE picks the strategy from runtime sizes. The lag-shifted
-    * join is derive-then-equi-join: compute `period + optimal_lag` as a
-    * column, then plain equi-join (no custom join operator needed).
+    * `best` is one row per entity; it is joined back ONCE, carrying the
+    * score into the output, and broadcast when `cfg.broadcastSummaries`
+    * (the reference's choice, mapping_engine.py:617, 641) — at very high
+    * entity counts set it false and AQE picks the strategy from runtime
+    * sizes.
     */
   def mapping(t1: DataFrame, t2: DataFrame, best: DataFrame, cfg: MappingConfig): DataFrame = {
     val valid = best.filter(col("correlation") >= cfg.minCorrelation)
-    mappingWithLags(t1, t2, valid.select(col("key"), col("optimal_lag")), cfg)
-      .join(maybeBroadcast(valid.select(col("key"), col("correlation")), cfg), Seq("key"), "left")
+    mappingWithLags(t1, t2, valid.select(col("key"), col("optimal_lag"), col("correlation")), cfg)
   }
 
   /** Broadcast per-entity summaries when the config says so (reference
@@ -171,11 +169,14 @@ object LagCorrelation {
     if (cfg.broadcastSummaries) broadcast(df) else df
 
   /** The shared lag-shifted join-back: map t1 rows to t2 rows at
-    * period + optimal_lag, given per-entity lags (no score attached).
-    * Also the production path's primitive (stored-model lags). */
+    * period + optimal_lag, given per-entity lags `(key, optimal_lag, ...)`;
+    * any further columns of `lags` (e.g. `correlation`) are carried into
+    * the output after `method`. The lag-shifted join is derive-then-
+    * equi-join: compute `period + optimal_lag` as a column, then a plain
+    * equi-join. Also the production path's primitive (stored-model lags). */
   def mappingWithLags(t1: DataFrame, t2: DataFrame, lags: DataFrame, cfg: MappingConfig): DataFrame = {
-    val withLag =
-      t1.join(maybeBroadcast(lags.select(col("key"), col("optimal_lag")), cfg), Seq("key"), "inner")
+    val carried = lags.columns.toSeq.filterNot(Set("key", "optimal_lag")).map(col)
+    val withLag = t1.join(maybeBroadcast(lags, cfg), Seq("key"), "inner")
     val right = t2.select(
       col("key").as("r_key"),
       col("period").as("r_period"),
@@ -185,13 +186,13 @@ object LagCorrelation {
         "target_period",
         SeriesTable.shiftPeriod(col("period"), col("optimal_lag"), cfg.periodUnit))
       .join(right, col("key") === col("r_key") && col("target_period") === col("r_period"), "inner")
-      .select(
+      .select(Seq(
         col("key"),
         date_format(col("period"), "yyyy-MM-dd").as("time1"),
         col("value").as("value1"),
         date_format(col("r_period"), "yyyy-MM-dd").as("time2"),
         col("value2"),
         col("optimal_lag").as("lag_offset"),
-        lit("correlation").as("method"))
+        lit("correlation").as("method")) ++ carried: _*)
   }
 }

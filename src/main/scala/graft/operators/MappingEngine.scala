@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * Differences from the reference, by design (SURVEY.md §7):
   *   - correlation is fully relational (no UDF) → whole-stage codegen;
-  *   - auto mode computes the per-(key,lag) corr table ONCE and derives both
-  *     the segment split and the correlation mapping from it — the reference
-  *     recomputes its correlation UDF a second time
-  *     (mapping_engine.py:689-690 then :602);
+  *   - auto mode computes the best-lag table ONCE and routes each entity by
+  *     filtering it: the passing rows drive the correlation mapping, the
+  *     rest of `merged` goes to DTW — the reference recomputes its
+  *     correlation UDF a second time (mapping_engine.py:689-690 then :602);
   *   - no manual `repartition(200)`: groupBy/mapGroups already shuffle by
   *     key, and AQE coalesces partitions.
   */
@@ -59,12 +59,25 @@ object MappingEngine {
     LagCorrelation.mapping(t1, t2, best, cfg)
   }
 
-  /** Auto mode: entities with best correlation >= 0.7 go down the
-    * correlation path, the rest go to DTW (mapping_engine.py:679-746).
-    * The split and the correlation mapping share ONE cached corr table
-    * (one short row per entity; it stays cached for the session — callers
-    * running many pairs in one long-lived driver should
-    * `spark.catalog.clearCache()` between jobs). */
+  /** Auto mode: entities with best correlation >= `cfg.autoCorrThreshold`
+    * go down the correlation path; every other key of `merged` goes to DTW
+    * — below the threshold, or with no valid correlation at all (all-lag
+    * NaN / too short; the reference's UDF emits corr = -1 for those)
+    * (mapping_engine.py:679-746).
+    *
+    * The split is a filter of the one-row-per-key best-lag table: its
+    * passing rows ARE the correlation segment, and the DTW segment is the
+    * rows of `merged` with no match among them. Both segments join the
+    * same broadcast relation, which AQE builds once per query, so the lag
+    * scan runs once and nothing is cached.
+    *
+    * `bestLag`: a caller that already staged the best-lag table passes it
+    * in; otherwise it is computed here. `dtwSummaries`: precomputed DTW
+    * summaries (key, total_cost, path) of `merged` itself — one per key of
+    * `merged` that can land in the DTW segment, and none for other keys
+    * (the split only removes the correlation segment). DTW is per-key
+    * independent, so restricting them to the segment equals running the
+    * kernel on the restricted series. */
   def autoMapping(
       merged: DataFrame,
       t1: DataFrame,
@@ -72,46 +85,34 @@ object MappingEngine {
       cfg: MappingConfig,
       dtwSummaries: Option[DataFrame] = None,
       bestLag: Option[DataFrame] = None): DataFrame = {
-    // callers that already staged the best-lag table (it feeds half the
-    // query family) pass it in; otherwise compute-and-cache here
-    val best = bestLag.getOrElse(
-      LagCorrelation.bestLag(LagCorrelation.lagCorrTable(merged, cfg)).cache())
-    val simpleKeys = best.filter(col("correlation") >= cfg.autoCorrThreshold).select(col("key"))
-    // Keys whose best correlation is below the threshold — plus keys with NO
-    // valid correlation at all (all-lag NaN / too-short): the reference's
-    // UDF emits corr=-1 for those, landing them in the DTW segment.
-    val complexKeys = merged
-      .select(col("key")).distinct()
-      .join(simpleKeys, Seq("key"), "left_anti")
-
-    // per-entity key lists broadcast only under cfg.broadcastSummaries —
-    // the same gate Pipeline.run routes through: at 1M+ entities a forced
-    // broadcast of the segment key set is exactly what the gate prevents
-    def gate(df: DataFrame): DataFrame = LagCorrelation.maybeBroadcast(df, cfg)
-    val simpleBest = best.join(gate(simpleKeys), Seq("key"), "left_semi")
-    val corrPart = LagCorrelation.mapping(t1, t2, simpleBest, cfg)
-    // DTW is per-key independent, so precomputed full-table summaries
-    // restricted to the complex segment are identical to running the
-    // kernel on the restricted series — callers holding summaries (e.g.
-    // from recommendation training) skip the second kernel run.
+    val best = bestLag.getOrElse(LagCorrelation.bestLag(LagCorrelation.lagCorrTable(merged, cfg)))
+    val simple = best
+      .filter(col("correlation") >= cfg.autoCorrThreshold)
+      .select(col("key"), col("optimal_lag"), col("correlation"))
+    // minCorrelation only removes segment keys when it is the stricter gate
+    // (they then get no rows, as in LagCorrelation.mapping); otherwise the
+    // correlation side joins `simple` itself, the relation the DTW side joins
+    val lags =
+      if (cfg.minCorrelation > cfg.autoCorrThreshold) simple.filter(col("correlation") >= cfg.minCorrelation)
+      else simple
+    val corrPart = LagCorrelation.mappingWithLags(t1, t2, lags, cfg)
+    // The DTW side keeps the rows that find no `simple` row. A left_anti
+    // join would prune `simple` to its key, a second relation AQE cannot
+    // reuse, and the lag scan would run twice; the outer join keeps (and
+    // tests) every column, so both sides share one broadcast. It broadcasts
+    // only under cfg.broadcastSummaries, the gate Pipeline.run routes through.
+    val simpleB = LagCorrelation.maybeBroadcast(simple, cfg)
+    def outsideSimple(df: DataFrame): DataFrame =
+      df.join(simpleB, Seq("key"), "left_outer")
+        .filter(col("optimal_lag").isNull && col("correlation").isNull)
+        .drop("optimal_lag", "correlation")
     val dtwPart = dtwSummaries match {
-      case Some(s) =>
-        DtwMapping.mappingFromSummaries(
-          s.join(gate(complexKeys), Seq("key"), "left_semi"))
-      case None =>
-        DtwMapping.mapping(
-          merged.join(gate(complexKeys), Seq("key"), "left_semi"), cfg)
+      case Some(s) => DtwMapping.mappingFromSummaries(outsideSimple(s))
+      case None    => DtwMapping.mapping(outsideSimple(merged), cfg)
     }
     // Schema union across method-specific columns (mapping_engine.py:746).
     corrPart.unionByName(dtwPart, allowMissingColumns = true)
   }
-
-  /** Attach processing metadata (mapping_engine.py:566). Kept out of the
-    * verified query outputs (non-deterministic). */
-  def withMetadata(result: DataFrame, runId: String): DataFrame =
-    result
-      .withColumn("processed_at", current_timestamp())
-      .withColumn("run_id", lit(runId))
 
   /** Run statistics, mirroring GenericMappingEngine.stats
     * (mapping_engine.py:582-589). */

@@ -22,15 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** Correlation mapping with GIVEN per-entity lags (no score recompute):
-    * the shared lag-shifted join-back. `lags`: (key, optimal_lag). */
-  def correlationMappingWithLags(
-      t1: DataFrame,
-      t2: DataFrame,
-      lags: DataFrame,
-      cfg: MappingConfig): DataFrame =
-    LagCorrelation.mappingWithLags(t1, t2, lags, cfg)
-
   /** Full pipeline run: segment by stored recommendation, map per segment,
     * union, stamp the run id.
     *
@@ -85,7 +76,7 @@ object Pipeline {
         when(col("recommended_method").isNull, lit(1))
           .otherwise(col("optimal_lag")).as("optimal_lag"))
 
-    val corrPart = correlationMappingWithLags(t1, t2, corrLags, cfg)
+    val corrPart = LagCorrelation.mappingWithLags(t1, t2, corrLags, cfg)
     val dtwPart = dtwSummaries match {
       case Some(s) =>
         DtwMapping

@@ -202,4 +202,45 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val b = run(true).collect().map(_.toString).sorted
     assert(a.sameElements(b))
   }
+
+  test("auto mode leaves nothing cached") {
+    // fresh inputs: a cached plan from another test cannot be reused here
+    val (txn, rev) = simpleData(7, 9)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val rows = MappingEngine.mapTables(
+      txn, rev, "customer_id", "month", "amount", "rev", cfg.copy(method = "auto")).collect()
+    assert(rows.nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("auto split: each key under one method; no-correlation keys go to DTW") {
+    // K_HI: v2 = 2 * v1 (corr 1 at lag 0); K_LO: linear trend vs an
+    // alternating series (|corr| < 0.7 at every lag); K_CONST: constant
+    // v1, so every lag's corr is NaN and the best-lag table has no row
+    val months = 1 to 12
+    def month(m: Int) = f"2024-$m%02d"
+    val t1Rows = months.flatMap(m => Seq(
+      ("K_HI", month(m), 10.0 + 3.0 * ((m * 5) % 7)),
+      ("K_LO", month(m), m.toDouble),
+      ("K_CONST", month(m), 4.0)))
+    val t2Rows = months.flatMap(m => Seq(
+      ("K_HI", month(m), 2.0 * (10.0 + 3.0 * ((m * 5) % 7))),
+      ("K_LO", month(m), if (m % 2 == 0) 1.0 else 5.0),
+      ("K_CONST", month(m), m.toDouble)))
+    val auto = cfg.copy(method = "auto")
+    val t1 = SeriesTable.canonicalize(t1Rows.toDF("k", "t", "v"), "k", "t", "v", PeriodUnit.Month)
+    val t2 = SeriesTable.canonicalize(t2Rows.toDF("k", "t", "v"), "k", "t", "v", PeriodUnit.Month)
+    val best = LagCorrelation.bestLag(LagCorrelation.lagCorrTable(SeriesTable.merge(t1, t2), auto))
+      .select($"key", $"correlation").as[(String, Double)].collect().toMap
+    // fixture preconditions
+    assert(!best.contains("K_CONST"))
+    assert(best("K_HI") >= auto.autoCorrThreshold && best("K_LO") < auto.autoCorrThreshold, best)
+
+    val out = MappingEngine.autoMapping(SeriesTable.merge(t1, t2), t1, t2, auto)
+    val methods = out.select($"key", $"method").distinct().as[(String, String)].collect()
+    assert(methods.toSet == Set("K_HI" -> "correlation", "K_LO" -> "dtw", "K_CONST" -> "dtw"))
+    val corrScores = out.filter($"method" === "correlation")
+      .select($"key", $"correlation").distinct().as[(String, Double)].collect()
+    assert(corrScores.toSeq == Seq("K_HI" -> best("K_HI")))
+  }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
+import graft.operators.{LagCorrelation, MappingEngine}
+import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression locks: the scale properties the engine
@@ -222,5 +227,31 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val p = plan(name)
       assert(!p.contains("CartesianProduct"), s"$name plans a CartesianProduct")
     }
+  }
+
+  test("auto mode routes by filtering the best-lag table: no semi/anti join, one lag scan") {
+    import spark.implicits._
+    def joinTypes(p: LogicalPlan): Seq[JoinType] = p.collect { case j: Join => j.joinType }
+    val cfg = MappingConfig(method = "auto", periodUnit = PeriodUnit.Month, maxLag = 2)
+    val rows = (for (k <- Seq("A", "B"); m <- 1 to 6) yield (k, f"2024-$m%02d", m.toDouble)).toDF("k", "t", "v")
+    val t1 = SeriesTable.canonicalize(rows, "k", "t", "v", PeriodUnit.Month)
+    val t2 = SeriesTable.canonicalize(rows, "k", "t", "v", PeriodUnit.Month)
+    val out = MappingEngine.autoMapping(SeriesTable.merge(t1, t2), t1, t2, cfg)
+    val auto = joinTypes(out.queryExecution.optimizedPlan)
+    assert(!auto.contains(LeftAnti) && !auto.contains(LeftSemi), auto)
+    // both segments join the same broadcast best-lag relation, so AQE
+    // reuses it: the lag scan's argmax runs once, not once per segment
+    out.collect()
+    val executed = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString // the final plan, without the initial one
+      case p => p.toString
+    }
+    assert(executed.linesIterator.count(_.contains("WindowGroupLimit")) == 1, executed)
+    assert(executed.linesIterator.exists(l => l.contains("ReusedExchange") && l.contains("optimal_lag")), executed)
+    // the correlation join-back joins the best-lag table once: t1 ⋈ best,
+    // then ⋈ t2 at the shifted period — no second join to attach the score
+    val best = Seq(("A", 1, 0.9, 5L)).toDF("key", "optimal_lag", "correlation", "n_overlap")
+    val corr = joinTypes(LagCorrelation.mapping(t1, t2, best, cfg).queryExecution.optimizedPlan)
+    assert(corr.length == 2, corr)
   }
 }
