@@ -2,30 +2,9 @@ package graft.core
 
 import java.sql.Date
 
-/** Canonical long-table point: one row per (entity, period, value).
-  *
-  * The reference keeps periods as 'yyyy-MM' strings and sorts them
-  * lexicographically (/root/reference/mapping_engine.py:249); we normalize to
-  * DateType at ingest (SURVEY.md §1.4) so calendar arithmetic (add_months /
-  * date_add) is native and the reference's latent `to_date('2024-01')` bug
-  * (mapping_engine.py:626) cannot occur.
-  */
-final case class SeriesPoint(key: String, period: Date, value: Double)
-
 /** Inner-join of the two series on (key, period) — the engine's working set
   * (reference "merged", /root/reference/mapping_engine.py:540-550). */
 final case class MergedPoint(key: String, period: Date, v1: Double, v2: Double)
-
-/** Per-entity correlation summary
-  * (/root/reference/mapping_engine.py:232-239). `periods` generalizes the
-  * reference's `num_months`. */
-final case class CorrSummary(
-    key: String,
-    optimal_lag: Int,
-    correlation: Double,
-    num_periods: Int,
-    v1_mean: Double,
-    v2_mean: Double)
 
 /** One step of a DTW warping path
   * (/root/reference/mapping_engine.py:286-293). Periods carried as ISO

@@ -77,12 +77,14 @@ object Comparison {
     * num_mappings, path). Callers that also need the row-level DTW mapping
     * (e.g. the production pipeline's DTW segment) compute the summaries
     * once — ideally cached — and feed both this and
-    * [[DtwMapping.mappingFromSummaries]], so the DTW kernel runs once. */
+    * [[DtwMapping.mappingFromSummaries]], so the DTW kernel runs once.
+    * The correlation side is [[LagCorrelation.bestLag]], the argmax the
+    * mapping path uses. */
   def recommendationsFromSummaries(
       merged: DataFrame,
       dtwSummaries: DataFrame,
       cfg: MappingConfig): DataFrame = {
-    val corr = LagCorrelation.summary(merged, cfg)
+    val corr = LagCorrelation.bestLag(LagCorrelation.lagCorrTable(merged, cfg))
     val dtw = dtwSummaries
       .select(col("key"), round(col("total_cost"), 6).as("total_cost"), col("num_mappings"))
     recommendations(methodComparison(corr, dtw))

@@ -75,9 +75,8 @@ object MappingEngine {
     * in; otherwise it is computed here. `dtwSummaries`: precomputed DTW
     * summaries (key, total_cost, path) of `merged` itself — one per key of
     * `merged` that can land in the DTW segment, and none for other keys
-    * (the split only removes the correlation segment). DTW is per-key
-    * independent, so restricting them to the segment equals running the
-    * kernel on the restricted series. */
+    * (the split only removes the correlation segment); see
+    * [[DtwMapping.restrictedMapping]]. */
   def autoMapping(
       merged: DataFrame,
       t1: DataFrame,
@@ -106,10 +105,7 @@ object MappingEngine {
       df.join(simpleB, Seq("key"), "left_outer")
         .filter(col("optimal_lag").isNull && col("correlation").isNull)
         .drop("optimal_lag", "correlation")
-    val dtwPart = dtwSummaries match {
-      case Some(s) => DtwMapping.mappingFromSummaries(outsideSimple(s))
-      case None    => DtwMapping.mapping(outsideSimple(merged), cfg)
-    }
+    val dtwPart = DtwMapping.restrictedMapping(merged, dtwSummaries, cfg)(outsideSimple)
     // Schema union across method-specific columns (mapping_engine.py:746).
     corrPart.unionByName(dtwPart, allowMissingColumns = true)
   }

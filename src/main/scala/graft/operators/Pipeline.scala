@@ -77,19 +77,10 @@ object Pipeline {
           .otherwise(col("optimal_lag")).as("optimal_lag"))
 
     val corrPart = LagCorrelation.mappingWithLags(t1, t2, corrLags, cfg)
-    val dtwPart = dtwSummaries match {
-      case Some(s) =>
-        DtwMapping
-          .mappingFromSummaries(s.join(gate(dtwKeys.select("key")), Seq("key"), "left_semi"))
-          .drop("dtw_cost")
-      case None =>
-        DtwMapping
-          .mapping(
-            SeriesTable.merge(t1, t2)
-              .join(gate(dtwKeys.select("key")), Seq("key"), "left_semi"),
-            cfg)
-          .drop("dtw_cost")
-    }
+    val dtwPart = DtwMapping
+      .restrictedMapping(SeriesTable.merge(t1, t2), dtwSummaries, cfg)(
+        _.join(gate(dtwKeys.select("key")), Seq("key"), "left_semi"))
+      .drop("dtw_cost")
     // Default for unknown entities: lag 1 (05_prod_dev.py:412) — folded
     // into corrLags above so the fact tables are scanned once.
     corrPart
@@ -138,7 +129,8 @@ object Pipeline {
     mapping.write.mode("overwrite").partitionBy("time1").parquet(path)
 
   /** Everything the run produced, with the mapping re-read from its
-    * persisted form (what downstream consumers will actually see). */
+    * persisted form (what downstream consumers will actually see). `qa`
+    * (one row) and `sla` are local tables: reading them starts no job. */
   final case class ProductionResult(
       mapping: DataFrame,
       qa: DataFrame,
@@ -152,8 +144,10 @@ object Pipeline {
     * checks → SLA report (computed on the PERSISTED output, as the
     * reference's monitor does) → metadata JSON next to the data.
     *
-    * Returns lazily-usable QA/SLA DataFrames plus the overall SLA
-    * verdict; only the constant-size metadata touches the driver. */
+    * Returns the one-row materialized report: the QA metrics row,
+    * aggregated once over the persisted output and the input keys, and
+    * the SLA rows derived from it, plus the overall SLA verdict; only
+    * that constant-size report touches the driver. */
   def productionRun(
       spark: SparkSession,
       t1: DataFrame,
@@ -173,12 +167,8 @@ object Pipeline {
     registerExternalTable(spark, path, tableName)
     val persisted = spark.read.parquet(path)
     val elapsed = (System.nanoTime() - t0) / 1e9
-    val qa = QualityChecks.check(
-      persisted.select(
-        col("key"), col("time1"), col("value1"), col("time2"), col("value2"),
-        col("lag_offset")),
-      t1)
-    val sla = Sla.report(persisted, t1, elapsed)
+    val qa = collectLocal(QualityChecks.check(persisted, t1))
+    val sla = collectLocal(Sla.fromQuality(qa, elapsed))
     val slaRows = sla.collect()
     val slaMet = slaRows
       .find(_.getAs[String]("check") == "sla_met")
@@ -205,6 +195,10 @@ object Pipeline {
     finally out.close()
     ProductionResult(persisted, qa, sla, path, slaMet)
   }
+
+  /** A small result collected into a local table of the same schema. */
+  private def collectLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Runs persisted under `outputPath` (one `mappings_<runId>` snapshot
     * per [[productionRun]]), ascending by run id. */

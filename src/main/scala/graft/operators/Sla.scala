@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Production SLA layer — Scala counterpart of the reference monitor's
@@ -9,10 +9,14 @@ import org.apache.spark.sql.functions._
   * overall verdict row (its boolean return), so alerting systems consume
   * a table instead of log lines.
   *
-  * Scale notes: two single-row aggregates (mapping stats, input key
-  * count) crossed into a constant-size report — the only shuffles are the
-  * two countDistincts, both partial-aggregated. `durationSec` is wall
-  * clock measured by the caller (data cannot know it).
+  * Scale notes: SLA computes no statistics of its own. It projects the
+  * `coverage_pct` and `total_mappings` columns of the
+  * [[QualityChecks.check]] metrics row, so the coverage formula lives in
+  * one place. Over a lazy QA plan, column pruning drops the QA metrics
+  * SLA does not read (duplicates, lags, ratios), leaving the mapping's
+  * key count, its row count and the input's key count. Over an already
+  * collected QA row (as `Pipeline.productionRun` passes) it reads no data.
+  * `durationSec` is wall clock measured by the caller (data cannot know it).
   */
 object Sla {
 
@@ -29,23 +33,21 @@ object Sla {
       mapping: DataFrame,
       inputKeys: DataFrame,
       durationSec: Double,
-      t: SlaThresholds = SlaThresholds()): DataFrame = {
-    val stats = mapping.agg(
-      countDistinct(col("key")).as("mapped_keys"),
-      count(lit(1)).as("total_mappings"))
-    val keys = inputKeys.agg(countDistinct(col("key")).as("total_keys"))
-    val coverage = round(col("mapped_keys") * lit(100.0) / col("total_keys"), 6)
-    val covOk = coverage >= t.minCoveragePct
+      t: SlaThresholds = SlaThresholds()): DataFrame =
+    fromQuality(QualityChecks.check(mapping, inputKeys), durationSec, t)
+
+  /** The [[report]] rows from a [[QualityChecks.check]] metrics row. */
+  def fromQuality(qa: DataFrame, durationSec: Double, t: SlaThresholds = SlaThresholds()): DataFrame = {
+    val covOk = col("coverage_pct") >= t.minCoveragePct
     val durOk = lit(durationSec) <= t.maxDurationSec
     val nonEmptyOk = col("total_mappings") > 0
-    def status(ok: org.apache.spark.sql.Column) = when(ok, "PASS").otherwise("ALERT")
-    stats
-      .crossJoin(keys)
+    def status(ok: Column) = when(ok, "PASS").otherwise("ALERT")
+    qa
       .select(
         explode(array(
           struct(
             lit("coverage_pct").as("check"),
-            coverage.cast("double").as("metric_value"),
+            col("coverage_pct").cast("double").as("metric_value"),
             lit(t.minCoveragePct).as("threshold"),
             status(covOk).as("status"),
             lit("ERROR").as("severity")),

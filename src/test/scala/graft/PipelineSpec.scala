@@ -3,6 +3,7 @@ package graft
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
 import graft.operators.{Comparison, Pipeline}
 import graft.streaming.EventsStream
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,6 +12,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   import spark.implicits._
 
   private val cfg = MappingConfig(periodUnit = PeriodUnit.Month, maxLag = 3)
+  private val sfDir = "/root/testdata/sf0.001"
 
   /** Simple archetype: rev(t) = 10% of txn(t-1). */
   private def seriesPair(nKeys: Int, nMonths: Int): (DataFrame, DataFrame) = {
@@ -64,36 +66,38 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val (t1, t2) = seriesPair(2, 5)
     val recs = Seq(("K1", "Correlation", 1)).toDF("key", "recommended_method", "optimal_lag")
     val out = Pipeline.run(t1, t2, recs, cfg, "run_3")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    Pipeline.writePartitioned(out, s"$dir/mapping")
-    // partition pruning layout: one directory per time1 value
-    val parts = new java.io.File(s"$dir/mapping").listFiles().map(_.getName).filter(_.startsWith("time1="))
-    assert(parts.nonEmpty)
-    Pipeline.registerExternalTable(spark, s"$dir/mapping", "mapping_test")
-    val viaSql = spark.sql("SELECT COUNT(*) FROM mapping_test").as[Long].head()
-    assert(viaSql == out.count())
-    val mon = spark.sql("SELECT * FROM mapping_test_monitor")
-    assert(mon.columns.toSeq == Seq("method", "time1", "n_mappings", "n_keys"))
-    assert(mon.count() > 0)
-    spark.sql("DROP TABLE IF EXISTS mapping_test")
+    withTempDir("graft_sink") { dir =>
+      Pipeline.writePartitioned(out, s"$dir/mapping")
+      // partition pruning layout: one directory per time1 value
+      val parts = new java.io.File(s"$dir/mapping").listFiles().map(_.getName).filter(_.startsWith("time1="))
+      assert(parts.nonEmpty)
+      Pipeline.registerExternalTable(spark, s"$dir/mapping", "mapping_test")
+      val viaSql = spark.sql("SELECT COUNT(*) FROM mapping_test").as[Long].head()
+      assert(viaSql == out.count())
+      val mon = spark.sql("SELECT * FROM mapping_test_monitor")
+      assert(mon.columns.toSeq == Seq("method", "time1", "n_mappings", "n_keys"))
+      assert(mon.count() > 0)
+      spark.sql("DROP TABLE IF EXISTS mapping_test")
+    }
   }
 
   test("registerExternalTable handles database-qualified names") {
     val (t1, t2) = seriesPair(2, 5)
     val recs = Seq(("K1", "Correlation", 1)).toDF("key", "recommended_method", "optimal_lag")
     val out = Pipeline.run(t1, t2, recs, cfg, "run_q")
-    val dir = java.nio.file.Files.createTempDirectory("graft_qual").toString
-    Pipeline.writePartitioned(out, s"$dir/m")
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_testdb")
-    try {
-      Pipeline.registerExternalTable(spark, s"$dir/m", "graft_testdb.mapping_q")
-      assert(spark.sql("SELECT COUNT(*) FROM graft_testdb.mapping_q").as[Long].head() == out.count())
-      // the monitor view carries the full qualified name flattened, so
-      // same-named tables in different databases keep distinct views
-      assert(spark.sql("SELECT COUNT(*) FROM graft_testdb_mapping_q_monitor").as[Long].head() > 0)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_testdb.mapping_q")
-      spark.sql("DROP DATABASE IF EXISTS graft_testdb")
+    withTempDir("graft_qual") { dir =>
+      Pipeline.writePartitioned(out, s"$dir/m")
+      spark.sql("CREATE DATABASE IF NOT EXISTS graft_testdb")
+      try {
+        Pipeline.registerExternalTable(spark, s"$dir/m", "graft_testdb.mapping_q")
+        assert(spark.sql("SELECT COUNT(*) FROM graft_testdb.mapping_q").as[Long].head() == out.count())
+        // the monitor view carries the full qualified name flattened, so
+        // same-named tables in different databases keep distinct views
+        assert(spark.sql("SELECT COUNT(*) FROM graft_testdb_mapping_q_monitor").as[Long].head() > 0)
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS graft_testdb.mapping_q")
+        spark.sql("DROP DATABASE IF EXISTS graft_testdb")
+      }
     }
   }
 
@@ -142,22 +146,23 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("incremental run: slice -> temp write -> partition-pruned read-back") {
     val (t1, t2) = seriesPair(3, 6)
     val recs = Seq(("K1", "Correlation", 1)).toDF("key", "recommended_method", "optimal_lag")
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
-    val back = Pipeline.incrementalRun(
-      t1, t2, recs, cfg, "run_incr", "2024-02-01", "2024-04-30", s"$dir/tmp")
-    // read-back rows are exactly the slice
-    val times = back.select("time1").distinct().as[String].collect()
-    assert(times.nonEmpty && times.forall(t => t >= "2024-02-01" && t <= "2024-04-30"))
-    // and the scan PRUNES partitions: the executed plan carries a
-    // partition filter on time1 (no full-table file read)
-    val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("time1"), plan)
-    // prune actually drops partitions: the temp dir has partitions outside
-    // the slice window only if the unsliced run would have written them;
-    // all written partitions come from the slice, so every directory is in range
-    val parts = new java.io.File(s"$dir/tmp").listFiles()
-      .map(_.getName).filter(_.startsWith("time1="))
-    assert(parts.forall { p => val d = p.stripPrefix("time1="); d >= "2024-02-01" && d <= "2024-04-30" })
+    withTempDir("graft_incr") { dir =>
+      val back = Pipeline.incrementalRun(
+        t1, t2, recs, cfg, "run_incr", "2024-02-01", "2024-04-30", s"$dir/tmp")
+      // read-back rows are exactly the slice
+      val times = back.select("time1").distinct().as[String].collect()
+      assert(times.nonEmpty && times.forall(t => t >= "2024-02-01" && t <= "2024-04-30"))
+      // and the scan PRUNES partitions: the executed plan carries a
+      // partition filter on time1 (no full-table file read)
+      val plan = back.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("time1"), plan)
+      // prune actually drops partitions: the temp dir has partitions outside
+      // the slice window only if the unsliced run would have written them;
+      // all written partitions come from the slice, so every directory is in range
+      val parts = new java.io.File(s"$dir/tmp").listFiles()
+        .map(_.getName).filter(_.startsWith("time1="))
+      assert(parts.forall { p => val d = p.stripPrefix("time1="); d >= "2024-02-01" && d <= "2024-04-30" })
+    }
   }
 
   test("broadcastSummaries=false plans no forced broadcast; results unchanged") {
@@ -196,41 +201,88 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val merged = SeriesTable.merge(t1, t2)
     val recs = Comparison.recommendationsFromMerged(merged, cfg)
       .select(col("key"), col("recommended_method"), col("optimal_lag"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_prod").toString
-    val res = Pipeline.productionRun(
-      spark, t1, t2, recs, cfg, "r42", dir, "prod_mappings_test")
-    assert(res.slaMet, "sla must pass on the archetype data")
-    assert(res.mapping.count() > 0)
-    // persisted partition layout + registered table agree with the result
-    assert(new java.io.File(res.outputPath).listFiles().exists(_.getName.startsWith("time1=")))
-    assert(spark.sql("SELECT COUNT(*) FROM prod_mappings_test").as[Long].head() == res.mapping.count())
-    // QA on the persisted output passes the same gates as the direct path
-    val qa = res.qa.head()
-    assert(qa.getAs[String]("coverage_status") == "PASS")
-    assert(qa.getAs[String]("temporal_status") == "PASS")
-    // metadata JSON exists and carries the run id + SLA verdicts
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/metadata_r42.json")))
-    assert(meta.contains("\"run_id\": \"r42\"") && meta.contains("\"sla_met\": \"PASS\""))
-    // schema validation fail-fast: a malformed input raises before any work
-    val e = intercept[IllegalArgumentException] {
-      Pipeline.productionRun(
-        spark, t1.drop("value"), t2, recs, cfg, "r43", dir, "prod_mappings_test2")
-    }
-    assert(e.getMessage.contains("value"))
+    withTempDir("graft_prod") { dir =>
+      val res = Pipeline.productionRun(
+        spark, t1, t2, recs, cfg, "r42", dir, "prod_mappings_test")
+      assert(res.slaMet, "sla must pass on the archetype data")
+      assert(res.mapping.count() > 0)
+      // persisted partition layout + registered table agree with the result
+      assert(new java.io.File(res.outputPath).listFiles().exists(_.getName.startsWith("time1=")))
+      assert(spark.sql("SELECT COUNT(*) FROM prod_mappings_test").as[Long].head() == res.mapping.count())
+      // QA on the persisted output passes the same gates as the direct path
+      val qa = res.qa.head()
+      assert(qa.getAs[String]("coverage_status") == "PASS")
+      assert(qa.getAs[String]("temporal_status") == "PASS")
+      // metadata JSON exists and carries the run id + SLA verdicts
+      val meta = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/metadata_r42.json")))
+      assert(meta.contains("\"run_id\": \"r42\"") && meta.contains("\"sla_met\": \"PASS\""))
+      // schema validation fail-fast: a malformed input raises before any work
+      val e = intercept[IllegalArgumentException] {
+        Pipeline.productionRun(
+          spark, t1.drop("value"), t2, recs, cfg, "r43", dir, "prod_mappings_test2")
+      }
+      assert(e.getMessage.contains("value"))
 
-    // restoreRun: a second run supersedes the table; rolling back
-    // re-points it at the first run's immutable snapshot
-    val firstCount = res.mapping.count()
-    Pipeline.productionRun(
-      spark, t1.filter(col("key") =!= "K1"), t2, recs, cfg, "r44", dir, "prod_mappings_test")
-    assert(Pipeline.listRuns(spark, dir) == Seq("r42", "r44"))
-    assert(spark.sql("SELECT COUNT(*) FROM prod_mappings_test").as[Long].head() < firstCount)
-    Pipeline.restoreRun(spark, dir, "prod_mappings_test", "r42")
-    assert(spark.sql("SELECT COUNT(*) FROM prod_mappings_test").as[Long].head() == firstCount)
-    intercept[IllegalArgumentException](
-      Pipeline.restoreRun(spark, dir, "prod_mappings_test", "nope"))
-    spark.sql("DROP TABLE IF EXISTS prod_mappings_test")
+      // restoreRun: a second run supersedes the table; rolling back
+      // re-points it at the first run's immutable snapshot
+      val firstCount = res.mapping.count()
+      Pipeline.productionRun(
+        spark, t1.filter(col("key") =!= "K1"), t2, recs, cfg, "r44", dir, "prod_mappings_test")
+      assert(Pipeline.listRuns(spark, dir) == Seq("r42", "r44"))
+      assert(spark.sql("SELECT COUNT(*) FROM prod_mappings_test").as[Long].head() < firstCount)
+      Pipeline.restoreRun(spark, dir, "prod_mappings_test", "r42")
+      assert(spark.sql("SELECT COUNT(*) FROM prod_mappings_test").as[Long].head() == firstCount)
+      intercept[IllegalArgumentException](
+        Pipeline.restoreRun(spark, dir, "prod_mappings_test", "nope"))
+      spark.sql("DROP TABLE IF EXISTS prod_mappings_test")
+    }
+  }
+
+  /** Spark jobs `body` starts, with its result. The body's jobs carry a
+    * job group; a sentinel job run after it flushes the asynchronous
+    * listener bus, since job starts arrive in submission order. */
+  private def jobsStarted[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val probe = s"probe-${java.util.UUID.randomUUID}"
+    val sentinel = s"$probe-sentinel"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(probe, "probe")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener-bus flush")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(sentinel), "the sentinel job start never reached the listener")
+      (groups.toArray.count(_ == probe), result)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("productionRun: the QA row is collected once; qa and sla are local, sla reads qa") {
+    val (t1, t2) = seriesPair(4, 8)
+    val recs = Seq(("K1", "Correlation", 1), ("K2", "DTW", 0))
+      .toDF("key", "recommended_method", "optimal_lag")
+    withTempDir("graft_report") { dir =>
+      val res = Pipeline.productionRun(spark, t1, t2, recs, cfg, "r1", dir, "prod_report_test")
+      try {
+        val (jobs, (qa, sla)) = jobsStarted((res.qa.collect(), res.sla.collect()))
+        assert(jobs == 0, "reading the report must not re-run the QA aggregate")
+        assert(qa.length == 1)
+        val checks = sla.map(r => r.getAs[String]("check") -> r).toMap
+        assert(checks.keySet == Set("coverage_pct", "duration_sec", "total_mappings", "sla_met"))
+        assert(checks("coverage_pct").getAs[Double]("metric_value") == qa.head.getAs[Double]("coverage_pct"))
+        assert(checks("total_mappings").getAs[Double]("metric_value") ==
+          qa.head.getAs[Long]("total_mappings").toDouble)
+        assert(qa.head.getAs[Long]("total_keys") == 4L)
+        assert(res.slaMet == (checks("sla_met").getAs[String]("status") == "PASS"))
+      } finally spark.sql("DROP TABLE IF EXISTS prod_report_test")
+    }
   }
 
   test("GraftSession.restore puts tuned confs back to the caller's values") {
@@ -246,101 +298,106 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("streaming daily series matches the batch aggregation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    // stage the sf0.001 events as the stream input (nanos-safe load)
-    graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
-      .write.mode("overwrite").parquet(s"$dir/in")
-    val expected = graft.sources.Tables.bothSeries(spark, "/root/testdata/sf0.001")
-      .withColumnRenamed("v1", "e1").withColumnRenamed("v2", "e2").cache()
+    withTempDir("graft_stream") { dir =>
+      // stage the sf0.001 events as the stream input (nanos-safe load)
+      graft.sources.Tables.load(spark, sfDir, "events")
+        .write.mode("overwrite").parquet(s"$dir/in")
+      val expected = graft.sources.Tables.bothSeries(spark, sfDir)
+        .withColumnRenamed("v1", "e1").withColumnRenamed("v2", "e2").cache()
 
-    // complete-mode memory sink: every window present -> full equality
-    val stream = EventsStream.dailySeries(EventsStream.readEvents(spark, s"$dir/in"))
-    val mq = stream.writeStream.outputMode("complete").format("memory")
-      .queryName("series_mem").trigger(
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    assert(mq.awaitTermination(120000), "memory-sink stream did not finish in time")
-    val got = spark.table("series_mem")
-    assert(got.count() == expected.count())
-    val diff = got.join(expected, Seq("key", "period"))
-      .filter(
-        abs(coalesce(col("v1"), lit(0)) - coalesce(col("e1"), lit(0))) > 1e-9 ||
-          abs(coalesce(col("v2"), lit(0)) - coalesce(col("e2"), lit(0))) > 1e-9)
-    assert(diff.count() == 0)
+      // complete-mode memory sink: every window present -> full equality
+      val stream = EventsStream.dailySeries(EventsStream.readEvents(spark, s"$dir/in"))
+      val mq = stream.writeStream.outputMode("complete").format("memory")
+        .queryName("series_mem").trigger(
+          org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(mq.awaitTermination(120000), "memory-sink stream did not finish in time")
+      val got = spark.table("series_mem")
+      assert(got.count() == expected.count())
+      val diff = got.join(expected, Seq("key", "period"))
+        .filter(
+          abs(coalesce(col("v1"), lit(0)) - coalesce(col("e1"), lit(0))) > 1e-9 ||
+            abs(coalesce(col("v2"), lit(0)) - coalesce(col("e2"), lit(0))) > 1e-9)
+      assert(diff.count() == 0)
 
-    // append-mode parquet sink: only watermark-finalized windows appear,
-    // but every emitted row must agree with the batch aggregation
-    val pq = EventsStream.writer(
-      EventsStream.dailySeries(EventsStream.readEvents(spark, s"$dir/in"), "0 seconds"),
-      s"$dir/out", s"$dir/ckpt").start()
-    assert(pq.awaitTermination(120000), "parquet-sink stream did not finish in time")
-    val sunk = spark.read.parquet(s"$dir/out")
-    assert(sunk.count() > 0 && sunk.count() <= expected.count())
-    assert(sunk.join(expected, Seq("key", "period"), "left_anti").count() == 0)
+      // append-mode parquet sink: only watermark-finalized windows appear,
+      // but every emitted row must agree with the batch aggregation
+      val pq = EventsStream.writer(
+        EventsStream.dailySeries(EventsStream.readEvents(spark, s"$dir/in"), "0 seconds"),
+        s"$dir/out", s"$dir/ckpt").start()
+      assert(pq.awaitTermination(120000), "parquet-sink stream did not finish in time")
+      val sunk = spark.read.parquet(s"$dir/out")
+      assert(sunk.count() > 0 && sunk.count() <= expected.count())
+      assert(sunk.join(expected, Seq("key", "period"), "left_anti").count() == 0)
+    }
   }
 
   test("streaming dedup drops replayed events within the watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup").toString
-    val events = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
-    // at-least-once source: the same events land twice
-    events.write.mode("overwrite").parquet(s"$dir/in")
-    events.write.mode("append").parquet(s"$dir/in")
-    val deduped = EventsStream.dedupedEvents(EventsStream.readEvents(spark, s"$dir/in"))
-    val q = deduped.writeStream.outputMode("append").format("memory")
-      .queryName("dedup_mem")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000), "dedup stream did not finish in time")
-    val got = spark.table("dedup_mem")
-    assert(got.count() == events.count(), "each event exactly once")
-    assert(got.select("event_id").distinct().count() == got.count())
+    withTempDir("graft_dedup") { dir =>
+      val events = graft.sources.Tables.load(spark, sfDir, "events")
+      // at-least-once source: the same events land twice
+      events.write.mode("overwrite").parquet(s"$dir/in")
+      events.write.mode("append").parquet(s"$dir/in")
+      val deduped = EventsStream.dedupedEvents(EventsStream.readEvents(spark, s"$dir/in"))
+      val q = deduped.writeStream.outputMode("append").format("memory")
+        .queryName("dedup_mem")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "dedup stream did not finish in time")
+      val got = spark.table("dedup_mem")
+      assert(got.count() == events.count(), "each event exactly once")
+      assert(got.select("event_id").distinct().count() == got.count())
+    }
   }
 
   test("model store: versioned snapshots, time-travel reads, O(1) restore") {
     import graft.sources.ModelStore
-    val root = java.nio.file.Files.createTempDirectory("graft_models").toString + "/m"
-    val v1df = Seq(("a", 1), ("b", 2)).toDF("key", "optimal_lag")
-    val v2df = Seq(("a", 3), ("b", 4), ("c", 5)).toDF("key", "optimal_lag")
-    assert(ModelStore.versions(spark, root).isEmpty)
-    assert(ModelStore.save(v1df, root) == 1L)
-    assert(ModelStore.save(v2df, root) == 2L)
-    // latest read follows the pointer
-    assert(ModelStore.load(spark, root).count() == 3)
-    // VERSION AS OF
-    assert(ModelStore.load(spark, root, Some(1L)).count() == 2)
-    // RESTORE: pointer-only rollback, history intact
-    ModelStore.restore(spark, root, 1L)
-    assert(ModelStore.currentVersion(spark, root).contains(1L))
-    assert(ModelStore.load(spark, root).count() == 2)
-    assert(ModelStore.versions(spark, root) == Seq(1L, 2L))
-    // a save after restore appends v3 — never clobbers rolled-over history
-    assert(ModelStore.save(v2df, root) == 3L)
-    assert(ModelStore.load(spark, root, Some(2L)).count() == 3)
-    intercept[IllegalArgumentException](ModelStore.restore(spark, root, 99L))
+    withTempDir("graft_models") { tmp =>
+      val root = s"$tmp/m"
+      val v1df = Seq(("a", 1), ("b", 2)).toDF("key", "optimal_lag")
+      val v2df = Seq(("a", 3), ("b", 4), ("c", 5)).toDF("key", "optimal_lag")
+      assert(ModelStore.versions(spark, root).isEmpty)
+      assert(ModelStore.save(v1df, root) == 1L)
+      assert(ModelStore.save(v2df, root) == 2L)
+      // latest read follows the pointer
+      assert(ModelStore.load(spark, root).count() == 3)
+      // VERSION AS OF
+      assert(ModelStore.load(spark, root, Some(1L)).count() == 2)
+      // RESTORE: pointer-only rollback, history intact
+      ModelStore.restore(spark, root, 1L)
+      assert(ModelStore.currentVersion(spark, root).contains(1L))
+      assert(ModelStore.load(spark, root).count() == 2)
+      assert(ModelStore.versions(spark, root) == Seq(1L, 2L))
+      // a save after restore appends v3 — never clobbers rolled-over history
+      assert(ModelStore.save(v2df, root) == 3L)
+      assert(ModelStore.load(spark, root, Some(2L)).count() == 3)
+      intercept[IllegalArgumentException](ModelStore.restore(spark, root, 99L))
+    }
   }
 
   test("streaming sessionization (flatMapGroupsWithState) agrees with batch q15") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
-    graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
-      .write.mode("overwrite").parquet(s"$dir/in")
-    val sessions = EventsStream.sessionize(
-      EventsStream.readEvents(spark, s"$dir/in"), watermark = "0 seconds")
-    val q = sessions.writeStream.outputMode("append").format("memory")
-      .queryName("sess_mem")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000), "session stream did not finish in time")
-    val got = spark.table("sess_mem")
-    val expected = SparkEntry.queries("q15_sessions")(spark, "/root/testdata/sf0.001")
-      .withColumnRenamed("n_events", "e_n")
-      .withColumnRenamed("duration_ms", "e_dur")
-      .withColumnRenamed("total_value", "e_tot")
-    // append mode: only watermark-finalized sessions appear, but every
-    // emitted session must match its batch counterpart bit-for-bit
-    assert(got.count() > 0 && got.count() <= expected.count())
-    assert(got.join(expected, Seq("key", "session_id"), "left_anti").count() == 0)
-    val mismatch = got.join(expected, Seq("key", "session_id"))
-      .filter(
-        col("n_events") =!= col("e_n") || col("duration_ms") =!= col("e_dur") ||
-          abs(col("total_value") - col("e_tot")) > 1e-9)
-    assert(mismatch.count() == 0)
+    withTempDir("graft_sess") { dir =>
+      graft.sources.Tables.load(spark, sfDir, "events")
+        .write.mode("overwrite").parquet(s"$dir/in")
+      val sessions = EventsStream.sessionize(
+        EventsStream.readEvents(spark, s"$dir/in"), watermark = "0 seconds")
+      val q = sessions.writeStream.outputMode("append").format("memory")
+        .queryName("sess_mem")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "session stream did not finish in time")
+      val got = spark.table("sess_mem")
+      val expected = SparkEntry.queries("q15_sessions")(spark, sfDir)
+        .withColumnRenamed("n_events", "e_n")
+        .withColumnRenamed("duration_ms", "e_dur")
+        .withColumnRenamed("total_value", "e_tot")
+      // append mode: only watermark-finalized sessions appear, but every
+      // emitted session must match its batch counterpart bit-for-bit
+      assert(got.count() > 0 && got.count() <= expected.count())
+      assert(got.join(expected, Seq("key", "session_id"), "left_anti").count() == 0)
+      val mismatch = got.join(expected, Seq("key", "session_id"))
+        .filter(
+          col("n_events") =!= col("e_n") || col("duration_ms") =!= col("e_dur") ||
+            abs(col("total_value") - col("e_tot")) > 1e-9)
+      assert(mismatch.count() == 0)
+    }
   }
 
   test("streaming interval join: purchase-click attribution with bounded state") {
@@ -419,24 +476,25 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("stream-driven incremental mapping remaps touched entities per batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_map").toString
-    graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
-      .write.mode("overwrite").parquet(s"$dir/in")
-    val series = EventsStream.dailySeries(
-      EventsStream.readEvents(spark, s"$dir/in"), watermark = "0 seconds")
-    val mapped = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = EventsStream.incrementalMapping(series, s"$dir/store", s"$dir/ckpt") {
-      (accumulated, batchId) =>
-        val merged = accumulated.filter(col("v1").isNotNull && col("v2").isNotNull)
-        val best = graft.operators.LagCorrelation.bestLag(
-          graft.operators.LagCorrelation.lagCorrTable(
-            merged, MappingConfig(periodUnit = PeriodUnit.Day, maxLag = 6)))
-        mapped += best.count()
-        best.write.mode("overwrite").parquet(s"$dir/mapping")
-    }.start()
-    assert(q.awaitTermination(180000), "incremental-mapping stream did not finish in time")
-    assert(mapped.nonEmpty && mapped.last > 0)
-    assert(spark.read.parquet(s"$dir/mapping").count() == mapped.last)
+    withTempDir("graft_stream_map") { dir =>
+      graft.sources.Tables.load(spark, sfDir, "events")
+        .write.mode("overwrite").parquet(s"$dir/in")
+      val series = EventsStream.dailySeries(
+        EventsStream.readEvents(spark, s"$dir/in"), watermark = "0 seconds")
+      val mapped = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val q = EventsStream.incrementalMapping(series, s"$dir/store", s"$dir/ckpt") {
+        (accumulated, batchId) =>
+          val merged = accumulated.filter(col("v1").isNotNull && col("v2").isNotNull)
+          val best = graft.operators.LagCorrelation.bestLag(
+            graft.operators.LagCorrelation.lagCorrTable(
+              merged, MappingConfig(periodUnit = PeriodUnit.Day, maxLag = 6)))
+          mapped += best.count()
+          best.write.mode("overwrite").parquet(s"$dir/mapping")
+      }.start()
+      assert(q.awaitTermination(180000), "incremental-mapping stream did not finish in time")
+      assert(mapped.nonEmpty && mapped.last > 0)
+      assert(spark.read.parquet(s"$dir/mapping").count() == mapped.last)
+    }
   }
 
   test("m11 segments on the STAGED recommendation model, not a live training plan") {
@@ -444,7 +502,6 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // a different pushed-down filter; an unmaterialized model plan would
     // re-run the per-lag corr scan per branch (NOTES.md round-3). Lock
     // that building m11 populates the shared staging entry.
-    val sfDir = "/root/testdata/sf0.001"
     // start from a clean slate so the assertion can't pass vacuously off
     // an earlier test's staging, and probe with contains (no side effect
     // that could poison the shared cache on the failure path)

@@ -3,7 +3,9 @@ package graft
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
 import graft.operators.{LagCorrelation, MappingEngine}
 import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LogicalPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -253,5 +255,21 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val best = Seq(("A", 1, 0.9, 5L)).toDF("key", "optimal_lag", "correlation", "n_overlap")
     val corr = joinTypes(LagCorrelation.mapping(t1, t2, best, cfg).queryExecution.optimizedPlan)
     assert(corr.length == 2, corr)
+  }
+
+  test("m17: SLA prunes the QA row to its key counts; no (key, time1, time2) distinct count") {
+    // SLA projects coverage_pct and total_mappings of the QA metrics row;
+    // the duplicate, lag and ratio aggregates must be pruned, leaving the
+    // two key counts (mapping, input) and the row count
+    val p = SparkEntry.queries("m17_sla")(spark, dir).queryExecution.optimizedPlan
+    val distinct = p.collect { case a: Aggregate =>
+      a.aggregateExpressions.flatMap(_.collect { case e: AggregateExpression if e.isDistinct => e })
+    }.flatten
+    val args = distinct.map(_.aggregateFunction.children.map {
+      case a: Attribute => a.name
+      case e => e.sql
+    })
+    assert(args == Seq(Seq("key"), Seq("key")), p)
+    assert(p.collect { case e: Expand => e }.isEmpty, p)
   }
 }

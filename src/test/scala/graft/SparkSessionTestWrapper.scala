@@ -5,6 +5,17 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (JVM-wide singleton). */
 trait SparkSessionTestWrapper {
   lazy val spark: SparkSession = SparkSessionTestWrapper.session
+
+  /** Runs `body` on a fresh temp directory and deletes the tree after it. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    def delete(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(delete))
+      f.delete()
+    }
+    try body(dir.getPath)
+    finally delete(dir)
+  }
 }
 
 object SparkSessionTestWrapper {
