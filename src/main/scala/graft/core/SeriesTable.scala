@@ -47,14 +47,11 @@ object SeriesTable {
     }
   }
 
-  /** Canonical projection: (key string, period date, value double).
-    *
-    * Multiple observations in the same period are SUMMED, so the output
-    * is guaranteed one row per (key, period) — the invariant the lag-scan
-    * window formulation and the merge join both rely on. (The reference
-    * silently mis-slices on duplicate months inside its UDF; aggregating
-    * at ingest is the well-defined semantic.) */
-  def canonicalize(
+  /** The key/period/value projection of any long table: (key string,
+    * period date, value double), one row per input row — duplicate
+    * periods are still separate rows. The per-entity mapping kernel
+    * (graft.operators.MappingKernel) reads this and sums them itself. */
+  def project(
       df: DataFrame,
       keyCol: String,
       timeCol: String,
@@ -67,9 +64,24 @@ object SeriesTable {
       col(keyCol).cast(StringType).as("key"),
       normalizePeriod(col(timeCol), timeType, unit).as("period"),
       col(valueCol).cast(DoubleType).as("value"))
+  }
+
+  /** Canonical table: [[project]], then multiple observations in the same
+    * period are SUMMED, so the output is guaranteed one row per (key,
+    * period) — the invariant the lag-scan window formulation and the
+    * merge join both rely on. (The reference silently mis-slices on
+    * duplicate months inside its UDF; aggregating at ingest is the
+    * well-defined semantic.) */
+  def canonicalize(
+      df: DataFrame,
+      keyCol: String,
+      timeCol: String,
+      valueCol: String,
+      unit: PeriodUnit,
+      tableName: String = "table"): DataFrame =
+    project(df, keyCol, timeCol, valueCol, unit, tableName)
       .groupBy(col("key"), col("period"))
       .agg(sum(col("value")).as("value"))
-  }
 
   /** Period arithmetic matching the unit — the derived key of the
     * lag-shifted equi-join (SURVEY.md §2.3 J2). */

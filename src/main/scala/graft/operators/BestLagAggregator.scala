@@ -21,23 +21,6 @@ object BestLagAggregator {
 
   final case class BestLag(optimal_lag: Int, correlation: Double, num_periods: Int)
 
-  /** Pearson r; NaN for zero variance (caller skips NaN). */
-  private def pearson(x: Array[Double], y: Array[Double]): Double = {
-    val n = x.length
-    var sx = 0.0; var sy = 0.0
-    var i = 0
-    while (i < n) { sx += x(i); sy += y(i); i += 1 }
-    val mx = sx / n; val my = sy / n
-    var cov = 0.0; var vx = 0.0; var vy = 0.0
-    i = 0
-    while (i < n) {
-      val dx = x(i) - mx; val dy = y(i) - my
-      cov += dx * dy; vx += dx * dx; vy += dy * dy
-      i += 1
-    }
-    cov / math.sqrt(vx * vy)
-  }
-
   /** The kernel (mapping_engine.py:117-160 semantics). */
   def bestLag(v1: Array[Double], v2: Array[Double], maxLag: Int): BestLag = {
     val n = v1.length
@@ -48,9 +31,8 @@ object BestLagAggregator {
     while (lag <= maxLag) {
       val len = n - lag
       if (len >= 2) {
-        val a = java.util.Arrays.copyOfRange(v1, 0, len)
         val b = java.util.Arrays.copyOfRange(v2, lag, lag + len)
-        val r = pearson(a, b)
+        val r = MappingKernel.pearson(v1, b, len)
         if (!r.isNaN && r > best) { best = r; bestL = lag }
       }
       lag += 1

@@ -59,16 +59,6 @@ object Comparison {
       .groupBy(col("recommended_method"), col("confidence"))
       .agg(count(lit(1)).as("num_entities"))
 
-  /** A1: overall comparison statistics (04_comparision.py:61-69). */
-  def overallStats(comparison: DataFrame): DataFrame =
-    comparison.agg(
-      count(lit(1)).as("total_entities"),
-      round(avg(col("correlation")), 6).as("avg_correlation"),
-      round(stddev(col("correlation")), 6).as("std_correlation"),
-      round(avg(col("total_cost")), 6).as("avg_dtw_cost"),
-      round(avg(col("optimal_lag")), 6).as("avg_lag"),
-      round(avg(col("num_mappings")), 6).as("avg_dtw_mappings"))
-
   /** Convenience: full pipeline from a merged series table. */
   def recommendationsFromMerged(merged: DataFrame, cfg: MappingConfig): DataFrame =
     recommendationsFromSummaries(merged, DtwMapping.summarize(merged, cfg).toDF(), cfg)

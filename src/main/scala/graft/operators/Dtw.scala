@@ -68,7 +68,15 @@ object Dtw {
     // that a corner outside the band stays +inf (mapping_engine.py:186-189).
     val bandW = window.getOrElse(0)
     val stripe = if (window.isDefined) 2 * bandW + 3 else m + 1
-    val dp = Array.fill((n + 1) * stripe)(inf)
+    // Refuse before allocating: the cells must fit one Java array and a
+    // quarter of the heap (an Int product wraps to an empty array at
+    // 50,001 unbanded points).
+    val cells = (n + 1).toLong * stripe
+    val maxCells = math.min(Int.MaxValue - 8L, Runtime.getRuntime.maxMemory / 4 / 8)
+    if (cells > maxCells)
+      throw new IllegalArgumentException(
+        s"DTW of $n x $m points (window ${window.getOrElse("none")}) needs $cells cells > $maxCells")
+    val dp = Array.fill(cells.toInt)(inf)
     @inline def slot(i: Int, j: Int): Int =
       if (window.isDefined) i * stripe + (j - i + bandW + 1) else i * stripe + j
     @inline def inStripe(i: Int, j: Int): Boolean =
@@ -113,11 +121,12 @@ object Dtw {
   }
 
   /** One entity's alignment from its (unsorted) points: sort by period
-    * (ISO dates sort chronologically as strings), run [[distance]], and label each path step with its periods and
-    * values. On a kernel error — including an empty series — the result
-    * is the reference's fallback: identity path with zero cost
-    * (mapping_engine.py:313-315). Shared by DtwMapping.summarize and the
-    * SQL `dtw` aggregate. */
+    * (ISO dates sort chronologically as strings), run [[distance]], and
+    * label each path step with its periods and values. An empty series
+    * gets the reference's fallback, zero cost and an empty identity path
+    * (mapping_engine.py:313-315); any other kernel error propagates.
+    * Shared by DtwMapping.summarize, the mapping kernel and the SQL `dtw`
+    * aggregate. */
   def align(
       points: Seq[PeriodPoint],
       window: Option[Int],
@@ -126,11 +135,8 @@ object Dtw {
     val s1 = pts.map(_.v1)
     val s2 = pts.map(_.v2)
     val (cost, path) =
-      try distance(s1, s2, window, normalizeInput)
-      catch {
-        case _: Exception =>
-          (0.0, Array.tabulate(math.min(s1.length, s2.length))(i => (i, i)))
-      }
+      if (pts.isEmpty) (0.0, Array.empty[(Int, Int)])
+      else distance(s1, s2, window, normalizeInput)
     (cost, path.toSeq.map { case (i, j) =>
       PathStep(i, j, pts(i).period, pts(j).period, s1(i), s2(j))
     })

@@ -8,14 +8,24 @@ import org.apache.spark.sql.functions._
   * GenericMappingEngine.map_tables / map_tables_simple
   * (/root/reference/mapping_engine.py:425-591, 761-805).
   *
-  * Differences from the reference, by design (SURVEY.md §7):
-  *   - correlation is fully relational (no UDF) → whole-stage codegen;
-  *   - auto mode computes the best-lag table ONCE and routes each entity by
-  *     filtering it: the passing rows drive the correlation mapping, the
-  *     rest of `merged` goes to DTW — the reference recomputes its
-  *     correlation UDF a second time (mapping_engine.py:689-690 then :602);
-  *   - no manual `repartition(200)`: groupBy/mapGroups already shuffle by
-  *     key, and AQE coalesces partitions.
+  * `mapSeries` and `mapTables` run ONE per-entity kernel
+  * ([[MappingKernel]]) for every method: a cogroup of the two series by
+  * key, so the job is one hash exchange per input and one task stage —
+  * the shape of the reference's grouped-map UDF per entity
+  * (mapping_engine.py:241-264, 296-335), in-JVM.
+  *
+  * `autoMapping` is the staged relational composition of the same answer
+  * (canonicalize → merge → lag scan → argmax → join-back, DTW on the
+  * rest). It serves callers that already staged the merged set, the
+  * best-lag table or the DTW summaries, and it is the oracle the kernel
+  * is tested against. Differences from the reference, by design
+  * (SURVEY.md §7):
+  *   - auto mode computes the best correlation ONCE per entity and routes
+  *     the entity on it — the reference recomputes its correlation UDF a
+  *     second time (mapping_engine.py:689-690 then :602);
+  *   - no manual `repartition(200)`: the grouping already shuffles by key,
+  *     and AQE coalesces partitions (the kernel keeps its partition count;
+  *     see [[MappingKernel.mapping]]).
   */
 object MappingEngine {
 
@@ -23,20 +33,12 @@ object MappingEngine {
     * Returns mapping rows
     * (key, time1, value1, time2, value2, lag_offset, method, correlation?, dtw_cost?).
     */
-  def mapSeries(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
-    val merged = SeriesTable.merge(t1, t2)
-    cfg.method match {
-      case "correlation" =>
-        correlationMapping(merged, t1, t2, cfg)
-      case "dtw" =>
-        DtwMapping.mapping(merged, cfg)
-      case "auto" =>
-        autoMapping(merged, t1, t2, cfg)
-    }
-  }
+  def mapSeries(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame =
+    MappingKernel.mapping(t1, t2, cfg)
 
-  /** Raw-table convenience: canonicalize, then map — the Scala
-    * `map_tables_simple` (mapping_engine.py:761-805). */
+  /** Raw-table convenience, the Scala `map_tables_simple`
+    * (mapping_engine.py:761-805): project both tables and map them. The
+    * kernel sums duplicate periods, so no canonicalize aggregate runs. */
   def mapTables(
       table1: DataFrame,
       table2: DataFrame,
@@ -45,18 +47,9 @@ object MappingEngine {
       value1Col: String,
       value2Col: String,
       cfg: MappingConfig = MappingConfig()): DataFrame = {
-    val t1 = SeriesTable.canonicalize(table1, keyCol, timeCol, value1Col, cfg.periodUnit, "table1")
-    val t2 = SeriesTable.canonicalize(table2, keyCol, timeCol, value2Col, cfg.periodUnit, "table2")
+    val t1 = SeriesTable.project(table1, keyCol, timeCol, value1Col, cfg.periodUnit, "table1")
+    val t2 = SeriesTable.project(table2, keyCol, timeCol, value2Col, cfg.periodUnit, "table2")
     mapSeries(t1, t2, cfg)
-  }
-
-  private def correlationMapping(
-      merged: DataFrame,
-      t1: DataFrame,
-      t2: DataFrame,
-      cfg: MappingConfig): DataFrame = {
-    val best = LagCorrelation.bestLag(LagCorrelation.lagCorrTable(merged, cfg))
-    LagCorrelation.mapping(t1, t2, best, cfg)
   }
 
   /** Auto mode: entities with best correlation >= `cfg.autoCorrThreshold`

@@ -1,0 +1,242 @@
+package graft.operators
+
+import java.time.LocalDate
+
+import graft.core.{MappingConfig, PeriodUnit}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+/** The per-entity mapping kernel: one cogroup of the two series by key,
+  * and every method's whole answer for a key computed in one call — the
+  * Scala counterpart of the reference's grouped-map UDF per entity
+  * (mapping_engine.py:241-264, 296-335).
+  *
+  * The job is one hash exchange on `key` per input and one task stage.
+  * Its rows are those of the staged relational composition
+  * (SeriesTable.canonicalize → merge → LagCorrelation.lagCorrTable →
+  * bestLag → mapping, DtwMapping.mapping, MappingEngine.autoMapping),
+  * which stays as the reference path and the differential test's oracle:
+  *   - duplicate periods are summed with Spark `sum`'s null rule (null only
+  *     when every value is null); null keys and periods are dropped;
+  *   - the lag scan pairs merged periods (p, p + L) on the calendar for
+  *     L = 0..maxLag, counts `n_overlap` as `count(partner)`, skips a lag
+  *     under `minOverlap` or with an undefined correlation, and picks the
+  *     best by `round(corr, 6)` descending, then lag ascending;
+  *   - the correlation join-back maps the key's canonical t1 rows, not only
+  *     merged ones, to t2 at p + lag (SURVEY.md §7.3);
+  *   - DTW runs [[Dtw.align]] on the merged series.
+  *
+  * A key's two series are held in memory, so `maxSeriesLength` bounds
+  * both of them for every method. The kernel's Pearson cannot divide by
+  * zero, so the job is correct with ANSI on or off and leaves the
+  * session's configuration alone. */
+object MappingKernel {
+
+  /** One observation: its key, its period as a day or month index, its value. */
+  final case class Obs(key: String, period: Int, value: Option[Double])
+
+  /** One mapping row with every method's columns; each method selects its own. */
+  final case class MappedRow(
+      key: String,
+      time1: String,
+      value1: Option[Double],
+      time2: String,
+      value2: Option[Double],
+      lag_offset: Option[Int],
+      method: String,
+      correlation: Option[Double],
+      dtw_cost: Option[Double])
+
+  private val rowColumns = Seq("key", "time1", "value1", "time2", "value2", "lag_offset", "method")
+
+  /** Map two (key, period, value) tables with `cfg.method`. Duplicate
+    * periods are summed here, so canonical and merely projected tables
+    * ([[graft.core.SeriesTable.project]]) give the same rows. */
+  def mapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
+    val spark = t1.sparkSession
+    import spark.implicits._
+    // The kernel's cost is CPU per key, not shuffle bytes, so its stage
+    // keeps all spark.sql.shuffle.partitions tasks: a shuffle with a
+    // partition count is one AQE does not coalesce (it would run a small
+    // job's kernels on one core). Both sides hash `key` into the same
+    // count, so the cogroup adds no exchange of its own, and
+    // groupBy(col).as groups on the column itself: no AppendColumns node.
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def observations(t: DataFrame) =
+      t.select(
+          col("key").cast("string").as("key"),
+          periodIndex(col("period"), cfg.periodUnit).as("period"),
+          col("value").cast("double").as("value"))
+        .filter(col("key").isNotNull && col("period").isNotNull)
+        .repartition(partitions, col("key"))
+        .groupBy(col("key"))
+        .as[String, Obs]
+    val rows = observations(t1).cogroup(observations(t2)) { (key, a, b) => mapEntity(key, a, b, cfg) }
+    val methodColumns = cfg.method match {
+      case "correlation" => Seq("correlation")
+      case "dtw"         => Seq("dtw_cost")
+      case "auto"        => Seq("correlation", "dtw_cost")
+    }
+    rows.toDF().select((rowColumns ++ methodColumns).map(col): _*)
+  }
+
+  private def periodIndex(period: Column, unit: PeriodUnit): Column = unit match {
+    case PeriodUnit.Day   => unix_date(period)
+    case PeriodUnit.Month => year(period) * 12 + month(period) - 1
+  }
+
+  private def isoDate(index: Int, unit: PeriodUnit): String = unit match {
+    case PeriodUnit.Day   => LocalDate.ofEpochDay(index).toString
+    case PeriodUnit.Month => LocalDate.of(Math.floorDiv(index, 12), Math.floorMod(index, 12) + 1, 1).toString
+  }
+
+  /** A key's series on one side: one entry per period, ascending. */
+  private final class Series(val period: Array[Int], val value: Array[Option[Double]]) {
+    def length: Int = period.length
+  }
+
+  private def series(key: String, obs: Iterator[Obs], side: String, maxSeriesLength: Int): Series = {
+    val sums = scala.collection.mutable.TreeMap.empty[Int, Option[Double]]
+    obs.foreach { o =>
+      // Spark sum: coalesce(sum, 0) + value, skipping nulls
+      sums(o.period) = (sums.getOrElse(o.period, None), o.value) match {
+        case (s, Some(v)) => Some(s.getOrElse(0.0) + v)
+        case (s, None)    => s
+      }
+    }
+    if (sums.size > maxSeriesLength)
+      throw new IllegalStateException(
+        s"$side series for key=$key has ${sums.size} periods > maxSeriesLength=$maxSeriesLength")
+    new Series(sums.keysIterator.toArray, sums.valuesIterator.toArray)
+  }
+
+  /** Periods present on both sides: (period, v1, v2). */
+  private def merge(s1: Series, s2: Series): (Array[Int], Array[Option[Double]], Array[Option[Double]]) = {
+    val out = Array.newBuilder[(Int, Option[Double], Option[Double])]
+    var i = 0
+    var j = 0
+    while (i < s1.length && j < s2.length) {
+      if (s1.period(i) < s2.period(j)) i += 1
+      else if (s1.period(i) > s2.period(j)) j += 1
+      else { out += ((s1.period(i), s1.value(i), s2.value(j))); i += 1; j += 1 }
+    }
+    out.result().unzip3
+  }
+
+  private def mapEntity(key: String, a: Iterator[Obs], b: Iterator[Obs], cfg: MappingConfig): Iterator[MappedRow] = {
+    val s1 = series(key, a, "table1", cfg.maxSeriesLength)
+    val s2 = series(key, b, "table2", cfg.maxSeriesLength)
+    val (period, v1, v2) = merge(s1, s2)
+    def best = bestLag(period, v1, v2, cfg)
+    cfg.method match {
+      case "correlation" =>
+        best.filter(_._2 >= cfg.minCorrelation).iterator.flatMap { case (lag, c) => joinBack(key, s1, s2, lag, c, cfg) }
+      case "dtw" => dtw(key, period, v1, v2, cfg)
+      case "auto" =>
+        best.filter(_._2 >= cfg.autoCorrThreshold) match {
+          case Some((lag, c)) =>
+            if (c >= cfg.minCorrelation) joinBack(key, s1, s2, lag, c, cfg) else Iterator.empty
+          case None => dtw(key, period, v1, v2, cfg)
+        }
+    }
+  }
+
+  /** The best (lag, round(corr, 6)) over calendar lags 0..maxLag, as
+    * LagCorrelation.bestLag(lagCorrTable(merged)) picks it. */
+  private def bestLag(
+      period: Array[Int],
+      v1: Array[Option[Double]],
+      v2: Array[Option[Double]],
+      cfg: MappingConfig): Option[(Int, Double)] = {
+    val n = period.length
+    val xs = new Array[Double](n)
+    val ys = new Array[Double](n)
+    var best: Option[(Int, Double)] = None
+    for (lag <- 0 to cfg.maxLag) {
+      var overlap = 0
+      var pairs = 0
+      var j = 0
+      for (i <- 0 until n) {
+        while (j < n && period(j) < period(i) + lag) j += 1
+        if (j < n && period(j) == period(i) + lag && v2(j).isDefined) {
+          overlap += 1
+          if (v1(i).isDefined) { xs(pairs) = v1(i).get; ys(pairs) = v2(j).get; pairs += 1 }
+        }
+      }
+      if (overlap >= cfg.minOverlap) {
+        val r = pearson(xs, ys, pairs)
+        if (!r.isNaN) {
+          val c = round6(r)
+          if (best.forall(c > _._2)) best = Some((lag, c))
+        }
+      }
+    }
+    best
+  }
+
+  /** Map each canonical t1 row at p to the t2 row at p + lag. */
+  private def joinBack(key: String, s1: Series, s2: Series, lag: Int, corr: Double, cfg: MappingConfig) = {
+    var j = 0
+    (0 until s1.length).iterator.flatMap { i =>
+      val target = s1.period(i) + lag
+      while (j < s2.length && s2.period(j) < target) j += 1
+      if (j < s2.length && s2.period(j) == target)
+        Some(MappedRow(
+          key, isoDate(s1.period(i), cfg.periodUnit), s1.value(i), isoDate(target, cfg.periodUnit),
+          s2.value(j), Some(lag), "correlation", Some(corr), None))
+      else None
+    }
+  }
+
+  private def dtw(
+      key: String,
+      period: Array[Int],
+      v1: Array[Option[Double]],
+      v2: Array[Option[Double]],
+      cfg: MappingConfig): Iterator[MappedRow] =
+    if (period.isEmpty) Iterator.empty
+    else {
+      val points = period.indices.map { i =>
+        if (v1(i).isEmpty || v2(i).isEmpty)
+          throw new IllegalStateException(
+            s"DTW needs non-null values: key=$key has a null value at ${isoDate(period(i), cfg.periodUnit)}")
+        PeriodPoint(isoDate(period(i), cfg.periodUnit), v1(i).get, v2(i).get)
+      }
+      val (cost, steps) = Dtw.align(points, cfg.dtwWindow, cfg.dtwNormalize)
+      val rounded = Some(round6(cost))
+      steps.iterator.map { s =>
+        MappedRow(key, s.period1, Some(s.value1), s.period2, Some(s.value2), None, "dtw", None, rounded)
+      }
+    }
+
+  /** Spark's `round(x, 6)` on a double: HALF_UP on its decimal string. */
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Pearson r of the first `len` pairs, with the update order of Spark's
+    * `corr` aggregate (so both give the same bits on the same row order).
+    * NaN when undefined: fewer than 2 pairs, or a zero variance. */
+  def pearson(x: Array[Double], y: Array[Double], len: Int): Double = {
+    var n = 0.0
+    var xAvg = 0.0
+    var yAvg = 0.0
+    var ck = 0.0
+    var xMk = 0.0
+    var yMk = 0.0
+    var i = 0
+    while (i < len) {
+      n += 1.0
+      val dx = x(i) - xAvg
+      val dy = y(i) - yAvg
+      xAvg += dx / n
+      yAvg += dy / n
+      ck += dx * (y(i) - yAvg)
+      xMk += dx * (x(i) - xAvg)
+      yMk += dy * (y(i) - yAvg)
+      i += 1
+    }
+    val den = math.sqrt(xMk * yMk)
+    if (len < 2 || den == 0.0) Double.NaN else ck / den
+  }
+}

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dtw
+import graft.operators.{Dtw, PeriodPoint}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kernel goldens generated by executing the reference's own
@@ -112,6 +112,20 @@ class DtwSpec extends AnyFunSuite {
     assert(cost >= 0 && !cost.isInfinite)
     assert(path.last == ((n - 1, n - 1)))
     assert(sec < 30, f"banded 50k-point DTW took $sec%.1f s")
+  }
+
+  test("unbanded DTW past the Int cell count fails on the guard, never returns cost 0") {
+    // (n+1)^2 cells overflow an Int at 50,001 points: once an empty DP
+    // array whose index error the fallback turned into cost 0 with an
+    // identity path
+    val n = 50001
+    val pts = (0 until n).map(i => PeriodPoint(f"$i%06d", i.toDouble, (i % 7).toDouble))
+    val e = intercept[IllegalArgumentException](Dtw.align(pts, None, normalizeInput = true))
+    assert(e.getMessage.contains("cells"), e.getMessage)
+  }
+
+  test("an empty series keeps the reference fallback: zero cost, empty path") {
+    assert(Dtw.align(Nil, None, normalizeInput = true) == ((0.0, Nil)))
   }
 
   test("band constraint: path stays within window") {

@@ -243,4 +243,144 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .select($"key", $"correlation").distinct().as[(String, Double)].collect()
     assert(corrScores.toSeq == Seq("K_HI" -> best("K_HI")))
   }
+
+  /** Raw (k, t, v) tables for the kernel-vs-relational test. Periods are
+    * dates; under Month they fall on varying days, so the projection's
+    * truncation makes more duplicates. Keys: a lag-1 relation, gaps on
+    * both sides, duplicate rows, a constant series, 2 periods, a key in
+    * each table only, t1 periods outside `merged` that the join-back
+    * still maps, a series shorter than maxLag, a moderate (~0.7)
+    * correlation and noise. */
+  private def kernelFixture(unit: PeriodUnit): (DataFrame, DataFrame) = {
+    val rng = new scala.util.Random(11)
+    val base = java.time.LocalDate.of(2024, 1, 1)
+    def date(p: Int) = java.sql.Date.valueOf(unit match {
+      case PeriodUnit.Day   => base.plusDays(p)
+      case PeriodUnit.Month => base.plusMonths(p).plusDays((p * 7) % 25)
+    })
+    val wave = (0 until 24).map(i => 50.0 + 20.0 * math.sin(i * 0.9) + 3.0 * (i % 4))
+    val noise = Vector.fill(24)(rng.nextGaussian())
+    def series(key: String, periods: Seq[Int], v: Int => Double) = periods.map(p => (key, date(p), v(p)))
+    val t1 = Seq(
+      series("K_LAG1", 0 until 16, wave),
+      series("K_GAPS", (0 until 20).filterNot(Set(3, 7)), wave),
+      series("K_DUPS", (0 until 12) ++ Seq(2, 5, 5), p => wave(p) / 2),
+      series("K_CONST", 0 until 10, _ => 4.0),
+      series("K_TWO", 0 until 2, wave),
+      series("K_ONLY1", 0 until 8, wave),
+      series("K_OUTSIDE", 0 until 10, wave),
+      series("K_SHORT", 0 until 4, wave),
+      series("K_MID", 0 until 12, p => p.toDouble),
+      series("K_NOISE", 0 until 14, p => noise(p))).flatten
+    val t2 = Seq(
+      series("K_LAG1", 0 until 16, p => 0.5 * wave(math.max(p - 1, 0)) + 0.1 * noise(p)),
+      series("K_GAPS", (0 until 20).filterNot(Set(5, 12)), p => 2.0 * wave(math.max(p - 2, 0)) + noise(p)),
+      series("K_DUPS", (0 until 12) ++ Seq(3, 3, 9), p => wave(p)),
+      series("K_CONST", 0 until 10, p => p * 1.5),
+      series("K_TWO", 0 until 2, p => wave(p + 3)),
+      series("K_ONLY2", 0 until 8, wave),
+      series("K_OUTSIDE", (0 until 6) ++ (7 until 13), p => 3.0 * wave(math.max(p - 1, 0))),
+      series("K_SHORT", 0 until 4, p => wave(p) + noise(p)),
+      series("K_MID", 0 until 12, p => p + (if (p % 2 == 0) 3.0 else -3.0)),
+      series("K_NOISE", 0 until 14, p => noise(23 - p))).flatten
+    (t1.toDF("k", "t", "v"), t2.toDF("k", "t", "v"))
+  }
+
+  /** The relational composition mapTables replaces, on canonical tables. */
+  private def relationalMapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
+    val merged = SeriesTable.merge(t1, t2)
+    cfg.method match {
+      case "correlation" =>
+        LagCorrelation.mapping(t1, t2, LagCorrelation.bestLag(LagCorrelation.lagCorrTable(merged, cfg)), cfg)
+      case "dtw"  => DtwMapping.mapping(merged, cfg)
+      case "auto" => MappingEngine.autoMapping(merged, t1, t2, cfg)
+    }
+  }
+
+  /** Same columns; keys, methods, times and lags equal; values,
+    * correlation and dtw_cost within 1e-9. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, label: String): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq, label)
+    assert(got.schema.map(_.dataType) == want.schema.map(_.dataType), label)
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq).sortBy(r => (r.take(2) ++ r.slice(3, 4)).mkString("|"))
+    val (g, w) = (rows(got), rows(want))
+    assert(g.length == w.length, s"$label: ${g.length} rows vs ${w.length}")
+    g.zip(w).foreach { case (a, b) =>
+      a.zip(b).foreach {
+        case (x: Double, y: Double) => assert(math.abs(x - y) <= 1e-9, s"$label: $a vs $b")
+        case (x, y)                 => assert(x == y, s"$label: $a vs $b")
+      }
+    }
+  }
+
+  test("mapTables' per-entity kernel gives the relational path's rows for every method and unit") {
+    for (unit <- Seq(PeriodUnit.Day, PeriodUnit.Month)) {
+      val (raw1, raw2) = kernelFixture(unit)
+      val t1 = SeriesTable.canonicalize(raw1, "k", "t", "v", unit)
+      val t2 = SeriesTable.canonicalize(raw2, "k", "t", "v", unit)
+      val configs = Seq("correlation", "dtw", "auto").map(m => MappingConfig(method = m, periodUnit = unit)) :+
+        MappingConfig(method = "auto", periodUnit = unit, autoCorrThreshold = 0.5, minCorrelation = 0.9)
+      configs.foreach { cfg =>
+        val label = s"${cfg.method} $unit threshold=${cfg.autoCorrThreshold} min=${cfg.minCorrelation}"
+        val got = MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", cfg)
+        assertSameRows(got, relationalMapping(t1, t2, cfg), label)
+        val byMethod = got.select($"key", $"method").distinct().as[(String, String)].collect().toMap
+        // fixture coverage: each case lands where the test needs it
+        assert(!byMethod.contains("K_ONLY1") && !byMethod.contains("K_ONLY2"), label)
+        if (cfg.method != "dtw") assert(byMethod.get("K_LAG1").contains("correlation"), label)
+        if (cfg.method == "auto") assert(byMethod.get("K_CONST").contains("dtw"), label)
+        if (cfg.minCorrelation > cfg.autoCorrThreshold) assert(!byMethod.contains("K_MID"), label)
+      }
+      // K_OUTSIDE maps at lag 1 every t1 period p whose p + 1 is in t2:
+      // 0-4 and 6-9, though 6 has no t2 row and so is not in `merged`
+      val outside = MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v",
+        MappingConfig(method = "correlation", periodUnit = unit)).filter($"key" === "K_OUTSIDE")
+      assert(outside.filter($"lag_offset" === 1).count() == 9, unit)
+      // mapSeries on the canonical tables runs the same kernel
+      assertSameRows(
+        MappingEngine.mapSeries(t1, t2, MappingConfig(periodUnit = unit)),
+        relationalMapping(t1, t2, MappingConfig(periodUnit = unit)), s"mapSeries $unit")
+    }
+  }
+
+  test("null values: the kernel matches the correlation path; DTW fails on them as the relational path does") {
+    val rows1 = (1 to 10).map(m => ("K", f"2024-$m%02d", if (m == 4) None else Some(m * 3.0 + (m % 3))))
+    val rows2 = (1 to 10).map(m => ("K", f"2024-$m%02d", if (m == 7) None else Some(m * 2.0 - (m % 2))))
+    val (raw1, raw2) = (rows1.toDF("k", "t", "v"), rows2.toDF("k", "t", "v"))
+    val corr = cfg.copy(method = "correlation", maxLag = 2)
+    val t1 = SeriesTable.canonicalize(raw1, "k", "t", "v", PeriodUnit.Month)
+    val t2 = SeriesTable.canonicalize(raw2, "k", "t", "v", PeriodUnit.Month)
+    val got = MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", corr)
+    assert(got.filter($"value1".isNull || $"value2".isNull).count() > 0, "fixture maps null values")
+    assertSameRows(got, relationalMapping(t1, t2, corr), "nulls, correlation")
+    val dtw = corr.copy(method = "dtw")
+    intercept[Exception](MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", dtw).collect())
+    intercept[Exception](relationalMapping(t1, t2, dtw).collect())
+  }
+
+  test("mapTables is correct with ANSI on and leaves the caller's session conf alone") {
+    // a constant series (every lag's corr undefined) and a 2-period series
+    val rows1 = (1 to 8).map(m => ("K_CONST", f"2024-$m%02d", 5.0)) ++
+      Seq(("K_TWO", "2024-01", 1.0), ("K_TWO", "2024-02", 3.0))
+    val rows2 = (1 to 8).map(m => ("K_CONST", f"2024-$m%02d", m * 1.0)) ++
+      Seq(("K_TWO", "2024-01", 2.0), ("K_TWO", "2024-02", 1.0))
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    def run(ansi: Boolean, method: String) = {
+      spark.conf.set(key, ansi.toString)
+      val rows = MappingEngine.mapTables(
+        rows1.toDF("k", "t", "v"), rows2.toDF("k", "t", "v"), "k", "t", "v", "v", cfg.copy(method = method))
+        .collect().map(_.toString).sorted.toSeq
+      assert(spark.conf.get(key) == ansi.toString, s"$method changed $key")
+      rows
+    }
+    try {
+      Seq("auto", "correlation").foreach { method =>
+        assert(run(ansi = true, method) == run(ansi = false, method), method)
+      }
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }

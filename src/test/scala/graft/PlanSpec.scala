@@ -6,13 +6,17 @@ import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LogicalPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression locks: the scale properties the engine
   * promises (pushdown, pruning, broadcasts, no accidental cartesians)
   * asserted against the executed plans of registered queries. */
-class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper {
+class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -255,6 +259,29 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val best = Seq(("A", 1, 0.9, 5L)).toDF("key", "optimal_lag", "correlation", "n_overlap")
     val corr = joinTypes(LagCorrelation.mapping(t1, t2, best, cfg).queryExecution.optimizedPlan)
     assert(corr.length == 2, corr)
+  }
+
+  test("mapTables runs one per-entity kernel: two exchanges hashing key, no window, no join") {
+    import spark.implicits._
+    val cfg = MappingConfig(method = "auto", periodUnit = PeriodUnit.Month, maxLag = 2)
+    def table(scale: Double) =
+      (for (k <- Seq("A", "B", "C"); m <- 1 to 8) yield (k, f"2024-$m%02d", scale * m * (k.head - 'A' + 1)))
+        .toDF("k", "t", "v")
+    val out = MappingEngine.mapTables(table(1.0), table(2.0), "k", "t", "v", "v", cfg)
+    out.collect()
+    val plan = out.queryExecution.executedPlan // the final adaptive plan, after the collect
+    val shuffles = collect(plan) { case s: ShuffleExchangeExec => s.outputPartitioning }
+    assert(shuffles.length == 2, plan)
+    shuffles.foreach {
+      case HashPartitioning(Seq(a: Attribute), _) => assert(a.name == "key", plan)
+      case other                                  => fail(s"not a hash of key: $other\n$plan")
+    }
+    val relational = collect(plan) {
+      case w: WindowExec           => w
+      case w: WindowGroupLimitExec => w
+      case j: BaseJoinExec         => j
+    }
+    assert(relational.isEmpty, plan)
   }
 
   test("m17: SLA prunes the QA row to its key counts; no (key, time1, time2) distinct count") {
