@@ -64,21 +64,10 @@ object DtwMapping {
   def mapping(merged: DataFrame, cfg: MappingConfig): DataFrame =
     mappingFromSummaries(summarize(merged, cfg).toDF())
 
-  /** DTW mapping of the keys `restrict` keeps: the explode of the kept
-    * precomputed `summaries` (key, total_cost, path) of `merged` when
-    * given, else the kernel on the kept rows of `merged`. DTW is per-key
-    * independent, so both give the same rows. */
-  def restrictedMapping(merged: DataFrame, summaries: Option[DataFrame], cfg: MappingConfig)(
-      restrict: DataFrame => DataFrame): DataFrame =
-    summaries match {
-      case Some(s) => mappingFromSummaries(restrict(s))
-      case None    => mapping(restrict(merged), cfg)
-    }
-
   /** Same explode, from ALREADY-COMPUTED summaries (key, total_cost, path)
     * — lets a caller that needed the summaries anyway (recommendation
-    * training, Pipeline.run) derive the row-level mapping without running
-    * the DTW kernel a second time. */
+    * training, the staged auto mode) derive the row-level mapping without
+    * running the DTW kernel a second time. */
   def mappingFromSummaries(summaries: DataFrame): DataFrame = {
     summaries
       .select(col("key"), round(col("total_cost"), 6).as("dtw_cost"), explode(col("path")).as("step"))

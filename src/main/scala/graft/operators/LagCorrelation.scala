@@ -164,7 +164,7 @@ object LagCorrelation {
   /** Broadcast per-entity summaries when the config says so (reference
     * default); otherwise leave the join strategy to Catalyst/AQE. Shared
     * by every operator that joins a one-row-per-entity table back to a
-    * fact table (Pipeline segments through here too). */
+    * fact table. */
   private[operators] def maybeBroadcast(df: DataFrame, cfg: MappingConfig): DataFrame =
     if (cfg.broadcastSummaries) broadcast(df) else df
 
@@ -173,7 +173,7 @@ object LagCorrelation {
     * any further columns of `lags` (e.g. `correlation`) are carried into
     * the output after `method`. The lag-shifted join is derive-then-
     * equi-join: compute `period + optimal_lag` as a column, then a plain
-    * equi-join. Also the production path's primitive (stored-model lags). */
+    * equi-join. */
   def mappingWithLags(t1: DataFrame, t2: DataFrame, lags: DataFrame, cfg: MappingConfig): DataFrame = {
     val carried = lags.columns.toSeq.filterNot(Set("key", "optimal_lag")).map(col)
     val withLag = t1.join(maybeBroadcast(lags, cfg), Seq("key"), "inner")

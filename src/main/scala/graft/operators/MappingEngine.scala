@@ -68,8 +68,8 @@ object MappingEngine {
     * in; otherwise it is computed here. `dtwSummaries`: precomputed DTW
     * summaries (key, total_cost, path) of `merged` itself — one per key of
     * `merged` that can land in the DTW segment, and none for other keys
-    * (the split only removes the correlation segment); see
-    * [[DtwMapping.restrictedMapping]]. */
+    * (the split only removes the correlation segment); DTW is per-key
+    * independent, so exploding the kept ones gives the DTW segment's rows. */
   def autoMapping(
       merged: DataFrame,
       t1: DataFrame,
@@ -92,13 +92,16 @@ object MappingEngine {
     // join would prune `simple` to its key, a second relation AQE cannot
     // reuse, and the lag scan would run twice; the outer join keeps (and
     // tests) every column, so both sides share one broadcast. It broadcasts
-    // only under cfg.broadcastSummaries, the gate Pipeline.run routes through.
+    // only under cfg.broadcastSummaries, the gate mappingWithLags applies.
     val simpleB = LagCorrelation.maybeBroadcast(simple, cfg)
     def outsideSimple(df: DataFrame): DataFrame =
       df.join(simpleB, Seq("key"), "left_outer")
         .filter(col("optimal_lag").isNull && col("correlation").isNull)
         .drop("optimal_lag", "correlation")
-    val dtwPart = DtwMapping.restrictedMapping(merged, dtwSummaries, cfg)(outsideSimple)
+    val dtwPart = dtwSummaries match {
+      case Some(s) => DtwMapping.mappingFromSummaries(outsideSimple(s))
+      case None    => DtwMapping.mapping(outsideSimple(merged), cfg)
+    }
     // Schema union across method-specific columns (mapping_engine.py:746).
     corrPart.unionByName(dtwPart, allowMissingColumns = true)
   }

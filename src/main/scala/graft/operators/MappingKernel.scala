@@ -3,7 +3,7 @@ package graft.operators
 import java.time.LocalDate
 
 import graft.core.{MappingConfig, PeriodUnit}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /** The per-entity mapping kernel: one cogroup of the two series by key,
@@ -47,6 +47,15 @@ object MappingKernel {
       correlation: Option[Double],
       dtw_cost: Option[Double])
 
+  /** t1's side of [[serve]]: an observation, or, with no period, the
+    * key's stored model row. */
+  final case class Served(
+      key: String,
+      period: Option[Int],
+      value: Option[Double],
+      method: Option[String],
+      lag: Option[Int])
+
   private val rowColumns = Seq("key", "time1", "value1", "time2", "value2", "lag_offset", "method")
 
   /** Map two (key, period, value) tables with `cfg.method`. Duplicate
@@ -55,29 +64,55 @@ object MappingKernel {
   def mapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
     val spark = t1.sparkSession
     import spark.implicits._
-    // The kernel's cost is CPU per key, not shuffle bytes, so its stage
-    // keeps all spark.sql.shuffle.partitions tasks: a shuffle with a
-    // partition count is one AQE does not coalesce (it would run a small
-    // job's kernels on one core). Both sides hash `key` into the same
-    // count, so the cogroup adds no exchange of its own, and
-    // groupBy(col).as groups on the column itself: no AppendColumns node.
-    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def observations(t: DataFrame) =
-      t.select(
-          col("key").cast("string").as("key"),
-          periodIndex(col("period"), cfg.periodUnit).as("period"),
-          col("value").cast("double").as("value"))
-        .filter(col("key").isNotNull && col("period").isNotNull)
-        .repartition(partitions, col("key"))
-        .groupBy(col("key"))
-        .as[String, Obs]
-    val rows = observations(t1).cogroup(observations(t2)) { (key, a, b) => mapEntity(key, a, b, cfg) }
+    val rows = byKey[Obs](observations(t1, cfg)).cogroup(byKey[Obs](observations(t2, cfg)))(mapEntity(_, _, _, cfg))
     val methodColumns = cfg.method match {
       case "correlation" => Seq("correlation")
       case "dtw"         => Seq("dtw_cost")
       case "auto"        => Seq("correlation", "dtw_cost")
     }
     rows.toDF().select((rowColumns ++ methodColumns).map(col): _*)
+  }
+
+  /** Map t1 with a stored model (key, recommended_method, optimal_lag),
+    * one decision per t1 key, as the reference's MappingEngine.process
+    * makes it (05_prod_dev.py:329-447):
+    *   - "Correlation" or "Either (prefer Correlation for simplicity)": the
+    *     join-back at the stored lag, no lag scan; a null lag gives no rows;
+    *   - "DTW": [[Dtw.align]] on the merged series;
+    *   - no model row, or one with a null method: the join-back at lag 1;
+    *   - "Complex - Manual Review", or any other method: no rows.
+    * Keys with no t1 rows give no rows; a key with two model rows fails.
+    * `cfg.method` is not read. Returns the seven mapping columns. */
+  def serve(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame = {
+    val spark = t1.sparkSession
+    import spark.implicits._
+    // the model's rows have no period; they share t1's one key exchange
+    val stored = model.select(
+      col("key").cast("string").as("key"),
+      col("recommended_method").cast("string").as("method"),
+      col("optimal_lag").cast("int").as("lag"))
+      .filter(col("key").isNotNull)
+    val t1Side = observations(t1, cfg).unionByName(stored, allowMissingColumns = true)
+    val rows = byKey[Served](t1Side).cogroup(byKey[Obs](observations(t2, cfg)))(serveEntity(_, _, _, cfg))
+    rows.toDF().select(rowColumns.map(col): _*)
+  }
+
+  private def observations(t: DataFrame, cfg: MappingConfig): DataFrame =
+    t.select(
+        col("key").cast("string").as("key"),
+        periodIndex(col("period"), cfg.periodUnit).as("period"),
+        col("value").cast("double").as("value"))
+      .filter(col("key").isNotNull && col("period").isNotNull)
+
+  /** The kernel's cost is CPU per key, not shuffle bytes, so its stage
+    * keeps all spark.sql.shuffle.partitions tasks: a shuffle with a
+    * partition count is one AQE does not coalesce (it would run a small
+    * job's kernels on one core). Both sides hash `key` into the same
+    * count, so the cogroup adds no exchange of its own, and
+    * groupBy(col).as groups on the column itself: no AppendColumns node. */
+  private def byKey[T: Encoder](t: DataFrame): KeyValueGroupedDataset[String, T] = {
+    val partitions = t.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    t.repartition(partitions, col("key")).groupBy(col("key")).as[String, T](Encoders.STRING, implicitly)
   }
 
   private def periodIndex(period: Column, unit: PeriodUnit): Column = unit match {
@@ -130,14 +165,39 @@ object MappingKernel {
     def best = bestLag(period, v1, v2, cfg)
     cfg.method match {
       case "correlation" =>
-        best.filter(_._2 >= cfg.minCorrelation).iterator.flatMap { case (lag, c) => joinBack(key, s1, s2, lag, c, cfg) }
+        best.filter(_._2 >= cfg.minCorrelation).iterator.flatMap { case (lag, c) =>
+          joinBack(key, s1, s2, lag, Some(c), cfg)
+        }
       case "dtw" => dtw(key, period, v1, v2, cfg)
       case "auto" =>
         best.filter(_._2 >= cfg.autoCorrThreshold) match {
           case Some((lag, c)) =>
-            if (c >= cfg.minCorrelation) joinBack(key, s1, s2, lag, c, cfg) else Iterator.empty
+            if (c >= cfg.minCorrelation) joinBack(key, s1, s2, lag, Some(c), cfg) else Iterator.empty
           case None => dtw(key, period, v1, v2, cfg)
         }
+    }
+  }
+
+  private def serveEntity(
+      key: String,
+      a: Iterator[Served],
+      b: Iterator[Obs],
+      cfg: MappingConfig): Iterator[MappedRow] = {
+    val (stored, observed) = a.toVector.partition(_.period.isEmpty)
+    if (stored.length > 1) throw new IllegalArgumentException(s"model has ${stored.length} rows for key=$key")
+    // each route builds only the series it reads, so a key that emits no
+    // rows is never bounded by maxSeriesLength
+    lazy val s1 = series(key, observed.iterator.map(o => Obs(key, o.period.get, o.value)), "table1", cfg.maxSeriesLength)
+    lazy val s2 = series(key, b, "table2", cfg.maxSeriesLength)
+    if (observed.isEmpty) Iterator.empty // a key with no t1 rows
+    else stored.headOption.flatMap(_.method) match {
+      case None => joinBack(key, s1, s2, 1, None, cfg) // 05_prod_dev.py:410-414
+      case Some("Correlation" | "Either (prefer Correlation for simplicity)") =>
+        stored.head.lag.fold(Iterator.empty[MappedRow])(joinBack(key, s1, s2, _, None, cfg))
+      case Some("DTW") =>
+        val (period, v1, v2) = merge(s1, s2)
+        dtw(key, period, v1, v2, cfg)
+      case Some(_) => Iterator.empty
     }
   }
 
@@ -175,7 +235,7 @@ object MappingKernel {
   }
 
   /** Map each canonical t1 row at p to the t2 row at p + lag. */
-  private def joinBack(key: String, s1: Series, s2: Series, lag: Int, corr: Double, cfg: MappingConfig) = {
+  private def joinBack(key: String, s1: Series, s2: Series, lag: Int, corr: Option[Double], cfg: MappingConfig) = {
     var j = 0
     (0 until s1.length).iterator.flatMap { i =>
       val target = s1.period(i) + lag
@@ -183,7 +243,7 @@ object MappingKernel {
       if (j < s2.length && s2.period(j) == target)
         Some(MappedRow(
           key, isoDate(s1.period(i), cfg.periodUnit), s1.value(i), isoDate(target, cfg.periodUnit),
-          s2.value(j), Some(lag), "correlation", Some(corr), None))
+          s2.value(j), Some(lag), "correlation", corr, None))
       else None
     }
   }

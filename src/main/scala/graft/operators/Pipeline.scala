@@ -3,90 +3,30 @@ package graft.operators
 import graft.core.{MappingConfig, SeriesTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Production pipeline — Scala counterpart of the reference's
   * ProductionPipeline / MappingEngine.process
   * (/root/reference/05_prod_dev.py:329-447, 769-982).
   *
   * Given a pre-trained recommendations "model" (one row per entity with
-  * `recommended_method` and `optimal_lag`), segment input entities:
-  *   - Correlation-recommended → lag-shifted join REUSING the stored lag
-  *     (no correlation recompute — the reference's key prod optimization);
-  *   - DTW-recommended → DTW re-run on the merged series;
-  *   - no recommendation → default lag 1 (05_prod_dev.py:410-414).
-  *
-  * Scale notes: segmentation is three filters over one left join of the
-  * distinct-keys table (small) against the model (small, broadcast); the
-  * fact tables are touched once per segment with equi-joins only. No
-  * driver-side counts gate the flow — empty segments union away lazily.
+  * `recommended_method` and `optimal_lag`), map each input entity by its
+  * stored recommendation: the stored lag is reused, never recomputed (the
+  * reference's key prod optimization).
   */
 object Pipeline {
 
-  /** Full pipeline run: segment by stored recommendation, map per segment,
-    * union, stamp the run id.
-    *
-    * Per-entity tables (the model, the DTW key set) broadcast only when
-    * `cfg.broadcastSummaries` — the reference's default, right while the
-    * entity count is small; at 1M+ entities set it false and AQE picks
-    * the join strategy from runtime sizes (same gate as
-    * [[LagCorrelation.maybeBroadcast]]).
-    *
-    * `recommendations` should be a MATERIALIZED table (cached, or read
-    * from the model store — production always serves from storage): the
-    * three segment branches each reference it with a different pushed-down
-    * method filter, so a live training plan passed here would be
-    * re-evaluated per branch (measured 3x the per-lag corr scan; see
-    * NOTES.md round-3).
-    *
-    * `dtwSummaries`: optionally pass ALREADY-COMPUTED DTW summaries
-    * (key, total_cost, path) over the merged series — e.g. the ones the
-    * recommendation training just produced — and the DTW segment's mapping
-    * is derived by exploding their stored paths instead of re-running the
-    * DTW kernel over the fact tables. */
+  /** Stored-model mapping stamped with the run id: one
+    * [[MappingKernel.serve]] cogroup by key, so the plan is one hash
+    * exchange per input and one kernel stage. Columns: key, time1,
+    * value1, time2, value2, lag_offset, method, pipeline_run_id. */
   def run(
       t1: DataFrame,
       t2: DataFrame,
       recommendations: DataFrame,
       cfg: MappingConfig,
-      runId: String,
-      dtwSummaries: Option[DataFrame] = None): DataFrame = {
-    def gate(df: DataFrame): DataFrame = LagCorrelation.maybeBroadcast(df, cfg)
-    val inputKeys = t1.select(col("key")).distinct()
-    val withRec = inputKeys.join(
-      gate(recommendations.select(col("key"), col("recommended_method"), col("optimal_lag"))),
-      Seq("key"),
-      "left")
-
-    val dtwKeys = withRec.filter(col("recommended_method") === "DTW")
-
-    // the correlation segment and the unknown-entity default segment run
-    // the SAME lag-shifted join-back kernel with disjoint key sets (the
-    // three method filters partition withRec) — one fused lag table
-    // scans the fact tables once instead of twice (guide §2.4). The
-    // default keys keep lag 1 exactly as the old separate branch did;
-    // a correlation key's stored lag passes through untouched (even a
-    // NULL one, which drops its rows in the inner join, as before).
-    val corrLags = withRec
-      .filter(
-        col("recommended_method")
-          .isin("Correlation", "Either (prefer Correlation for simplicity)") ||
-          col("recommended_method").isNull)
-      .select(
-        col("key"),
-        when(col("recommended_method").isNull, lit(1))
-          .otherwise(col("optimal_lag")).as("optimal_lag"))
-
-    val corrPart = LagCorrelation.mappingWithLags(t1, t2, corrLags, cfg)
-    val dtwPart = DtwMapping
-      .restrictedMapping(SeriesTable.merge(t1, t2), dtwSummaries, cfg)(
-        _.join(gate(dtwKeys.select("key")), Seq("key"), "left_semi"))
-      .drop("dtw_cost")
-    // Default for unknown entities: lag 1 (05_prod_dev.py:412) — folded
-    // into corrLags above so the fact tables are scanned once.
-    corrPart
-      .unionByName(dtwPart, allowMissingColumns = true)
-      .withColumn("pipeline_run_id", lit(runId))
-  }
+      runId: String): DataFrame =
+    MappingKernel.serve(t1, t2, recommendations, cfg).withColumn("pipeline_run_id", lit(runId))
 
   /** Incremental mode: the reference's "incremental processing" is a batch
     * re-run over a date-range filter (05_prod_dev.py:1054-1101) — a
@@ -118,15 +58,27 @@ object Pipeline {
       recommendations,
       cfg,
       runId)
-    writePartitioned(sliced, tmpPath)
-    t1.sparkSession.read.parquet(tmpPath)
-      .filter(col("time1").between(start, end))
+    persist(sliced, tmpPath).filter(col("time1").between(start, end))
   }
 
   /** Partitioned sink (05_prod_dev.py:862-867): partition by the mapping's
     * source period so date-range reads prune files. */
   def writePartitioned(mapping: DataFrame, path: String): Unit =
     mapping.write.mode("overwrite").partitionBy("time1").parquet(path)
+
+  /** A persisted [[run]] output as it is read back and registered: the
+    * columns of [[run]] with the partition column `time1` last, typed DATE
+    * as Spark's partition inference types it. Declared, not inferred,
+    * because an empty mapping writes no data file to infer it from. */
+  private val persistedColumns =
+    "key STRING, value1 DOUBLE, time2 STRING, value2 DOUBLE, lag_offset INT, method STRING, " +
+      "pipeline_run_id STRING, time1 DATE"
+
+  /** [[writePartitioned]], then read the mapping back in its persisted schema. */
+  private def persist(mapping: DataFrame, path: String): DataFrame = {
+    writePartitioned(mapping, path)
+    mapping.sparkSession.read.schema(StructType.fromDDL(persistedColumns)).parquet(path)
+  }
 
   /** Everything the run produced, with the mapping re-read from its
     * persisted form (what downstream consumers will actually see). `qa`
@@ -156,16 +108,14 @@ object Pipeline {
       cfg: MappingConfig,
       runId: String,
       outputPath: String,
-      tableName: String,
-      dtwSummaries: Option[DataFrame] = None): ProductionResult = {
+      tableName: String): ProductionResult = {
     SeriesTable.validateSchema(t1, Seq("key", "period", "value"), "table1")
     SeriesTable.validateSchema(t2, Seq("key", "period", "value"), "table2")
     val t0 = System.nanoTime()
-    val mapped = run(t1, t2, recommendations, cfg, runId, dtwSummaries)
+    val mapped = run(t1, t2, recommendations, cfg, runId)
     val path = s"$outputPath/mappings_$runId"
-    writePartitioned(mapped, path)
+    val persisted = persist(mapped, path)
     registerExternalTable(spark, path, tableName)
-    val persisted = spark.read.parquet(path)
     val elapsed = (System.nanoTime() - t0) / 1e9
     val qa = collectLocal(QualityChecks.check(persisted, t1))
     val sla = collectLocal(Sla.fromQuality(qa, elapsed))
@@ -219,20 +169,21 @@ object Pipeline {
     registerExternalTable(spark, s"$outputPath/mappings_$runId", tableName)
   }
 
-  /** External-table DDL + monitoring view over a written mapping
-    * (05_prod_dev.py:872-876, 1252-1266). */
+  /** External-table DDL + monitoring view over a [[writePartitioned]]
+    * [[run]] output (05_prod_dev.py:872-876, 1252-1266), declared with the
+    * persisted schema, so every run, empty or not, and every restore
+    * registers the same column types. */
   def registerExternalTable(spark: SparkSession, path: String, tableName: String): Unit = {
     // Identifiers/paths are interpolated into DDL text: backtick-quote
     // each dot-separated part of the (possibly database-qualified) table
     // name, and backslash-escape quotes in the path (Spark's lexer uses
     // backslash escapes; SQL-standard '' doubling would silently
     // concatenate adjacent literals and mangle the location).
-    def quoted(name: String): String =
-      name.split('.').map(p => "`" + p.replace("`", "``") + "`").mkString(".")
-    val tn = quoted(tableName)
+    def ident(part: String): String = "`" + part.replace("`", "``") + "`"
+    val tn = tableName.split('.').map(ident).mkString(".")
     val p = path.replace("\\", "\\\\").replace("'", "\\'")
     spark.sql(s"DROP TABLE IF EXISTS $tn")
-    spark.sql(s"CREATE TABLE $tn USING PARQUET LOCATION '$p'")
+    spark.sql(s"CREATE TABLE $tn ($persistedColumns) USING PARQUET PARTITIONED BY (time1) LOCATION '$p'")
     // partitioned layout: populate the catalog's partition list
     spark.sql(s"MSCK REPAIR TABLE $tn")
     // the monitor view is temporary → always unqualified; flatten the

@@ -32,7 +32,8 @@ object QualityChecks {
       .crossJoin(totals)
       .withColumn(
         "coverage_pct",
-        round(col("mapped_keys") * lit(100.0) / col("total_keys"), 6))
+        // null, not a DIVIDE_BY_ZERO under ANSI, when t1 has no keys
+        round(try_divide(col("mapped_keys") * lit(100.0), col("total_keys")), 6))
       .select(
         col("total_keys"),
         col("mapped_keys"),

@@ -42,12 +42,10 @@ object MappingQueries {
     }
 
   // Fourth shared staging table: the trained recommendation model (one
-  // short row per entity). m8 emits it and m11 SEGMENTS on it — and
-  // Pipeline.run references the model from three segment branches, whose
-  // pushed-down method filters make the subtrees non-identical, so an
-  // unmaterialized model plan (it embeds the per-lag corr scan) would be
-  // re-evaluated per branch. Materializing the model is also the
-  // reference's own workflow: train once, STORE, serve from the store.
+  // short row per entity). m8 emits it and m11 serves from it, as the
+  // reference does: train once, STORE, serve from the store. Staged, the
+  // model's training plan (lag scan and DTW) runs once per (session, dir)
+  // however many queries read it.
   private def recommendations(s: SparkSession, dir: String): DataFrame =
     graft.sources.StagingCache.getOrElseUpdate(s, s"recommendations:$dir") {
       Comparison.recommendationsFromSummaries(merged(s, dir), dtwSummaries(s, dir), cfg)
@@ -531,15 +529,11 @@ object MappingQueries {
         round(col("shift_z"), 6).as("shift_z"),
         col("is_shift"))
     }),
-    // production pipeline: train recommendations, segment by stored model,
-    // reuse stored lags / derive the DTW segment from the training
-    // summaries (kernel runs ONCE) / default-lag fallback (rows-only)
+    // production pipeline: train recommendations, then serve each key by
+    // the stored model: stored lag / DTW re-run / default lag 1 (rows-only)
     "m11_pipeline" -> ((s, dir) => {
       val (t1, t2) = series(s, dir)
-      val summaries = dtwSummaries(s, dir)
-      val recs = recommendations(s, dir)
-        .select(col("key"), col("recommended_method"), col("optimal_lag"))
-      Pipeline.run(t1, t2, recs, cfg, "verify_run", dtwSummaries = Some(summaries)).select(
+      Pipeline.run(t1, t2, recommendations(s, dir), cfg, "verify_run").select(
         col("key"), col("time1"), round(col("value1"), 6).as("value1"),
         col("time2"), round(col("value2"), 6).as("value2"),
         col("lag_offset").cast("long").as("lag_offset"), col("method"))
@@ -959,9 +953,9 @@ object MappingQueries {
          |       ELSE 'Moderate fit - consider business context' END AS reason
          |FROM cmp""".stripMargin,
     // Pipeline.run replayed: the m8 model's CASE logic routes each input
-    // key — Correlation/Either reuse the STORED lag, DTW explodes the
-    // stored path (dtw_cost dropped), unknown keys (in t1, never merged)
-    // default to lag 1; Complex-Manual-Review keys emit nothing.
+    // key — Correlation/Either reuse the STORED lag, DTW keys get their
+    // merged series' DTW path (dtw_cost dropped), unknown keys (in t1, never
+    // merged) default to lag 1; Complex-Manual-Review keys emit nothing.
     "m11_pipeline" ->
       s"""${seriesCte.replaceFirst("WITH ", "WITH RECURSIVE ")}$dtwCte, recsq AS (
          |  SELECT t.key,

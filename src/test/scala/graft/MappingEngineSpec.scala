@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
-import graft.operators.{DtwMapping, LagCorrelation, MappingEngine}
+import graft.operators.{DtwMapping, LagCorrelation, MappingEngine, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -183,9 +183,10 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("autoMapping broadcasts are gated: broadcastSummaries=false forces no hint") {
-    // the segment key lists route through the same maybeBroadcast gate as
-    // Pipeline.run — at 1M+ entities the per-entity key set is exactly
-    // the table the gate exists to keep off the driver
+    // the segment key lists route through the maybeBroadcast gate that
+    // LagCorrelation.mappingWithLags also uses — at 1M+ entities the
+    // per-entity key set is exactly the table the gate exists to keep
+    // off the driver
     val (txn, rev) = simpleData(5, 8)
     val t1 = SeriesTable.canonicalize(txn, "customer_id", "month", "amount", PeriodUnit.Month)
     val t2 = SeriesTable.canonicalize(rev, "customer_id", "month", "rev", PeriodUnit.Month)
@@ -297,6 +298,21 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
+  /** Pipeline.run's former relational composition: the distinct t1 keys
+    * left-joined to the model; Correlation, Either and model-less keys
+    * join back at the stored lag or lag 1, DTW keys run DtwMapping on
+    * their merged rows, and the two parts union. */
+  private def relationalServe(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame = {
+    val withRec = t1.select($"key").distinct().join(model, Seq("key"), "left")
+    val lags = withRec
+      .filter($"recommended_method".isin("Correlation", "Either (prefer Correlation for simplicity)") ||
+        $"recommended_method".isNull)
+      .select($"key", when($"recommended_method".isNull, lit(1)).otherwise($"optimal_lag").as("optimal_lag"))
+    val dtwKeys = withRec.filter($"recommended_method" === "DTW").select($"key")
+    LagCorrelation.mappingWithLags(t1, t2, lags, cfg).unionByName(
+      DtwMapping.mapping(SeriesTable.merge(t1, t2).join(dtwKeys, Seq("key"), "left_semi"), cfg).drop("dtw_cost"))
+  }
+
   /** Same columns; keys, methods, times and lags equal; values,
     * correlation and dtw_cost within 1e-9. */
   private def assertSameRows(got: DataFrame, want: DataFrame, label: String): Unit = {
@@ -340,6 +356,29 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assertSameRows(
         MappingEngine.mapSeries(t1, t2, MappingConfig(periodUnit = unit)),
         relationalMapping(t1, t2, MappingConfig(periodUnit = unit)), s"mapSeries $unit")
+      // the stored-model run: every route, a null stored lag, an unknown
+      // method, a key only in t2, a model row for a key absent from t1;
+      // K_ONLY1, K_SHORT and K_MID have no model row
+      val model = Seq[(String, String, Option[Int])](
+        ("K_LAG1", "Correlation", Some(1)),
+        ("K_GAPS", "Either (prefer Correlation for simplicity)", Some(2)),
+        ("K_DUPS", "DTW", Some(0)),
+        ("K_NOISE", "DTW", None),
+        ("K_CONST", "Complex - Manual Review", Some(0)),
+        ("K_TWO", "Unknown", Some(1)),
+        ("K_OUTSIDE", "Correlation", None),
+        ("K_ONLY2", "Correlation", Some(0)),
+        ("K_ABSENT", "Correlation", Some(1))).toDF("key", "recommended_method", "optimal_lag")
+      val serveCfg = MappingConfig(periodUnit = unit)
+      val served = Pipeline.run(t1, t2, model, serveCfg, "served")
+      assert(served.columns.last == "pipeline_run_id", unit)
+      assertSameRows(served.drop("pipeline_run_id"), relationalServe(t1, t2, model, serveCfg), s"served $unit")
+      val servedBy = served.select($"key", $"method", $"lag_offset").distinct()
+        .collect().map(r => r.getString(0) -> (r.getString(1), Option(r.get(2)))).toMap
+      assert(servedBy == Map(
+        "K_LAG1" -> ("correlation", Some(1)), "K_GAPS" -> ("correlation", Some(2)),
+        "K_DUPS" -> ("dtw", None), "K_NOISE" -> ("dtw", None),
+        "K_SHORT" -> ("correlation", Some(1)), "K_MID" -> ("correlation", Some(1))), unit)
     }
   }
 

@@ -6,6 +6,7 @@ import graft.streaming.EventsStream
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 import org.scalatest.funsuite.AnyFunSuite
 
 class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
@@ -165,37 +166,6 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  test("broadcastSummaries=false plans no forced broadcast; results unchanged") {
-    val (t1, t2) = seriesPair(3, 6)
-    val recs = Seq(
-      ("K1", "Correlation", 1),
-      ("K2", "DTW", 0)
-    ).toDF("key", "recommended_method", "optimal_lag")
-    val forced = Pipeline.run(t1, t2, recs, cfg, "run_bc")
-    val gated = Pipeline.run(t1, t2, recs, cfg.copy(broadcastSummaries = false), "run_bc")
-    assert(forced.queryExecution.analyzed.toString.contains("ResolvedHint"))
-    assert(!gated.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "broadcastSummaries=false must leave join strategy to Catalyst/AQE")
-    val a = forced.drop("pipeline_run_id").collect().map(_.toString).sorted
-    val b = gated.drop("pipeline_run_id").collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-  }
-
-  test("precomputed DTW summaries reproduce the in-run DTW segment exactly") {
-    val (t1, t2) = seriesPair(3, 6)
-    val recs = Seq(
-      ("K1", "DTW", 0),
-      ("K2", "Correlation", 1)
-    ).toDF("key", "recommended_method", "optimal_lag")
-    val merged = SeriesTable.merge(t1, t2)
-    val summaries = graft.operators.DtwMapping.summarize(merged, cfg).toDF()
-    val direct = Pipeline.run(t1, t2, recs, cfg, "run_pre")
-    val reused = Pipeline.run(t1, t2, recs, cfg, "run_pre", dtwSummaries = Some(summaries))
-    val a = direct.collect().map(_.toString).sorted
-    val b = reused.collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-  }
-
   test("productionRun: validate -> map -> save -> QA -> SLA -> metadata, end to end") {
     val (t1, t2) = seriesPair(4, 8)
     val merged = SeriesTable.merge(t1, t2)
@@ -262,6 +232,85 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(groups.contains(sentinel), "the sentinel job start never reached the listener")
       (groups.toArray.count(_ == probe), result)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("a model with two rows for one key fails the run, naming the key") {
+    val (t1, t2) = seriesPair(2, 6)
+    val recs = Seq(("K1", "Correlation", 1), ("K1", "Correlation", 2))
+      .toDF("key", "recommended_method", "optimal_lag")
+    val e = intercept[Exception](Pipeline.run(t1, t2, recs, cfg, "run_dup").collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("model has 2 rows for key=K1")), e)
+  }
+
+  test("keys that emit no rows are not bounded by maxSeriesLength; null-key model rows are ignored") {
+    val (t1, t2) = seriesPair(3, 8)
+    val t2Only = t2.union(t2.filter(col("key") === "K1").withColumn("key", lit("K9")))
+    val recs = Seq[(String, String, Option[Int])](
+      ("K1", "Complex - Manual Review", Some(0)),
+      ("K2", "Correlation", None),
+      ("K3", "Something else", Some(1)),
+      (null, "Correlation", Some(1)),
+      (null, "DTW", None)).toDF("key", "recommended_method", "optimal_lag")
+    // every series has 8 periods > 4: a key that reached a route reading
+    // its series would fail the job
+    val out = Pipeline.run(t1, t2Only, recs, cfg.copy(maxSeriesLength = 4), "run_quiet")
+    assert(out.count() == 0)
+  }
+
+  test("productionRun with an empty mapping reports ALERT instead of failing the read-back") {
+    val (t1, t2) = seriesPair(3, 6)
+    val recs = Seq("K1", "K2", "K3").map(k => (k, "Complex - Manual Review", 0))
+      .toDF("key", "recommended_method", "optimal_lag")
+    withTempDir("graft_empty") { dir =>
+      try {
+        val res = Pipeline.productionRun(spark, t1, t2, recs, cfg, "r0", dir, "prod_empty_test")
+        assert(!res.slaMet)
+        assert(res.mapping.count() == 0)
+        assert(res.mapping.columns.toSeq ==
+          Seq("key", "value1", "time2", "value2", "lag_offset", "method", "pipeline_run_id", "time1"))
+        val status = res.sla.collect().map(r => r.getAs[String]("check") -> r.getAs[String]("status")).toMap
+        assert(status("total_mappings") == "ALERT")
+        assert(status("sla_met") == "ALERT")
+        assert(spark.sql("SELECT COUNT(*) FROM prod_empty_test").as[Long].head() == 0L)
+        // every registration declares one schema: the read-back, a run's
+        // table and a restored table all type time1 DATE, and a restore
+        // to the empty run needs no data file to infer it from
+        val full = Seq(("K1", "Correlation", 1)).toDF("key", "recommended_method", "optimal_lag")
+        Pipeline.productionRun(spark, t1, t2, full, cfg, "r1", dir, "prod_empty_test")
+        def time1Type = spark.table("prod_empty_test").schema("time1").dataType
+        assert(res.mapping.schema("time1").dataType == DateType)
+        assert(time1Type == DateType)
+        Pipeline.restoreRun(spark, dir, "prod_empty_test", "r0")
+        assert(spark.sql("SELECT COUNT(*) FROM prod_empty_test").as[Long].head() == 0L)
+        assert(time1Type == DateType)
+        assert(spark.table("prod_empty_test").schema == res.mapping.schema)
+      } finally spark.sql("DROP TABLE IF EXISTS prod_empty_test")
+    }
+  }
+
+  test("QA and SLA on an empty t1 with ANSI on: coverage is null, FAIL and ALERT") {
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val (t1, t2) = seriesPair(2, 4)
+      val noKeys = t1.filter(col("key") === "none")
+      val recs = Seq(("K1", "Correlation", 1)).toDF("key", "recommended_method", "optimal_lag")
+      val mapping = Pipeline.run(noKeys, t2, recs, cfg, "run_none")
+      val qa = graft.operators.QualityChecks.check(mapping, noKeys).head()
+      assert(qa.getAs[Long]("total_keys") == 0L)
+      assert(qa.isNullAt(qa.fieldIndex("coverage_pct")))
+      assert(qa.getAs[String]("coverage_status") == "FAIL")
+      val status = graft.operators.Sla.report(mapping, noKeys, durationSec = 1.0)
+        .collect().map(r => r.getAs[String]("check") -> r.getAs[String]("status")).toMap
+      assert(status("coverage_pct") == "ALERT")
+      assert(status("sla_met") == "ALERT")
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("productionRun: the QA row is collected once; qa and sla are local, sla reads qa") {
@@ -498,10 +547,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("m11 segments on the STAGED recommendation model, not a live training plan") {
-    // Pipeline.run's three segment branches each reference the model with
-    // a different pushed-down filter; an unmaterialized model plan would
-    // re-run the per-lag corr scan per branch (NOTES.md round-3). Lock
-    // that building m11 populates the shared staging entry.
+    // The model is trained once and served from its staged table, as the
+    // reference serves from its store; a live training plan would re-run
+    // the lag scan and DTW for every query that reads it. Lock that
+    // building m11 populates the shared staging entry.
     // start from a clean slate so the assertion can't pass vacuously off
     // an earlier test's staging, and probe with contains (no side effect
     // that could poison the shared cache on the failure path)

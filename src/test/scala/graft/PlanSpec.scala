@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
-import graft.operators.{LagCorrelation, MappingEngine}
+import graft.operators.{LagCorrelation, MappingEngine, Pipeline}
 import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
@@ -267,21 +267,28 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
     def table(scale: Double) =
       (for (k <- Seq("A", "B", "C"); m <- 1 to 8) yield (k, f"2024-$m%02d", scale * m * (k.head - 'A' + 1)))
         .toDF("k", "t", "v")
-    val out = MappingEngine.mapTables(table(1.0), table(2.0), "k", "t", "v", "v", cfg)
-    out.collect()
-    val plan = out.queryExecution.executedPlan // the final adaptive plan, after the collect
-    val shuffles = collect(plan) { case s: ShuffleExchangeExec => s.outputPartitioning }
-    assert(shuffles.length == 2, plan)
-    shuffles.foreach {
-      case HashPartitioning(Seq(a: Attribute), _) => assert(a.name == "key", plan)
-      case other                                  => fail(s"not a hash of key: $other\n$plan")
+    def project(scale: Double, name: String) = SeriesTable.project(table(scale), "k", "t", "v", cfg.periodUnit, name)
+    // the stored-model run serves from the same kernel; its model rows ride
+    // under t1's exchange
+    val model = Seq(("A", "Correlation", 1), ("B", "DTW", 0)).toDF("key", "recommended_method", "optimal_lag")
+    Seq(
+      MappingEngine.mapTables(table(1.0), table(2.0), "k", "t", "v", "v", cfg),
+      Pipeline.run(project(1.0, "table1"), project(2.0, "table2"), model, cfg, "plan")).foreach { out =>
+      out.collect()
+      val plan = out.queryExecution.executedPlan // the final adaptive plan, after the collect
+      val shuffles = collect(plan) { case s: ShuffleExchangeExec => s.outputPartitioning }
+      assert(shuffles.length == 2, plan)
+      shuffles.foreach {
+        case HashPartitioning(Seq(a: Attribute), _) => assert(a.name == "key", plan)
+        case other                                  => fail(s"not a hash of key: $other\n$plan")
+      }
+      val relational = collect(plan) {
+        case w: WindowExec           => w
+        case w: WindowGroupLimitExec => w
+        case j: BaseJoinExec         => j
+      }
+      assert(relational.isEmpty, plan)
     }
-    val relational = collect(plan) {
-      case w: WindowExec           => w
-      case w: WindowGroupLimitExec => w
-      case j: BaseJoinExec         => j
-    }
-    assert(relational.isEmpty, plan)
   }
 
   test("m17: SLA prunes the QA row to its key counts; no (key, time1, time2) distinct count") {
