@@ -68,10 +68,9 @@ object SeriesTable {
 
   /** Canonical table: [[project]], then multiple observations in the same
     * period are SUMMED, so the output is guaranteed one row per (key,
-    * period) — the invariant the lag-scan window formulation and the
-    * merge join both rely on. (The reference silently mis-slices on
-    * duplicate months inside its UDF; aggregating at ingest is the
-    * well-defined semantic.) */
+    * period) — the invariant the lag scan and the merge join both rely
+    * on. (The reference silently mis-slices on duplicate months inside
+    * its UDF; aggregating at ingest is the well-defined semantic.) */
   def canonicalize(
       df: DataFrame,
       keyCol: String,

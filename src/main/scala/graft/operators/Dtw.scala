@@ -2,6 +2,10 @@ package graft.operators
 
 import graft.core.PathStep
 
+/** One point of an entity's merged series: (period ISO string, v1, v2),
+  * the input of [[Dtw.align]]. */
+final case class PeriodPoint(period: String, v1: Double, v2: Double)
+
 /** Dynamic Time Warping kernel — pure Scala, primitive arrays, no
   * dependencies. Runs in-JVM inside `mapGroups` (no Arrow / Python worker
   * boundary, unlike the reference's pandas UDF).
@@ -125,8 +129,7 @@ object Dtw {
     * label each path step with its periods and values. An empty series
     * gets the reference's fallback, zero cost and an empty identity path
     * (mapping_engine.py:313-315); any other kernel error propagates.
-    * Shared by DtwMapping.summarize, the mapping kernel and the SQL `dtw`
-    * aggregate. */
+    * Shared by DtwMapping.summarize and the mapping kernel. */
   def align(
       points: Seq[PeriodPoint],
       window: Option[Int],

@@ -1,28 +1,23 @@
 package graft.operators
 
-import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.{MappingConfig, SeriesTable}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Lag-scan Pearson correlation — the reference's flagship method
-  * (/root/reference/mapping_engine.py:117-160, 241-264), re-expressed 100%
-  * relationally (SURVEY.md §2.4 A10a): no UDF, whole-stage-codegen'd, and
-  * DuckDB-oracle-able.
+  * (/root/reference/mapping_engine.py:117-160, 241-264).
   *
-  * Shape: one window pass over the merged series (lead partners for
-  * positions 0..maxLag), per-calendar-lag `corr` accumulator columns in a
-  * single hash aggregate (no row blowup), then window-argmax the best lag
-  * per key.
-  *
-  * Scale notes (100 TB): ONE shuffle of |merged| by key (the window),
-  * partial-aggregated corr accumulators, and an argmax over the tiny
-  * per-(key,lag) table (≤ maxLag+1 rows per entity). No driver-side
-  * collection anywhere.
+  * The scan itself is the per-entity kernel's ([[MappingKernel.lagCorrTable]]):
+  * one exchange of the merged series by key, one call per key that walks
+  * the calendar lags 0..maxLag. The relational operators here stage its
+  * per-lag table: the best-lag argmax, the nested `all_lags` summary and
+  * the lag-shifted join-back. No driver-side collection anywhere.
   */
 object LagCorrelation {
 
-  /** Per-(key, lag) correlation table: `(key, lag, correlation, n_overlap)`.
+  /** Per-(key, lag) correlation table: `(key, lag, correlation, n_overlap)`,
+    * from a merged table with one row per (key, period).
     *
     * Semantics preserved from the reference kernel: a lag is skipped unless
     * at least `minOverlap` (=2) aligned points exist
@@ -30,61 +25,9 @@ object LagCorrelation {
     * dropped (pearsonr-NaN guard, mapping_engine.py:153-156). Alignment is
     * calendar-based: v1(t) pairs with v2(t + lag), equivalent to the
     * reference's positional slicing on gap-free series (SURVEY.md §7.4).
-    */
-  def lagCorrTable(merged: DataFrame, cfg: MappingConfig): DataFrame = {
-    graft.core.GraftSession.tune(merged.sparkSession)
-    // Window formulation: ONE shuffle of `merged` by key (the window
-    // partition), instead of self-joining the 7x lag-exploded table
-    // (which shuffles both sides). For each row, look 0..maxLag POSITIONS
-    // ahead with lead(struct(period, v2)); each partner's true calendar
-    // lag is its period difference, and since periods are strictly
-    // increasing, calendar-lag <= maxLag implies position-offset <= maxLag
-    // — so scanning maxLag positions finds every calendar partner even
-    // with gaps.
-    //
-    // No row blowup either: instead of exploding maxLag+1 partner rows
-    // per input row, each calendar lag L gets its OWN aggregate column —
-    // partner_L = the (unique) positional lead at calendar distance L
-    // (coalesce over positions 0..L) — and `corr` skips null pairs, so
-    // one pass with maxLag+1 corr accumulators replaces the exploded
-    // aggregate. The per-key 7-column result unpivots at the end (tiny).
-    // Semantics identical to the self-join on period+lag (locked by the
-    // DuckDB oracle, which keeps the join formulation).
-    val w = Window.partitionBy(col("key")).orderBy(col("period"))
-    val unitDiff: (Column, Column) => Column = cfg.periodUnit match {
-      case graft.core.PeriodUnit.Day   => (a, b) => datediff(a, b)
-      case graft.core.PeriodUnit.Month => (a, b) => months_between(a, b).cast("int")
-    }
-    val lags = 0 to cfg.maxLag
-    val withLeads = merged.select(
-      col("key") +: col("period") +: col("v1") +:
-        lags.map(l =>
-          lead(struct(col("period").as("p"), col("v2").as("v")), l).over(w).as(s"pv$l")): _*)
-    val withPartners = withLeads.select(
-      col("key") +: col("v1") +:
-        lags.map { calLag =>
-          coalesce(
-            (0 to calLag).map { pos =>
-              val pv = col(s"pv$pos")
-              when(pv.isNotNull && unitDiff(pv("p"), col("period")) === calLag, pv("v"))
-            }: _*).as(s"partner$calLag")
-        }: _*)
-    val aggregated = withPartners
-      .groupBy(col("key"))
-      .agg(
-        corr(col("v1"), col(s"partner${lags.head}")).as(s"corr${lags.head}"),
-        lags.tail.map(l => corr(col("v1"), col(s"partner$l")).as(s"corr$l")) ++
-          lags.map(l => count(col(s"partner$l")).as(s"cnt$l")): _*)
-    aggregated
-      .select(
-        col("key"),
-        explode(array(lags.map(l =>
-          struct(lit(l).as("lag"), col(s"corr$l").as("correlation"), col(s"cnt$l").as("n_overlap"))): _*))
-          .as("x"))
-      .select(col("key"), col("x.lag").as("lag"), col("x.correlation").as("correlation"), col("x.n_overlap").as("n_overlap"))
-      .filter(col("n_overlap") >= cfg.minOverlap)
-      .filter(col("correlation").isNotNull && !isnan(col("correlation")))
-  }
+    * A key's merged series is held in one task. */
+  def lagCorrTable(merged: DataFrame, cfg: MappingConfig): DataFrame =
+    MappingKernel.lagCorrTable(merged, cfg)
 
   /** Best lag per key via window argmax. Tie-break mirrors the reference's
     * strict `>` (keeps the earliest best lag, mapping_engine.py:154): order

@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
   * the shape of the reference's grouped-map UDF per entity
   * (mapping_engine.py:241-264, 296-335), in-JVM.
   *
-  * `autoMapping` is the staged relational composition of the same answer
-  * (canonicalize → merge → lag scan → argmax → join-back, DTW on the
-  * rest). It serves callers that already staged the merged set, the
-  * best-lag table or the DTW summaries, and it is the oracle the kernel
-  * is tested against. Differences from the reference, by design
+  * `autoMapping` is the staged composition of the same answer
+  * (canonicalize → merge → the kernel's lag scan → argmax → relational
+  * join-back, DTW on the rest). It serves callers that already staged the
+  * merged set, the best-lag table or the DTW summaries, and its split,
+  * join-back and union are the oracle the kernel's routing is tested
+  * against (the scan's oracle is a naive scan in the test). Differences
+  * from the reference, by design
   * (SURVEY.md §7):
   *   - auto mode computes the best correlation ONCE per entity and routes
   *     the entity on it — the reference recomputes its correlation UDF a
@@ -104,44 +106,5 @@ object MappingEngine {
     }
     // Schema union across method-specific columns (mapping_engine.py:746).
     corrPart.unionByName(dtwPart, allowMissingColumns = true)
-  }
-
-  /** Run statistics, mirroring GenericMappingEngine.stats
-    * (mapping_engine.py:582-589). */
-  final case class MappingStats(
-      totalMappings: Long,
-      inputTable1Rows: Long,
-      inputTable2Rows: Long,
-      mergedRows: Long,
-      processingTimeSeconds: Double,
-      throughputRowsPerSec: Double)
-
-  /** mapTables + materialization + stats. The canonical inputs are cached
-    * for the duration (each feeds the mapping AND the stat counts) and
-    * unpersisted before returning; the returned result stays cached —
-    * the caller owns its lifecycle. */
-  def mapTablesWithStats(
-      table1: DataFrame,
-      table2: DataFrame,
-      keyCol: String,
-      timeCol: String,
-      value1Col: String,
-      value2Col: String,
-      cfg: MappingConfig = MappingConfig()): (DataFrame, MappingStats) = {
-    val t0 = System.nanoTime()
-    val t1 = SeriesTable.canonicalize(table1, keyCol, timeCol, value1Col, cfg.periodUnit, "table1").cache()
-    val t2 = SeriesTable.canonicalize(table2, keyCol, timeCol, value2Col, cfg.periodUnit, "table2").cache()
-    try {
-      val result = mapSeries(t1, t2, cfg).cache()
-      val total = result.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val rows1 = t1.count()
-      val rows2 = t2.count()
-      val mergedRows = SeriesTable.merge(t1, t2).count()
-      (result, MappingStats(total, rows1, rows2, mergedRows, sec, total / math.max(sec, 1e-9)))
-    } finally {
-      t1.unpersist(blocking = false)
-      t2.unpersist(blocking = false)
-    }
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import java.time.LocalDate
 
 import graft.core.{MappingConfig, PeriodUnit}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 
 /** The per-entity mapping kernel: one cogroup of the two series by key,
@@ -12,19 +12,22 @@ import org.apache.spark.sql.functions._
   * (mapping_engine.py:241-264, 296-335).
   *
   * The job is one hash exchange on `key` per input and one task stage.
-  * Its rows are those of the staged relational composition
-  * (SeriesTable.canonicalize → merge → LagCorrelation.lagCorrTable →
-  * bestLag → mapping, DtwMapping.mapping, MappingEngine.autoMapping),
-  * which stays as the reference path and the differential test's oracle:
+  * Its rules:
   *   - duplicate periods are summed with Spark `sum`'s null rule (null only
   *     when every value is null); null keys and periods are dropped;
-  *   - the lag scan pairs merged periods (p, p + L) on the calendar for
-  *     L = 0..maxLag, counts `n_overlap` as `count(partner)`, skips a lag
-  *     under `minOverlap` or with an undefined correlation, and picks the
-  *     best by `round(corr, 6)` descending, then lag ascending;
+  *   - the lag scan ([[lagScan]], the engine's one calendar lag walk)
+  *     pairs merged periods (p, p + L) for L = 0..maxLag, counts
+  *     `n_overlap` as the pairs whose v2 is present, skips a lag under
+  *     `minOverlap` or with an undefined correlation, and the best lag is
+  *     the highest `round(corr, 6)`, then the lowest lag;
   *   - the correlation join-back maps the key's canonical t1 rows, not only
   *     merged ones, to t2 at p + lag (SURVEY.md §7.3);
   *   - DTW runs [[Dtw.align]] on the merged series.
+  * [[lagCorrTable]] exposes the scan's per-lag rows, so training, the
+  * staged queries and `mapTables` share one scan. The differential test
+  * checks the scan against a naive calendar scan, and the join-back, DTW
+  * and auto routing against the staged relational composition
+  * (LagCorrelation.mapping, DtwMapping.mapping, MappingEngine.autoMapping).
   *
   * A key's two series are held in memory, so `maxSeriesLength` bounds
   * both of them for every method. The kernel's Pearson cannot divide by
@@ -97,6 +100,37 @@ object MappingKernel {
     rows.toDF().select(rowColumns.map(col): _*)
   }
 
+  /** The per-(key, lag) table of a merged (key, period, v1, v2) table with
+    * one row per (key, period): `(key, lag, correlation, n_overlap)` for
+    * every lag [[lagScan]] keeps. A key's merged series is collected into
+    * one task, so `maxSeriesLength` bounds it. The scan runs on the
+    * aggregate of the one `key` exchange, so the table stays partitioned
+    * by its key column: an argmax over it (LagCorrelation.bestLag) needs
+    * no exchange of its own. */
+  def lagCorrTable(merged: DataFrame, cfg: MappingConfig): DataFrame = {
+    val scan = udf { (key: String, points: Seq[Row]) =>
+      if (points.length > cfg.maxSeriesLength)
+        throw new IllegalStateException(
+          s"merged series for key=$key has ${points.length} periods > maxSeriesLength=${cfg.maxSeriesLength}")
+      val pts = points.sortBy(_.getInt(0))
+      def values(i: Int) = pts.map(p => if (p.isNullAt(i)) None else Some(p.getDouble(i))).toArray
+      lagScan(pts.map(_.getInt(0)).toArray, values(1), values(2), cfg).map { case (lag, r, n) =>
+        (lag, r, n.toLong)
+      }.toSeq
+    }
+    val points = merged.select(
+        col("key").cast("string").as("key"),
+        periodIndex(col("period"), cfg.periodUnit).as("period"),
+        col("v1").cast("double").as("v1"),
+        col("v2").cast("double").as("v2"))
+      .filter(col("key").isNotNull && col("period").isNotNull)
+    hashByKey(points)
+      .groupBy(col("key"))
+      .agg(scan(col("key"), collect_list(struct(col("period"), col("v1"), col("v2")))).as("lags"))
+      .select(col("key"), inline(col("lags")))
+      .toDF("key", "lag", "correlation", "n_overlap")
+  }
+
   private def observations(t: DataFrame, cfg: MappingConfig): DataFrame =
     t.select(
         col("key").cast("string").as("key"),
@@ -110,10 +144,11 @@ object MappingKernel {
     * job's kernels on one core). Both sides hash `key` into the same
     * count, so the cogroup adds no exchange of its own, and
     * groupBy(col).as groups on the column itself: no AppendColumns node. */
-  private def byKey[T: Encoder](t: DataFrame): KeyValueGroupedDataset[String, T] = {
-    val partitions = t.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    t.repartition(partitions, col("key")).groupBy(col("key")).as[String, T](Encoders.STRING, implicitly)
-  }
+  private def hashByKey(t: DataFrame): DataFrame =
+    t.repartition(t.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("key"))
+
+  private def byKey[T: Encoder](t: DataFrame): KeyValueGroupedDataset[String, T] =
+    hashByKey(t).groupBy(col("key")).as[String, T](Encoders.STRING, implicitly)
 
   private def periodIndex(period: Column, unit: PeriodUnit): Column = unit match {
     case PeriodUnit.Day   => unix_date(period)
@@ -201,18 +236,20 @@ object MappingKernel {
     }
   }
 
-  /** The best (lag, round(corr, 6)) over calendar lags 0..maxLag, as
-    * LagCorrelation.bestLag(lagCorrTable(merged)) picks it. */
-  private def bestLag(
+  /** The calendar lag scan of one merged series (periods ascending): for
+    * each lag 0..maxLag, pair period p with p + lag, count `n_overlap` as
+    * the pairs whose v2 is present, and keep the lag when `n_overlap >=
+    * minOverlap` and the Pearson r of its pairs with both values is
+    * defined. Yields (lag, r, n_overlap). */
+  private def lagScan(
       period: Array[Int],
       v1: Array[Option[Double]],
       v2: Array[Option[Double]],
-      cfg: MappingConfig): Option[(Int, Double)] = {
+      cfg: MappingConfig): Iterator[(Int, Double, Int)] = {
     val n = period.length
     val xs = new Array[Double](n)
     val ys = new Array[Double](n)
-    var best: Option[(Int, Double)] = None
-    for (lag <- 0 to cfg.maxLag) {
+    (0 to cfg.maxLag).iterator.flatMap { lag =>
       var overlap = 0
       var pairs = 0
       var j = 0
@@ -223,16 +260,22 @@ object MappingKernel {
           if (v1(i).isDefined) { xs(pairs) = v1(i).get; ys(pairs) = v2(j).get; pairs += 1 }
         }
       }
-      if (overlap >= cfg.minOverlap) {
-        val r = pearson(xs, ys, pairs)
-        if (!r.isNaN) {
-          val c = round6(r)
-          if (best.forall(c > _._2)) best = Some((lag, c))
-        }
-      }
+      val r = if (overlap >= cfg.minOverlap) pearson(xs, ys, pairs) else Double.NaN
+      if (r.isNaN) None else Some((lag, r, overlap))
     }
-    best
   }
+
+  /** The best (lag, round(corr, 6)) of [[lagScan]]: the highest rounded
+    * correlation, then the lowest lag, as LagCorrelation.bestLag ranks. */
+  private def bestLag(
+      period: Array[Int],
+      v1: Array[Option[Double]],
+      v2: Array[Option[Double]],
+      cfg: MappingConfig): Option[(Int, Double)] =
+    lagScan(period, v1, v2, cfg).foldLeft(Option.empty[(Int, Double)]) { case (best, (lag, r, _)) =>
+      val c = round6(r)
+      if (best.forall(c > _._2)) Some((lag, c)) else best
+    }
 
   /** Map each canonical t1 row at p to the t2 row at p + lag. */
   private def joinBack(key: String, s1: Series, s2: Series, lag: Int, corr: Option[Double], cfg: MappingConfig) = {
@@ -277,7 +320,7 @@ object MappingKernel {
   /** Pearson r of the first `len` pairs, with the update order of Spark's
     * `corr` aggregate (so both give the same bits on the same row order).
     * NaN when undefined: fewer than 2 pairs, or a zero variance. */
-  def pearson(x: Array[Double], y: Array[Double], len: Int): Double = {
+  private def pearson(x: Array[Double], y: Array[Double], len: Int): Double = {
     var n = 0.0
     var xAvg = 0.0
     var yAvg = 0.0

@@ -411,8 +411,7 @@ object Temporal {
     *
     * Position-dependent weights are outside what a frame aggregate can
     * express, so the kernel materializes `span` lag columns over ONE
-    * window sort (the [[LagCorrelation.lagCorrTable]] lead-scan idiom in
-    * reverse) and folds them in-row: still a single exchange + sort per
+    * window sort and folds them in-row: still a single exchange + sort per
     * key, everything codegen'd, no self-join of the fact table. `span` is
     * a config-sized constant (plan width grows with it, data does not). */
   def ewma(series: DataFrame, alpha: Double, span: Int): DataFrame = {

@@ -67,7 +67,7 @@ object MappingQueries {
         round(col("v1"), 6).as("v1"),
         round(col("v2"), 6).as("v2"))
     }),
-    // A10a relational lag-corr table: explode lags + self-join + corr agg
+    // A10 per-(key, lag) table: the per-entity kernel's calendar lag scan
     "m3_lag_corr" -> ((s, dir) => {
       LagCorrelation.lagCorrTable(merged(s, dir), cfg).select(
         col("key"),
@@ -317,7 +317,7 @@ object MappingQueries {
         round(percentile(col("value"), lit(0.5)).over(w), 6).as("roll_med"))
     }),
     // autocorrelation function: the lag-corr scan against the series
-    // ITSELF (v2 = v1) — same one-shuffle window kernel as m3
+    // ITSELF (v2 = v1) — the same per-entity kernel scan as m3
     "m24_acf" -> ((s, dir) => {
       val self = Tables.engagementSeries(s, dir)
         .select(col("key"), col("period"), col("value").as("v1"), col("value").as("v2"))

@@ -1,13 +1,15 @@
 package graft
 
-import graft.operators.{Dtw, PeriodPoint}
+import graft.core.{MappingConfig, PeriodUnit}
+import graft.operators.{Dtw, DtwMapping, PeriodPoint}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kernel goldens generated by executing the reference's own
   * dtw_distance/normalize_series (/root/reference/mapping_engine.py:109-216)
   * on fixed inputs — our kernel must reproduce cost AND path exactly,
   * including the backtrack tie-break (up, left, diag). */
-class DtwSpec extends AnyFunSuite {
+class DtwSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private val goldens: Seq[(String, Array[Double], Array[Double], Option[Int], Boolean, Double, Array[(Int, Int)])] = Seq(
     ("identical", Array[Double](1.0, 2, 3, 4, 5), Array[Double](1.0, 2, 3, 4, 5), None, true, 0.0,
@@ -135,5 +137,20 @@ class DtwSpec extends AnyFunSuite {
     val w = 3
     val (_, path) = Dtw.distance(a, b, Some(w))
     path.foreach { case (i, j) => assert(math.abs(i - j) <= w, s"($i,$j) outside band $w") }
+  }
+
+  test("cost-percentile filter keeps the cheap alignments") {
+    import spark.implicits._
+    val merged = (1 to 10).flatMap { k =>
+      (1 to 6).map(m => (s"K$k", f"2024-$m%02d-01", m.toDouble, m.toDouble + (if (k > 8) 50.0 * m else 0.0)))
+    }.toDF("key", "p", "v1", "v2")
+      .select($"key", to_date($"p").as("period"), $"v1", $"v2")
+    val summaries = DtwMapping
+      .summarize(merged, MappingConfig(periodUnit = PeriodUnit.Month, dtwNormalize = false))
+      .toDF()
+    val kept = DtwMapping.filterByCostPercentile(summaries, 0.8)
+      .select($"key").as[String].collect().toSet
+    assert(kept.size >= 8 && !kept.contains("K10") || kept.size >= 8 && !kept.contains("K9") || kept.size == 8)
+    assert((1 to 8).forall(k => kept.contains(s"K$k")))
   }
 }

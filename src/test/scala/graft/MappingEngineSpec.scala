@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
-import graft.operators.{DtwMapping, LagCorrelation, MappingEngine, Pipeline}
+import graft.operators.{Comparison, DtwMapping, LagCorrelation, MappingEngine, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -287,14 +287,32 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     (t1.toDF("k", "t", "v"), t2.toDF("k", "t", "v"))
   }
 
-  /** The relational composition mapTables replaces, on canonical tables. */
+  /** [[NaiveLagScan.scan]] of every key of `merged`, on the driver:
+    * (key, lag, r, n_overlap) ordered by key and lag. */
+  private def naiveScan(merged: DataFrame, cfg: MappingConfig): Seq[(String, Int, Double, Long)] = {
+    def value(r: org.apache.spark.sql.Row, c: String) = if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Double](c))
+    merged.collect().toSeq.groupBy(_.getAs[String]("key")).toSeq.sortBy(_._1).flatMap { case (key, rows) =>
+      val points = rows.map(r =>
+        NaiveLagScan.Point(r.getAs[java.sql.Date]("period").toLocalDate, value(r, "v1"), value(r, "v2")))
+      NaiveLagScan.scan(points, cfg.periodUnit, cfg.maxLag, cfg.minOverlap).map { case (lag, c, n) => (key, lag, c, n) }
+    }
+  }
+
+  /** The naive scan's best-lag table: (key, optimal_lag, correlation). */
+  private def naiveBestLag(merged: DataFrame, cfg: MappingConfig): DataFrame =
+    naiveScan(merged, cfg).groupBy(_._1).toSeq.flatMap { case (key, rows) =>
+      NaiveLagScan.best(rows.map(r => (r._2, r._3, r._4))).map { case (lag, c) => (key, lag, c) }
+    }.toDF("key", "optimal_lag", "correlation")
+
+  /** The staged composition mapTables replaces, on canonical tables, with
+    * the naive scan's best lags: the relational join-back, DTW mapping and
+    * auto split are the kernel's oracle for everything after the scan. */
   private def relationalMapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
     val merged = SeriesTable.merge(t1, t2)
     cfg.method match {
-      case "correlation" =>
-        LagCorrelation.mapping(t1, t2, LagCorrelation.bestLag(LagCorrelation.lagCorrTable(merged, cfg)), cfg)
-      case "dtw"  => DtwMapping.mapping(merged, cfg)
-      case "auto" => MappingEngine.autoMapping(merged, t1, t2, cfg)
+      case "correlation" => LagCorrelation.mapping(t1, t2, naiveBestLag(merged, cfg), cfg)
+      case "dtw"         => DtwMapping.mapping(merged, cfg)
+      case "auto"        => MappingEngine.autoMapping(merged, t1, t2, cfg, bestLag = Some(naiveBestLag(merged, cfg)))
     }
   }
 
@@ -334,6 +352,17 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val (raw1, raw2) = kernelFixture(unit)
       val t1 = SeriesTable.canonicalize(raw1, "k", "t", "v", unit)
       val t2 = SeriesTable.canonicalize(raw2, "k", "t", "v", unit)
+      // lagCorrTable's per-lag rows are the naive scan's: the same lags and
+      // overlaps, correlations within 1e-9
+      val merged = SeriesTable.merge(t1, t2)
+      val scanCfg = MappingConfig(periodUnit = unit)
+      val want = naiveScan(merged, scanCfg)
+      val got = LagCorrelation.lagCorrTable(merged, scanCfg).as[(String, Int, Double, Long)]
+        .collect().toSeq.sortBy(r => (r._1, r._2))
+      assert(want.map(_._1).toSet == Set("K_LAG1", "K_GAPS", "K_DUPS", "K_TWO", "K_OUTSIDE", "K_SHORT", "K_MID",
+        "K_NOISE"), s"fixture coverage $unit")
+      assert(got.map(r => (r._1, r._2, r._4)) == want.map(r => (r._1, r._2, r._4)), s"lags $unit")
+      got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) <= 1e-9, s"$unit: $g vs $w") }
       val configs = Seq("correlation", "dtw", "auto").map(m => MappingConfig(method = m, periodUnit = unit)) :+
         MappingConfig(method = "auto", periodUnit = unit, autoCorrThreshold = 0.5, minCorrelation = 0.9)
       configs.foreach { cfg =>
@@ -405,18 +434,26 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       Seq(("K_TWO", "2024-01", 2.0), ("K_TWO", "2024-02", 1.0))
     val key = "spark.sql.ansi.enabled"
     val saved = spark.conf.getOption(key)
-    def run(ansi: Boolean, method: String) = {
+    def run(ansi: Boolean, label: String)(df: => DataFrame) = {
       spark.conf.set(key, ansi.toString)
-      val rows = MappingEngine.mapTables(
-        rows1.toDF("k", "t", "v"), rows2.toDF("k", "t", "v"), "k", "t", "v", "v", cfg.copy(method = method))
-        .collect().map(_.toString).sorted.toSeq
-      assert(spark.conf.get(key) == ansi.toString, s"$method changed $key")
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      assert(spark.conf.get(key) == ansi.toString, s"$label changed $key")
       rows
     }
+    val (raw1, raw2) = (rows1.toDF("k", "t", "v"), rows2.toDF("k", "t", "v"))
+    def merged = SeriesTable.merge(
+      SeriesTable.canonicalize(raw1, "k", "t", "v", PeriodUnit.Month),
+      SeriesTable.canonicalize(raw2, "k", "t", "v", PeriodUnit.Month))
+    def check(label: String)(df: => DataFrame): Unit =
+      assert(run(ansi = true, label)(df) == run(ansi = false, label)(df), label)
     try {
       Seq("auto", "correlation").foreach { method =>
-        assert(run(ansi = true, method) == run(ansi = false, method), method)
+        check(method)(MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", cfg.copy(method = method)))
       }
+      // the staged lag scan and training run the same scan
+      check("bestLag(lagCorrTable)")(LagCorrelation.bestLag(LagCorrelation.lagCorrTable(merged, cfg)))
+      check("recommendationsFromSummaries")(
+        Comparison.recommendationsFromSummaries(merged, DtwMapping.summarize(merged, cfg).toDF(), cfg))
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)

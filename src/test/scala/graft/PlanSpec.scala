@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveS
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.functions.to_date
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression locks: the scale properties the engine
@@ -40,12 +41,23 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("m3: lag scan is window + partial-aggregated corr, no join of exploded table") {
-    val p = plan("m3_lag_corr")
-    assert(p.contains("Window"), p)
-    assert(p.contains("partial_corr") || p.contains("HashAggregate"), p)
-    // the old formulation self-joined after the lag explode
-    assert(!p.contains("SortMergeJoin"), p)
+  test("m3: lag scan is one kernel: one key exchange, no window or join") {
+    import spark.implicits._
+    val merged = (for (k <- Seq("A", "B", "C"); m <- 1 to 8) yield (k, f"2024-$m%02d-01", m.toDouble, (m * m) % 7.0))
+      .toDF("key", "p", "v1", "v2").select($"key", to_date($"p").as("period"), $"v1", $"v2")
+    val out = LagCorrelation.lagCorrTable(merged, MappingConfig(periodUnit = PeriodUnit.Month, maxLag = 2))
+    out.collect()
+    val plan = out.queryExecution.executedPlan // the final adaptive plan, after the collect
+    val shuffles = collect(plan) { case s: ShuffleExchangeExec => s.outputPartitioning }
+    shuffles match {
+      case Seq(HashPartitioning(Seq(a: Attribute), _)) => assert(a.name == "key", plan)
+      case other                                       => fail(s"not one hash of key: $other\n$plan")
+    }
+    val relational = collect(plan) {
+      case w: WindowExec   => w
+      case j: BaseJoinExec => j
+    }
+    assert(relational.isEmpty, plan)
   }
 
   test("d7: LSH candidates come from an equi-join, not a cross join") {

@@ -1,7 +1,7 @@
 package graft
 
-import graft.core.{PeriodUnit, SeriesTable}
-import graft.operators.BestLagAggregator
+import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
+import graft.operators.LagCorrelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,37 +40,34 @@ class ResampleSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(out.toSeq == Seq("2024-01-01", "2024-02-01", "2024-03-01", "2024-04-01"))
   }
 
-  test("SQL best_lag on dense series equals the relational calendar path") {
-    BestLagAggregator.register(spark, maxLag = 3)
+  test("dense series: calendar lag scan equals a positional scan") {
     // dense DAILY series (positional == calendar) with a lag-2 relation:
     // v2(t) = v1(t-2), so corr(v1(t), v2(t+lag)) peaks at lag 2
-    val rows = for (k <- 1 to 4; d <- 0 until 14)
-      yield (s"K$k", java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString,
-        100.0 + 17 * ((d * 3 + k) % 7))
-    val m2 = rows.toDF("key", "p", "v1").select($"key", to_date($"p").as("period"), $"v1")
-    val shifted = m2.withColumn(
-      "v2src", lag($"v1", 2).over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"key").orderBy($"period")))
-      .filter($"v2src".isNotNull)
-      .select($"key", $"period", $"v1", $"v2src".as("v2"))
+    val maxLag = 3
+    val series = (1 to 4).map(k => s"K$k" -> (0 until 14).map(d => 100.0 + 17 * ((d * 3 + k) % 7)))
+    val rows = for ((key, v) <- series; d <- 2 until 14)
+      yield (key, java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString, v(d), v(d - 2))
+    val merged = rows.toDF("key", "p", "v1", "v2").select($"key", to_date($"p").as("period"), $"v1", $"v2")
 
-    shifted.createOrReplaceTempView("dense_merged")
-    val viaSql = spark.sql(
-      """SELECT key, best_lag(CAST(period AS STRING), v1, v2) AS b
-        |FROM dense_merged GROUP BY key""".stripMargin)
-      .select($"key", $"b.optimal_lag", round($"b.correlation", 6).as("c"))
-      .as[(String, Int, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    // the reference's positional scan: slide v1 against v2 by index
+    val positional = series.map { case (key, v) =>
+      val (v1, v2) = (v.drop(2), v.dropRight(2))
+      key -> NaiveLagScan.best((0 to maxLag).flatMap { lag =>
+        val pairs = v1.zip(v2.drop(lag))
+        NaiveLagScan.pearson(pairs).map(r => (lag, r, pairs.length.toLong))
+      }).get
+    }.toMap
 
-    val relational = graft.operators.LagCorrelation.bestLag(
-      graft.operators.LagCorrelation.lagCorrTable(
-        shifted, graft.core.MappingConfig(periodUnit = PeriodUnit.Day, maxLag = 3)))
+    val calendar = LagCorrelation.bestLag(
+      LagCorrelation.lagCorrTable(merged, MappingConfig(periodUnit = PeriodUnit.Day, maxLag = maxLag)))
       .select($"key", $"optimal_lag", $"correlation")
       .as[(String, Int, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
 
-    assert(viaSql.keySet == relational.keySet)
-    viaSql.foreach { case (k, (l, c)) =>
-      assert(l == relational(k)._1, s"$k lag $l != ${relational(k)._1}")
-      assert(math.abs(c - relational(k)._2) < 1e-6, s"$k corr")
+    assert(calendar.keySet == positional.keySet)
+    assert(positional.values.forall(_._1 == 2), positional)
+    positional.foreach { case (k, (l, c)) =>
+      assert(l == calendar(k)._1, s"$k lag $l != ${calendar(k)._1}")
+      assert(math.abs(c - calendar(k)._2) < 1e-6, s"$k corr")
     }
   }
 }
