@@ -89,15 +89,6 @@ object SeriesTable {
     case PeriodUnit.Month => add_months(period, lag)
   }
 
-  /** Data-quality metrics mirroring DataValidator.validate_data_quality
-    * (/root/reference/mapping_engine.py:389-406) — but in ONE pass
-    * (conditional aggregates) instead of the reference's 3 actions. */
-  def qualityMetrics(df: DataFrame, valueCol: String): DataFrame =
-    df.agg(
-      count(lit(1)).as("total_rows"),
-      count(when(col(valueCol).isNull, 1)).as("null_values"),
-      count(when(col(valueCol) < 0, 1)).as("negative_values"))
-
   /** Inner-join the two canonical series on (key, period) — the reference's
     * "merge" step (/root/reference/mapping_engine.py:540-550). Equi-join on
     * both keys: Catalyst picks sort-merge or broadcast-hash under AQE. */

@@ -1,11 +1,5 @@
 package graft.core
 
-import java.sql.Date
-
-/** Inner-join of the two series on (key, period) — the engine's working set
-  * (reference "merged", /root/reference/mapping_engine.py:540-550). */
-final case class MergedPoint(key: String, period: Date, v1: Double, v2: Double)
-
 /** One step of a DTW warping path
   * (/root/reference/mapping_engine.py:286-293). Periods carried as ISO
   * strings for stable cross-engine output. */

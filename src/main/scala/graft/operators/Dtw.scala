@@ -7,8 +7,8 @@ import graft.core.PathStep
 final case class PeriodPoint(period: String, v1: Double, v2: Double)
 
 /** Dynamic Time Warping kernel — pure Scala, primitive arrays, no
-  * dependencies. Runs in-JVM inside `mapGroups` (no Arrow / Python worker
-  * boundary, unlike the reference's pandas UDF).
+  * dependencies. Runs in-JVM inside the per-entity kernel (MappingKernel;
+  * no Arrow / Python worker boundary, unlike the reference's pandas UDF).
   *
   * Behavior matches /root/reference/mapping_engine.py:109-216 exactly:
   *   - z-score normalization with population stddev; std==0 (or NaN) series
@@ -129,7 +129,7 @@ object Dtw {
     * label each path step with its periods and values. An empty series
     * gets the reference's fallback, zero cost and an empty identity path
     * (mapping_engine.py:313-315); any other kernel error propagates.
-    * Shared by DtwMapping.summarize and the mapping kernel. */
+    * Called by the mapping kernel's one DTW body (MappingKernel.align). */
   def align(
       points: Seq[PeriodPoint],
       window: Option[Int],

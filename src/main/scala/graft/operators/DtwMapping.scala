@@ -1,41 +1,21 @@
 package graft.operators
 
-import graft.core.{DtwSummary, MappingConfig, MergedPoint}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.core.{DtwSummary, MappingConfig}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** DTW mapping as a typed Spark operator: `groupByKey(_.key).mapGroups`
-  * running the in-JVM kernel (graft.operators.Dtw), replacing the
-  * reference's grouped-map pandas UDF
-  * (/root/reference/mapping_engine.py:277-337).
-  *
-  * Scale notes (100 TB): one shuffle by entity key (exactly what the pandas
-  * UDF also forces), but no Arrow serialization and no Python worker. Each
-  * group materializes only that entity's series (monthly/daily series are
-  * tiny; `cfg.maxSeriesLength` guards pathological keys — a series that
-  * exceeds it fails fast with the offending key instead of OOMing the
-  * executor). Skew: a single hot key costs O(n·w) with the Sakoe-Chiba
-  * band, not O(n²).
+/** DTW mapping staged over the per-entity kernel's DTW
+  * ([[MappingKernel.dtwSummaries]]): the reference's grouped-map pandas
+  * UDF and its explode (/root/reference/mapping_engine.py:277-337). A key's
+  * merged series is held in one task, bounded by `cfg.maxSeriesLength`; a
+  * Sakoe-Chiba band (`dtwWindow`) makes a long key O(n·w), not O(n²).
   */
 object DtwMapping {
 
-  /** Per-entity DTW summary: (key, total_cost, num_mappings, path). */
-  def summarize(merged: DataFrame, cfg: MappingConfig): Dataset[DtwSummary] = {
-    val spark = merged.sparkSession
-    import spark.implicits._
-    merged
-      .select(col("key").cast("string"), col("period"), col("v1"), col("v2"))
-      .as[MergedPoint]
-      .groupByKey(_.key)
-      .mapGroups { (key, it) =>
-        val pts = it.map(p => PeriodPoint(p.period.toString, p.v1, p.v2)).toVector
-        if (pts.length > cfg.maxSeriesLength)
-          throw new IllegalStateException(
-            s"series for key=$key has ${pts.length} points > maxSeriesLength=${cfg.maxSeriesLength}")
-        val (cost, steps) = Dtw.align(pts, cfg.dtwWindow, cfg.dtwNormalize)
-        DtwSummary(key, cost, steps.length, steps)
-      }
-  }
+  /** Per-entity DTW summary: (key, total_cost, num_mappings, path), with
+    * the periods read in `cfg.periodUnit`. */
+  def summarize(merged: DataFrame, cfg: MappingConfig): Dataset[DtwSummary] =
+    MappingKernel.dtwSummaries(merged, cfg)
 
   /** Filter DTW summaries to entities whose alignment cost is within the
     * p-th percentile — the reference's quality gate on DTW output

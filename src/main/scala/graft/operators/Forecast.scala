@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * one through a non-associative update).
   *
   * Scale notes (100 TB): one shuffle by entity key, groups materialize
-  * ONLY that key's series (`maxSeriesLength` fail-fast guard, the
-  * [[DtwMapping.summarize]] contract), output is one short row per key.
+  * ONLY that key's series (a `maxSeriesLength` fail-fast guard, as the
+  * mapping kernel bounds a key's merged series), output is one short row
+  * per key.
   * The recursion is O(n) per key — skew-safe where DTW is O(n·w).
   */
 object Forecast {

@@ -19,15 +19,14 @@ import org.apache.spark.sql.functions._
   * join-back, DTW on the rest). It serves callers that already staged the
   * merged set, the best-lag table or the DTW summaries, and its split,
   * join-back and union are the oracle the kernel's routing is tested
-  * against (the scan's oracle is a naive scan in the test). Differences
-  * from the reference, by design
-  * (SURVEY.md §7):
+  * against (the scan's and the DTW's are naive ones in the test).
+  * Differences from the reference, by design (SURVEY.md §7):
   *   - auto mode computes the best correlation ONCE per entity and routes
   *     the entity on it — the reference recomputes its correlation UDF a
   *     second time (mapping_engine.py:689-690 then :602);
-  *   - no manual `repartition(200)`: the grouping already shuffles by key,
-  *     and AQE coalesces partitions (the kernel keeps its partition count;
-  *     see [[MappingKernel.mapping]]).
+  *   - no manual `repartition(200)`: the kernel hashes by key into
+  *     `spark.sql.shuffle.partitions`, a shuffle AQE does not coalesce
+  *     (see [[MappingKernel.mapping]]).
   */
 object MappingEngine {
 

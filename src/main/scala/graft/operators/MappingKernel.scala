@@ -2,8 +2,10 @@ package graft.operators
 
 import java.time.LocalDate
 
-import graft.core.{MappingConfig, PeriodUnit}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, KeyValueGroupedDataset, Row}
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.core.{DtwSummary, MappingConfig, PathStep, PeriodUnit}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 
 /** The per-entity mapping kernel: one cogroup of the two series by key,
@@ -22,12 +24,12 @@ import org.apache.spark.sql.functions._
   *     the highest `round(corr, 6)`, then the lowest lag;
   *   - the correlation join-back maps the key's canonical t1 rows, not only
   *     merged ones, to t2 at p + lag (SURVEY.md §7.3);
-  *   - DTW runs [[Dtw.align]] on the merged series.
-  * [[lagCorrTable]] exposes the scan's per-lag rows, so training, the
-  * staged queries and `mapTables` share one scan. The differential test
-  * checks the scan against a naive calendar scan, and the join-back, DTW
-  * and auto routing against the staged relational composition
-  * (LagCorrelation.mapping, DtwMapping.mapping, MappingEngine.autoMapping).
+  *   - DTW runs [[align]], the engine's one DTW body, on the merged series.
+  * [[lagCorrTable]] and [[dtwSummaries]] expose the scan's per-lag rows and
+  * the DTW summaries of a merged table, so training, the staged queries and
+  * `mapTables` share one scan and one DTW. The differential test checks
+  * them against a naive scan and a naive DTW, and the join-back and auto
+  * routing against the staged relational composition.
   *
   * A key's two series are held in memory, so `maxSeriesLength` bounds
   * both of them for every method. The kernel's Pearson cannot divide by
@@ -100,24 +102,39 @@ object MappingKernel {
     rows.toDF().select(rowColumns.map(col): _*)
   }
 
-  /** The per-(key, lag) table of a merged (key, period, v1, v2) table with
-    * one row per (key, period): `(key, lag, correlation, n_overlap)` for
-    * every lag [[lagScan]] keeps. A key's merged series is collected into
-    * one task, so `maxSeriesLength` bounds it. The scan runs on the
-    * aggregate of the one `key` exchange, so the table stays partitioned
-    * by its key column: an argmax over it (LagCorrelation.bestLag) needs
-    * no exchange of its own. */
-  def lagCorrTable(merged: DataFrame, cfg: MappingConfig): DataFrame = {
-    val scan = udf { (key: String, points: Seq[Row]) =>
+  /** `(key, lag, correlation, n_overlap)` for every lag [[lagScan]] keeps
+    * of a merged (key, period, v1, v2) table, one row per (key, period). */
+  def lagCorrTable(merged: DataFrame, cfg: MappingConfig): DataFrame =
+    perMergedKey(merged, cfg) { (_, period, v1, v2) =>
+      lagScan(period, v1, v2, cfg).map { case (lag, r, n) => (lag, r, n.toLong) }.toSeq
+    }.select(col("key"), inline(col("out"))).toDF("key", "lag", "correlation", "n_overlap")
+
+  /** One [[DtwSummary]] per key of such a table: [[align]]'s raw cost and
+    * path. */
+  def dtwSummaries(merged: DataFrame, cfg: MappingConfig): Dataset[DtwSummary] =
+    perMergedKey(merged, cfg) { (key, period, v1, v2) =>
+      val (cost, steps) = align(key, period, v1, v2, cfg)
+      (cost, steps.length, steps)
+    }.select(col("key"), col("out.*")).toDF("key", "total_cost", "num_mappings", "path")
+      .as(Encoders.product[DtwSummary])
+
+  /** The merged-series driver: project `merged` with the period index,
+    * hash it by `key`, collect each key's points (at most
+    * `maxSeriesLength`) in one aggregate and put `f` of them, sorted by
+    * period, in the `out` column beside `key`. Both outputs project alike,
+    * so two of one `merged` share one exchange, and the aggregate (unlike
+    * `flatMapGroups`) keeps the `key` partitioning: a window or join on
+    * `key` over them needs no exchange of its own. */
+  private def perMergedKey[T: TypeTag](merged: DataFrame, cfg: MappingConfig)(
+      f: (String, Array[Int], Array[Option[Double]], Array[Option[Double]]) => T): DataFrame = {
+    val call = udf { (key: String, points: Seq[Row]) =>
       if (points.length > cfg.maxSeriesLength)
         throw new IllegalStateException(
           s"merged series for key=$key has ${points.length} periods > maxSeriesLength=${cfg.maxSeriesLength}")
       val pts = points.sortBy(_.getInt(0))
       def values(i: Int) = pts.map(p => if (p.isNullAt(i)) None else Some(p.getDouble(i))).toArray
-      lagScan(pts.map(_.getInt(0)).toArray, values(1), values(2), cfg).map { case (lag, r, n) =>
-        (lag, r, n.toLong)
-      }.toSeq
-    }
+      f(key, pts.map(_.getInt(0)).toArray, values(1), values(2))
+    }.asNonNullable()
     val points = merged.select(
         col("key").cast("string").as("key"),
         periodIndex(col("period"), cfg.periodUnit).as("period"),
@@ -126,9 +143,7 @@ object MappingKernel {
       .filter(col("key").isNotNull && col("period").isNotNull)
     hashByKey(points)
       .groupBy(col("key"))
-      .agg(scan(col("key"), collect_list(struct(col("period"), col("v1"), col("v2")))).as("lags"))
-      .select(col("key"), inline(col("lags")))
-      .toDF("key", "lag", "correlation", "n_overlap")
+      .agg(call(col("key"), collect_list(struct(col("period"), col("v1"), col("v2")))).as("out"))
   }
 
   private def observations(t: DataFrame, cfg: MappingConfig): DataFrame =
@@ -291,26 +306,37 @@ object MappingKernel {
     }
   }
 
+  /** The DTW mapping rows of one merged series: [[align]]'s path, each
+    * step with the rounded cost (none for an empty series). */
   private def dtw(
       key: String,
       period: Array[Int],
       v1: Array[Option[Double]],
       v2: Array[Option[Double]],
-      cfg: MappingConfig): Iterator[MappedRow] =
-    if (period.isEmpty) Iterator.empty
-    else {
-      val points = period.indices.map { i =>
-        if (v1(i).isEmpty || v2(i).isEmpty)
-          throw new IllegalStateException(
-            s"DTW needs non-null values: key=$key has a null value at ${isoDate(period(i), cfg.periodUnit)}")
-        PeriodPoint(isoDate(period(i), cfg.periodUnit), v1(i).get, v2(i).get)
-      }
-      val (cost, steps) = Dtw.align(points, cfg.dtwWindow, cfg.dtwNormalize)
-      val rounded = Some(round6(cost))
-      steps.iterator.map { s =>
-        MappedRow(key, s.period1, Some(s.value1), s.period2, Some(s.value2), None, "dtw", None, rounded)
-      }
+      cfg: MappingConfig): Iterator[MappedRow] = {
+    val (cost, steps) = align(key, period, v1, v2, cfg)
+    val rounded = Some(round6(cost))
+    steps.iterator.map { s =>
+      MappedRow(key, s.period1, Some(s.value1), s.period2, Some(s.value2), None, "dtw", None, rounded)
     }
+  }
+
+  /** The engine's one DTW body: [[Dtw.align]] on one merged series, its
+    * raw cost and path. A null value fails, naming the key and period. */
+  private def align(
+      key: String,
+      period: Array[Int],
+      v1: Array[Option[Double]],
+      v2: Array[Option[Double]],
+      cfg: MappingConfig): (Double, Seq[PathStep]) = {
+    val points = period.indices.map { i =>
+      if (v1(i).isEmpty || v2(i).isEmpty)
+        throw new IllegalStateException(
+          s"DTW needs non-null values: key=$key has a null value at ${isoDate(period(i), cfg.periodUnit)}")
+      PeriodPoint(isoDate(period(i), cfg.periodUnit), v1(i).get, v2(i).get)
+    }
+    Dtw.align(points, cfg.dtwWindow, cfg.dtwNormalize)
+  }
 
   /** Spark's `round(x, 6)` on a double: HALF_UP on its decimal string. */
   private def round6(x: Double): Double =

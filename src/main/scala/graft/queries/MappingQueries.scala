@@ -33,9 +33,9 @@ object MappingQueries {
   }
 
   // Third shared staging table: per-entity DTW summaries (cost + warping
-  // path) over the merged series. m6, m8, and m11 all need them; caching
-  // means the DTW kernel runs ONCE per (session, dir) and every consumer
-  // derives from the stored paths.
+  // path) over the merged series. m6, m7 and m8 (m11 through m8's model)
+  // need them; caching means the DTW runs ONCE per (session, dir) and
+  // every consumer derives from the stored paths.
   private def dtwSummaries(s: SparkSession, dir: String): DataFrame =
     graft.sources.StagingCache.getOrElseUpdate(s, s"dtwSummaries:$dir") {
       DtwMapping.summarize(merged(s, dir), cfg).toDF()
@@ -95,7 +95,7 @@ object MappingQueries {
         col("method"),
         col("correlation"))
     }),
-    // A11 typed in-JVM DTW via mapGroups + explode (no SQL oracle: rows-only)
+    // A11 the per-entity kernel's in-JVM DTW + explode (no SQL oracle: rows-only)
     "m6_dtw_mapping" -> ((s, dir) => {
       DtwMapping.mappingFromSummaries(dtwSummaries(s, dir)).select(
         col("key"), col("time1"), round(col("value1"), 6).as("value1"),

@@ -1,7 +1,8 @@
 package graft
 
-import graft.core.{MappingConfig, PeriodUnit}
+import graft.core.{DtwSummary, MappingConfig, PeriodUnit}
 import graft.operators.{Dtw, DtwMapping, PeriodPoint}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,6 +56,14 @@ class DtwSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val (cost, path) = Dtw.distance(a, b, window, norm)
       assert(cost == expCost || math.abs(cost - expCost) < 1e-9, s"cost $cost != $expCost")
       assert(path.toSeq == expPath.toSeq, s"path ${path.toSeq} != ${expPath.toSeq}")
+    }
+  }
+
+  test("the naive full-matrix oracle reproduces the unbanded goldens") {
+    goldens.filter(_._4.isEmpty).foreach { case (name, a, b, _, norm, expCost, expPath) =>
+      val (cost, path) = NaiveDtw.align(a.toSeq, b.toSeq, norm)
+      assert(math.abs(cost - expCost) < 1e-9, s"$name: cost $cost != $expCost")
+      assert(path == expPath.toSeq, s"$name: path $path != ${expPath.toSeq}")
     }
   }
 
@@ -148,6 +157,7 @@ class DtwSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val summaries = DtwMapping
       .summarize(merged, MappingConfig(periodUnit = PeriodUnit.Month, dtwNormalize = false))
       .toDF()
+    assert(summaries.schema == Encoders.product[DtwSummary].schema, summaries.schema.treeString)
     val kept = DtwMapping.filterByCostPercentile(summaries, 0.8)
       .select($"key").as[String].collect().toSet
     assert(kept.size >= 8 && !kept.contains("K10") || kept.size >= 8 && !kept.contains("K9") || kept.size == 8)

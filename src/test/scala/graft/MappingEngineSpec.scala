@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
+import graft.core.{DtwSummary, MappingConfig, PathStep, PeriodUnit, SeriesTable}
 import graft.operators.{Comparison, DtwMapping, LagCorrelation, MappingEngine, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -304,22 +304,42 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       NaiveLagScan.best(rows.map(r => (r._2, r._3, r._4))).map { case (lag, c) => (key, lag, c) }
     }.toDF("key", "optimal_lag", "correlation")
 
+  /** [[NaiveDtw]] of every key of `merged` (unbanded), on the driver, as
+    * DTW summaries (key, total_cost, num_mappings, path). A null value
+    * fails. */
+  private def naiveDtwSummaries(merged: DataFrame, cfg: MappingConfig): DataFrame = {
+    assert(cfg.dtwWindow.isEmpty, "the naive oracle is unbanded")
+    merged.collect().toSeq.groupBy(_.getAs[String]("key")).toSeq.map { case (key, rows) =>
+      val points = rows.map { r =>
+        require(!r.isNullAt(r.fieldIndex("v1")) && !r.isNullAt(r.fieldIndex("v2")), s"null value for key=$key")
+        (r.getAs[java.sql.Date]("period").toLocalDate.toString, r.getAs[Double]("v1"), r.getAs[Double]("v2"))
+      }.sortBy(_._1)
+      val (cost, path) = NaiveDtw.align(points.map(_._2), points.map(_._3), cfg.dtwNormalize)
+      DtwSummary(key, cost, path.length, path.map { case (i, j) =>
+        PathStep(i, j, points(i)._1, points(j)._1, points(i)._2, points(j)._3)
+      })
+    }.toDF()
+  }
+
   /** The staged composition mapTables replaces, on canonical tables, with
-    * the naive scan's best lags: the relational join-back, DTW mapping and
-    * auto split are the kernel's oracle for everything after the scan. */
+    * the naive scan's best lags and the naive DTW's summaries: the
+    * relational join-back, path explode and auto split are the kernel's
+    * oracle for everything after the scan and the DTW. */
   private def relationalMapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
     val merged = SeriesTable.merge(t1, t2)
     cfg.method match {
       case "correlation" => LagCorrelation.mapping(t1, t2, naiveBestLag(merged, cfg), cfg)
-      case "dtw"         => DtwMapping.mapping(merged, cfg)
-      case "auto"        => MappingEngine.autoMapping(merged, t1, t2, cfg, bestLag = Some(naiveBestLag(merged, cfg)))
+      case "dtw"         => DtwMapping.mappingFromSummaries(naiveDtwSummaries(merged, cfg))
+      case "auto" =>
+        MappingEngine.autoMapping(merged, t1, t2, cfg,
+          dtwSummaries = Some(naiveDtwSummaries(merged, cfg)), bestLag = Some(naiveBestLag(merged, cfg)))
     }
   }
 
   /** Pipeline.run's former relational composition: the distinct t1 keys
     * left-joined to the model; Correlation, Either and model-less keys
-    * join back at the stored lag or lag 1, DTW keys run DtwMapping on
-    * their merged rows, and the two parts union. */
+    * join back at the stored lag or lag 1, DTW keys explode the naive
+    * DTW's paths of their merged rows, and the two parts union. */
   private def relationalServe(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame = {
     val withRec = t1.select($"key").distinct().join(model, Seq("key"), "left")
     val lags = withRec
@@ -328,7 +348,8 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .select($"key", when($"recommended_method".isNull, lit(1)).otherwise($"optimal_lag").as("optimal_lag"))
     val dtwKeys = withRec.filter($"recommended_method" === "DTW").select($"key")
     LagCorrelation.mappingWithLags(t1, t2, lags, cfg).unionByName(
-      DtwMapping.mapping(SeriesTable.merge(t1, t2).join(dtwKeys, Seq("key"), "left_semi"), cfg).drop("dtw_cost"))
+      DtwMapping.mappingFromSummaries(
+        naiveDtwSummaries(SeriesTable.merge(t1, t2), cfg).join(dtwKeys, Seq("key"), "left_semi")).drop("dtw_cost"))
   }
 
   /** Same columns; keys, methods, times and lags equal; values,
@@ -369,6 +390,12 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         val label = s"${cfg.method} $unit threshold=${cfg.autoCorrThreshold} min=${cfg.minCorrelation}"
         val got = MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", cfg)
         assertSameRows(got, relationalMapping(t1, t2, cfg), label)
+        // the staged auto mode without summaries runs the kernel's DTW on
+        // the keys its split leaves to DTW
+        if (cfg.method == "auto")
+          assertSameRows(
+            MappingEngine.autoMapping(merged, t1, t2, cfg, bestLag = Some(naiveBestLag(merged, cfg))),
+            relationalMapping(t1, t2, cfg), s"$label, staged DTW")
         val byMethod = got.select($"key", $"method").distinct().as[(String, String)].collect().toMap
         // fixture coverage: each case lands where the test needs it
         assert(!byMethod.contains("K_ONLY1") && !byMethod.contains("K_ONLY2"), label)
@@ -422,8 +449,15 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(got.filter($"value1".isNull || $"value2".isNull).count() > 0, "fixture maps null values")
     assertSameRows(got, relationalMapping(t1, t2, corr), "nulls, correlation")
     val dtw = corr.copy(method = "dtw")
-    intercept[Exception](MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", dtw).collect())
-    intercept[Exception](relationalMapping(t1, t2, dtw).collect())
+    // the first null by period is t1's, in April; the error names it
+    def failure(run: => Any): String =
+      Iterator.iterate[Throwable](intercept[Exception](run))(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    Seq(
+      "mapTables" -> failure(MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", dtw).collect()),
+      "summarize" -> failure(DtwMapping.summarize(SeriesTable.merge(t1, t2), dtw).collect())).foreach {
+      case (label, message) =>
+        assert(message.contains("DTW needs non-null values: key=K has a null value at 2024-04-01"), s"$label: $message")
+    }
   }
 
   test("mapTables is correct with ANSI on and leaves the caller's session conf alone") {

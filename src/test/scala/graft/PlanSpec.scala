@@ -1,14 +1,16 @@
 package graft
 
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
-import graft.operators.{LagCorrelation, MappingEngine, Pipeline}
+import graft.operators.{Comparison, DtwMapping, LagCorrelation, MappingEngine, Pipeline}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions.to_date
@@ -58,6 +60,30 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
       case j: BaseJoinExec => j
     }
     assert(relational.isEmpty, plan)
+  }
+
+  test("training shuffles merged once: the DTW summaries reuse the lag scan's key exchange") {
+    import spark.implicits._
+    val merged = (for (k <- Seq("A", "B", "C"); m <- 1 to 8) yield (k, f"2024-$m%02d-01", m.toDouble, (m * m) % 7.0))
+      .toDF("key", "p", "v1", "v2").select($"key", to_date($"p").as("period"), $"v1", $"v2")
+    val cfg = MappingConfig(periodUnit = PeriodUnit.Month, maxLag = 2)
+    val out = Comparison.recommendationsFromSummaries(merged, DtwMapping.summarize(merged, cfg).toDF(), cfg)
+    out.collect()
+    val plan = out.queryExecution.executedPlan // the final adaptive plan, after the collect
+    val appends = collect(plan) {
+      case a: AppendColumnsExec           => a
+      case a: AppendColumnsWithObjectExec => a
+    }
+    assert(appends.isEmpty, plan)
+    assert(collect(plan) { case r: AQEShuffleReadExec if r.hasCoalescedPartition => r }.isEmpty, plan)
+    // one exchange of merged's points by key; the second aggregate reads
+    // it again, and the key-partitioned outputs join without another
+    val shuffles = collect(plan) { case s: ShuffleExchangeExec => s.outputPartitioning }
+    shuffles match {
+      case Seq(HashPartitioning(Seq(a: Attribute), _)) => assert(a.name == "key", plan)
+      case other                                       => fail(s"not one hash of key: $other\n$plan")
+    }
+    assert(collect(plan) { case r: ReusedExchangeExec => r }.length == 1, plan)
   }
 
   test("d7: LSH candidates come from an equi-join, not a cross join") {
@@ -247,6 +273,33 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
     }
   }
 
+  /** The broadcast relations `body` builds: the distinct job tags of the
+    * broadcast exchanges whose jobs it starts. A sentinel job run after it
+    * flushes the asynchronous listener bus, since job starts arrive in
+    * submission order. */
+  private def broadcastsBuilt(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val sentinel = s"sentinel-${java.util.UUID.randomUUID}"
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty("spark.job.tags")).foreach(_.split(",").foreach(tags.add))
+          Option(p.getProperty("spark.jobGroup.id")).foreach(tags.add)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(sentinel, "listener-bus flush")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!tags.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(tags.contains(sentinel), "the sentinel job start never reached the listener")
+      tags.toArray(Array.empty[String]).toSeq.filter(_.startsWith("broadcast exchange")).distinct
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("auto mode routes by filtering the best-lag table: no semi/anti join, one lag scan") {
     import spark.implicits._
     def joinTypes(p: LogicalPlan): Seq[JoinType] = p.collect { case j: Join => j.joinType }
@@ -265,7 +318,14 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
       case p => p.toString
     }
     assert(executed.linesIterator.count(_.contains("WindowGroupLimit")) == 1, executed)
-    assert(executed.linesIterator.exists(l => l.contains("ReusedExchange") && l.contains("optimal_lag")), executed)
+    // the best-lag table is built once, whatever branches AQE prunes after;
+    // with size-based broadcasts off, its hints are the only broadcasts
+    val sizeBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val builds =
+      try broadcastsBuilt(MappingEngine.autoMapping(SeriesTable.merge(t1, t2), t1, t2, cfg).collect())
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", sizeBroadcast)
+    assert(builds.length == 1, builds)
     // the correlation join-back joins the best-lag table once: t1 ⋈ best,
     // then ⋈ t2 at the shifted period — no second join to attach the score
     val best = Seq(("A", 1, 0.9, 5L)).toDF("key", "optimal_lag", "correlation", "n_overlap")
