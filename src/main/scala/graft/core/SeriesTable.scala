@@ -27,13 +27,14 @@ object SeriesTable {
 
   /** Normalize an arbitrary time column to DateType truncated to `unit`.
     * Accepts 'yyyy-MM' strings (reference's native format,
-    * /root/reference/01_setup.oy:98), ISO date strings, DateType, TimestampType. */
+    * 01_setup.oy:98), ISO date strings, DateType, TimestampType.
+    * A string that is no date becomes null under ANSI on and off alike. */
   def normalizePeriod(time: Column, timeType: DataType, unit: PeriodUnit): Column = {
     val asDate: Column = timeType match {
       case StringType =>
-        // 'yyyy-MM' needs an explicit day before to_date (ANSI-safe).
-        when(time.rlike("^\\d{4}-\\d{2}$"), to_date(concat(time, lit("-01"))))
-          .otherwise(to_date(time))
+        // 'yyyy-MM' needs an explicit day before the parse
+        when(time.rlike("^\\d{4}-\\d{2}$"), try_to_date(concat(time, lit("-01"))))
+          .otherwise(try_to_date(time))
       case DateType      => time
       case TimestampType => to_date(time)
       case _: NumericType =>
@@ -50,7 +51,9 @@ object SeriesTable {
   /** The key/period/value projection of any long table: (key string,
     * period date, value double), one row per input row — duplicate
     * periods are still separate rows. The per-entity mapping kernel
-    * (graft.operators.MappingKernel) reads this and sums them itself. */
+    * (graft.operators.MappingKernel) reads this and sums them itself. A
+    * malformed period or value is null, not a failed job, whatever
+    * `spark.sql.ansi.enabled` says. */
   def project(
       df: DataFrame,
       keyCol: String,
@@ -63,7 +66,7 @@ object SeriesTable {
     df.select(
       col(keyCol).cast(StringType).as("key"),
       normalizePeriod(col(timeCol), timeType, unit).as("period"),
-      col(valueCol).cast(DoubleType).as("value"))
+      col(valueCol).try_cast(DoubleType).as("value"))
   }
 
   /** Canonical table: [[project]], then multiple observations in the same

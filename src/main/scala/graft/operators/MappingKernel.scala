@@ -31,6 +31,9 @@ import org.apache.spark.sql.functions._
   * them against a naive scan and a naive DTW, and the join-back and auto
   * routing against the staged relational composition.
   *
+  * [[served]] also emits one status row per t1 key with its QA counts, so
+  * a production run observes its QA row in the write instead of re-reading.
+  *
   * A key's two series are held in memory, so `maxSeriesLength` bounds
   * both of them for every method. The kernel's Pearson cannot divide by
   * zero, so the job is correct with ANSI on or off and leaves the
@@ -52,14 +55,22 @@ object MappingKernel {
       correlation: Option[Double],
       dtw_cost: Option[Double])
 
-  /** t1's side of [[serve]]: an observation, or, with no period, the
-    * key's stored model row. */
+  /** t1's side of [[served]]: with `model`, the key's stored model row;
+    * otherwise an observation, whose period is None when it is null. */
   final case class Served(
       key: String,
       period: Option[Int],
       value: Option[Double],
       method: Option[String],
-      lag: Option[Int])
+      lag: Option[Int],
+      model: Boolean)
+
+  /** A t1 key's QA counts: whether it emitted mapping rows, and how many
+    * of its rows repeat a (time1, time2) pair. */
+  final case class KeyStatus(mapped: Boolean, duplicates: Long)
+
+  /** One row of [[served]]: a mapping row or a key's status. */
+  final case class ServeOut(row: Option[MappedRow], status: Option[KeyStatus])
 
   private val rowColumns = Seq("key", "time1", "value1", "time2", "value2", "lag_offset", "method")
 
@@ -87,19 +98,31 @@ object MappingKernel {
     *   - no model row, or one with a null method: the join-back at lag 1;
     *   - "Complex - Manual Review", or any other method: no rows.
     * Keys with no t1 rows give no rows; a key with two model rows fails.
-    * `cfg.method` is not read. Returns the seven mapping columns. */
-  def serve(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame = {
+    * `cfg.method` is not read. Returns the seven mapping columns: the
+    * mapping rows of [[served]]. */
+  def serve(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame =
+    served(t1, t2, model, cfg).filter(col("status").isNull).drop("status")
+
+  /** [[serve]]'s rows, with a null `status`, plus one row per t1 key whose
+    * `status` ([[KeyStatus]]) holds its QA counts and whose other columns
+    * are null. A key counts when it has a t1 row, even one with a null
+    * period, as QualityChecks.check counts t1's keys. The counts come from
+    * the same cogroup call as the rows, so `observe` can total them with
+    * no DISTINCT aggregate and no second pass over t1. */
+  def served(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame = {
     val spark = t1.sparkSession
     import spark.implicits._
-    // the model's rows have no period; they share t1's one key exchange
+    // the model's rows ride under t1's one key exchange, tagged apart from
+    // t1's rows (whose period may be null too)
     val stored = model.select(
       col("key").cast("string").as("key"),
       col("recommended_method").cast("string").as("method"),
-      col("optimal_lag").cast("int").as("lag"))
+      col("optimal_lag").cast("int").as("lag"),
+      lit(true).as("model"))
       .filter(col("key").isNotNull)
-    val t1Side = observations(t1, cfg).unionByName(stored, allowMissingColumns = true)
+    val t1Side = keyed(t1, cfg).withColumn("model", lit(false)).unionByName(stored, allowMissingColumns = true)
     val rows = byKey[Served](t1Side).cogroup(byKey[Obs](observations(t2, cfg)))(serveEntity(_, _, _, cfg))
-    rows.toDF().select(rowColumns.map(col): _*)
+    rows.toDF().select(rowColumns.map(c => col(s"row.$c").as(c)) :+ col("status"): _*)
   }
 
   /** `(key, lag, correlation, n_overlap)` for every lag [[lagScan]] keeps
@@ -141,29 +164,35 @@ object MappingKernel {
         col("v1").cast("double").as("v1"),
         col("v2").cast("double").as("v2"))
       .filter(col("key").isNotNull && col("period").isNotNull)
-    hashByKey(points)
+    hashBy(points, "key")
       .groupBy(col("key"))
       .agg(call(col("key"), collect_list(struct(col("period"), col("v1"), col("v2")))).as("out"))
   }
 
   private def observations(t: DataFrame, cfg: MappingConfig): DataFrame =
+    keyed(t, cfg).filter(col("period").isNotNull)
+
+  /** A (key, period, value) table projected for the kernel, null keys dropped. */
+  private def keyed(t: DataFrame, cfg: MappingConfig): DataFrame =
     t.select(
         col("key").cast("string").as("key"),
         periodIndex(col("period"), cfg.periodUnit).as("period"),
         col("value").cast("double").as("value"))
-      .filter(col("key").isNotNull && col("period").isNotNull)
+      .filter(col("key").isNotNull)
 
-  /** The kernel's cost is CPU per key, not shuffle bytes, so its stage
-    * keeps all spark.sql.shuffle.partitions tasks: a shuffle with a
-    * partition count is one AQE does not coalesce (it would run a small
-    * job's kernels on one core). Both sides hash `key` into the same
-    * count, so the cogroup adds no exchange of its own, and
-    * groupBy(col).as groups on the column itself: no AppendColumns node. */
-  private def hashByKey(t: DataFrame): DataFrame =
-    t.repartition(t.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("key"))
+  /** `t` hashed by `column` into all spark.sql.shuffle.partitions
+    * partitions: a shuffle with a partition count is one AQE does not
+    * coalesce. The kernel's cost is CPU per key, not shuffle bytes, so its
+    * stage keeps every task (coalescing would run a small job's kernels
+    * on one core); both sides hash `key` into the same count, so the
+    * cogroup adds no exchange of its own. A partitioned write hashed by
+    * its partition column writes each value from one task, so one file. */
+  private[operators] def hashBy(t: DataFrame, column: String): DataFrame =
+    t.repartition(t.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(column))
 
+  /** groupBy(col).as groups on the column itself: no AppendColumns node. */
   private def byKey[T: Encoder](t: DataFrame): KeyValueGroupedDataset[String, T] =
-    hashByKey(t).groupBy(col("key")).as[String, T](Encoders.STRING, implicitly)
+    hashBy(t, "key").groupBy(col("key")).as[String, T](Encoders.STRING, implicitly)
 
   private def periodIndex(period: Column, unit: PeriodUnit): Column = unit match {
     case PeriodUnit.Day   => unix_date(period)
@@ -232,22 +261,29 @@ object MappingKernel {
       key: String,
       a: Iterator[Served],
       b: Iterator[Obs],
-      cfg: MappingConfig): Iterator[MappedRow] = {
-    val (stored, observed) = a.toVector.partition(_.period.isEmpty)
+      cfg: MappingConfig): Iterator[ServeOut] = {
+    val (stored, t1Rows) = a.toVector.partition(_.model)
     if (stored.length > 1) throw new IllegalArgumentException(s"model has ${stored.length} rows for key=$key")
+    val observed = t1Rows.filter(_.period.isDefined)
     // each route builds only the series it reads, so a key that emits no
     // rows is never bounded by maxSeriesLength
     lazy val s1 = series(key, observed.iterator.map(o => Obs(key, o.period.get, o.value)), "table1", cfg.maxSeriesLength)
     lazy val s2 = series(key, b, "table2", cfg.maxSeriesLength)
-    if (observed.isEmpty) Iterator.empty // a key with no t1 rows
-    else stored.headOption.flatMap(_.method) match {
-      case None => joinBack(key, s1, s2, 1, None, cfg) // 05_prod_dev.py:410-414
-      case Some("Correlation" | "Either (prefer Correlation for simplicity)") =>
-        stored.head.lag.fold(Iterator.empty[MappedRow])(joinBack(key, s1, s2, _, None, cfg))
-      case Some("DTW") =>
-        val (period, v1, v2) = merge(s1, s2)
-        dtw(key, period, v1, v2, cfg)
-      case Some(_) => Iterator.empty
+    val rows =
+      if (observed.isEmpty) Vector.empty
+      else (stored.headOption.flatMap(_.method) match {
+        case None => joinBack(key, s1, s2, 1, None, cfg) // 05_prod_dev.py:410-414
+        case Some("Correlation" | "Either (prefer Correlation for simplicity)") =>
+          stored.head.lag.fold(Iterator.empty[MappedRow])(joinBack(key, s1, s2, _, None, cfg))
+        case Some("DTW") =>
+          val (period, v1, v2) = merge(s1, s2)
+          dtw(key, period, v1, v2, cfg)
+        case Some(_) => Iterator.empty
+      }).toVector
+    if (t1Rows.isEmpty) Iterator.empty // a key only t2 or the model holds
+    else {
+      val status = KeyStatus(rows.nonEmpty, rows.length - rows.map(r => (r.time1, r.time2)).distinct.length)
+      rows.iterator.map(r => ServeOut(Some(r), None)) ++ Iterator.single(ServeOut(None, Some(status)))
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.{MappingConfig, SeriesTable}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -58,13 +58,20 @@ object Pipeline {
       recommendations,
       cfg,
       runId)
-    persist(sliced, tmpPath).filter(col("time1").between(start, end))
+    writePartitioned(sliced, tmpPath)
+    readBack(t1.sparkSession, tmpPath).filter(col("time1").between(start, end))
   }
 
   /** Partitioned sink (05_prod_dev.py:862-867): partition by the mapping's
-    * source period so date-range reads prune files. */
+    * source period so date-range reads prune files. The rows are hashed by
+    * `time1` first ([[MappingKernel.hashBy]]), so each `time1` value is
+    * written by one task into one file, not one file per task. */
   def writePartitioned(mapping: DataFrame, path: String): Unit =
-    mapping.write.mode("overwrite").partitionBy("time1").parquet(path)
+    save(MappingKernel.hashBy(mapping, "time1"), path)
+
+  /** Write rows already hashed by `time1`, one directory per value. */
+  private def save(sized: DataFrame, path: String): Unit =
+    sized.write.mode("overwrite").partitionBy("time1").parquet(path)
 
   /** A persisted [[run]] output as it is read back and registered: the
     * columns of [[run]] with the partition column `time1` last, typed DATE
@@ -74,11 +81,9 @@ object Pipeline {
     "key STRING, value1 DOUBLE, time2 STRING, value2 DOUBLE, lag_offset INT, method STRING, " +
       "pipeline_run_id STRING, time1 DATE"
 
-  /** [[writePartitioned]], then read the mapping back in its persisted schema. */
-  private def persist(mapping: DataFrame, path: String): DataFrame = {
-    writePartitioned(mapping, path)
-    mapping.sparkSession.read.schema(StructType.fromDDL(persistedColumns)).parquet(path)
-  }
+  /** A [[writePartitioned]] mapping read back in its persisted schema. */
+  private def readBack(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(StructType.fromDDL(persistedColumns)).parquet(path)
 
   /** Everything the run produced, with the mapping re-read from its
     * persisted form (what downstream consumers will actually see). `qa`
@@ -93,13 +98,23 @@ object Pipeline {
   /** The reference ProductionPipeline.run orchestration
     * (05_prod_dev.py:769-982), end to end: validate input schemas →
     * stored-model mapping → partitioned save + external-table DDL → QA
-    * checks → SLA report (computed on the PERSISTED output, as the
-    * reference's monitor does) → metadata JSON next to the data.
+    * checks → SLA report → metadata JSON next to the data.
     *
-    * Returns the one-row materialized report: the QA metrics row,
-    * aggregated once over the persisted output and the input keys, and
-    * the SLA rows derived from it, plus the overall SLA verdict; only
-    * that constant-size report touches the driver. */
+    * The mapping and its QA row come from one write: [[MappingKernel.served]]'s
+    * rows, hashed by `time1` as [[writePartitioned]] hashes them, pass an
+    * `observe` of [[QualityChecks.servedAggregates]] in the write's result
+    * stage, where Spark merges each partition's metrics once, and its
+    * per-key status rows are dropped before the write. So the run reads
+    * neither its output nor t1 again, and starts no Spark job after the
+    * write but the catalog DDL's; the observed row equals
+    * `QualityChecks.check` of the persisted output and t1. An observation
+    * in a stage AQE prunes as empty reports no metrics (one below the
+    * `time1` exchange does when no key emits a row); should the write's
+    * report none, the run computes that check instead of defaulting.
+    *
+    * Returns the one-row materialized report: the QA metrics row, the SLA
+    * rows derived from it, and the overall SLA verdict; only that
+    * constant-size report touches the driver. */
   def productionRun(
       spark: SparkSession,
       t1: DataFrame,
@@ -112,14 +127,25 @@ object Pipeline {
     SeriesTable.validateSchema(t1, Seq("key", "period", "value"), "table1")
     SeriesTable.validateSchema(t2, Seq("key", "period", "value"), "table2")
     val t0 = System.nanoTime()
-    val mapped = run(t1, t2, recommendations, cfg, runId)
+    val served = MappingKernel.hashBy(
+      MappingKernel.served(t1, t2, recommendations, cfg).withColumn("pipeline_run_id", lit(runId)), "time1")
+    val aggregates = QualityChecks.servedAggregates
+    val observation = Observation()
     val path = s"$outputPath/mappings_$runId"
-    val persisted = persist(mapped, path)
+    save(served.observe(observation, aggregates.head, aggregates.tail: _*)
+      .filter(col("status").isNull).drop("status"), path)
+    val persisted = readBack(spark, path)
     registerExternalTable(spark, path, tableName)
     val elapsed = (System.nanoTime() - t0) / 1e9
-    val qa = collectLocal(QualityChecks.check(persisted, t1))
-    val sla = collectLocal(Sla.fromQuality(qa, elapsed))
-    val slaRows = sla.collect()
+    val observed = observation.get
+    val qa = collectLocal(
+      if (observed.isEmpty) QualityChecks.check(persisted, t1) // no metrics reached the driver
+      else {
+        val schema = served.agg(aggregates.head, aggregates.tail: _*).schema
+        QualityChecks.metrics(localTable(spark, Seq(Row.fromSeq(schema.fieldNames.toSeq.map(observed))), schema))
+      })
+    val slaRows = qa.select(Sla.checks(elapsed, Sla.SlaThresholds())).head().getSeq[Row](0)
+    val sla = localTable(spark, slaRows, Sla.fromQuality(qa, elapsed).schema)
     val slaMet = slaRows
       .find(_.getAs[String]("check") == "sla_met")
       .exists(_.getAs[String]("status") == "PASS")
@@ -148,7 +174,11 @@ object Pipeline {
 
   /** A small result collected into a local table of the same schema. */
   private def collectLocal(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    localTable(df.sparkSession, df.collect().toSeq, df.schema)
+
+  /** Rows held on the driver as a table; a projection of it runs there too. */
+  private def localTable(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Runs persisted under `outputPath` (one `mappings_<runId>` snapshot
     * per [[productionRun]]), ascending by run id. */

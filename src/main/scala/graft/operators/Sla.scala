@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * [[QualityChecks.check]] metrics row, so the coverage formula lives in
   * one place. Over a lazy QA plan, column pruning drops the QA metrics
   * SLA does not read (duplicates, lags, ratios), leaving the mapping's
-  * key count, its row count and the input's key count. Over an already
-  * collected QA row (as `Pipeline.productionRun` passes) it reads no data.
+  * key count, its row count and the input's key count. Over a local QA
+  * row it reads no data, and `Pipeline.productionRun`, which holds its
+  * observed QA row locally, builds the rows from [[checks]] without a job.
   * `durationSec` is wall clock measured by the caller (data cannot know it).
   */
 object Sla {
@@ -37,43 +38,42 @@ object Sla {
     fromQuality(QualityChecks.check(mapping, inputKeys), durationSec, t)
 
   /** The [[report]] rows from a [[QualityChecks.check]] metrics row. */
-  def fromQuality(qa: DataFrame, durationSec: Double, t: SlaThresholds = SlaThresholds()): DataFrame = {
+  def fromQuality(qa: DataFrame, durationSec: Double, t: SlaThresholds = SlaThresholds()): DataFrame =
+    qa.select(inline(checks(durationSec, t)))
+
+  /** The [[report]] rows of a QA row as one array column. Over a local QA
+    * table its projection runs on the driver, where an explode would start
+    * a Spark job, so `Pipeline.productionRun` collects this and inlines
+    * the rows itself. */
+  private[operators] def checks(durationSec: Double, t: SlaThresholds): Column = {
     val covOk = col("coverage_pct") >= t.minCoveragePct
     val durOk = lit(durationSec) <= t.maxDurationSec
     val nonEmptyOk = col("total_mappings") > 0
     def status(ok: Column) = when(ok, "PASS").otherwise("ALERT")
-    qa
-      .select(
-        explode(array(
-          struct(
-            lit("coverage_pct").as("check"),
-            col("coverage_pct").cast("double").as("metric_value"),
-            lit(t.minCoveragePct).as("threshold"),
-            status(covOk).as("status"),
-            lit("ERROR").as("severity")),
-          struct(
-            lit("duration_sec").as("check"),
-            lit(durationSec).cast("double").as("metric_value"),
-            lit(t.maxDurationSec).as("threshold"),
-            status(durOk).as("status"),
-            lit("WARNING").as("severity")),
-          struct(
-            lit("total_mappings").as("check"),
-            col("total_mappings").cast("double").as("metric_value"),
-            lit(0.0).as("threshold"),
-            status(nonEmptyOk).as("status"),
-            lit("CRITICAL").as("severity")),
-          struct(
-            lit("sla_met").as("check"),
-            (covOk && durOk && nonEmptyOk).cast("double").as("metric_value"),
-            lit(1.0).as("threshold"),
-            status(covOk && durOk && nonEmptyOk).as("status"),
-            lit("SUMMARY").as("severity")))).as("c"))
-      .select(
-        col("c.check").as("check"),
-        col("c.metric_value").as("metric_value"),
-        col("c.threshold").as("threshold"),
-        col("c.status").as("status"),
-        col("c.severity").as("severity"))
+    array(
+      struct(
+        lit("coverage_pct").as("check"),
+        col("coverage_pct").cast("double").as("metric_value"),
+        lit(t.minCoveragePct).as("threshold"),
+        status(covOk).as("status"),
+        lit("ERROR").as("severity")),
+      struct(
+        lit("duration_sec").as("check"),
+        lit(durationSec).cast("double").as("metric_value"),
+        lit(t.maxDurationSec).as("threshold"),
+        status(durOk).as("status"),
+        lit("WARNING").as("severity")),
+      struct(
+        lit("total_mappings").as("check"),
+        col("total_mappings").cast("double").as("metric_value"),
+        lit(0.0).as("threshold"),
+        status(nonEmptyOk).as("status"),
+        lit("CRITICAL").as("severity")),
+      struct(
+        lit("sla_met").as("check"),
+        (covOk && durOk && nonEmptyOk).cast("double").as("metric_value"),
+        lit(1.0).as("threshold"),
+        status(covOk && durOk && nonEmptyOk).as("status"),
+        lit("SUMMARY").as("severity")))
   }
 }

@@ -460,6 +460,39 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
+  test("ingest is ANSI-safe: a malformed period or value is null with ANSI on and off") {
+    val raw = Seq(
+      ("A", "2024-01", "1.5"),
+      ("A", "2024-13", "2"),
+      ("A", "2024-02", "abc"),
+      ("A", "not a date", "3"),
+      ("A", "2024-03-05", "4"),
+      ("B", "2024-02-30", "5"),
+      ("B", "2024-04", "1e1")).toDF("k", "t", "v")
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    def rows(ansi: Boolean)(df: => DataFrame) = {
+      spark.conf.set(key, ansi.toString)
+      val out = df.collect().map(_.toString).sorted.toSeq
+      assert(spark.conf.get(key) == ansi.toString)
+      out
+    }
+    def projected = SeriesTable.project(raw, "k", "t", "v", PeriodUnit.Month)
+    def canonical = SeriesTable.canonicalize(raw, "k", "t", "v", PeriodUnit.Month)
+    try {
+      val on = rows(ansi = true)(projected)
+      assert(on == rows(ansi = false)(projected))
+      assert(on == Seq(
+        "[A,2024-01-01,1.5]", "[A,2024-02-01,null]", "[A,2024-03-01,4.0]", "[A,null,2.0]", "[A,null,3.0]",
+        "[B,2024-04-01,10.0]", "[B,null,5.0]"))
+      assert(rows(ansi = true)(canonical) == rows(ansi = false)(canonical))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+    assert(spark.conf.getOption(key) == saved)
+  }
+
   test("mapTables is correct with ANSI on and leaves the caller's session conf alone") {
     // a constant series (every lag's corr undefined) and a 2-period series
     val rows1 = (1 to 8).map(m => ("K_CONST", f"2024-$m%02d", 5.0)) ++

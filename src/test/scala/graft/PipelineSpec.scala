@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
-import graft.operators.{Comparison, Pipeline}
+import graft.operators.{Comparison, Pipeline, QualityChecks}
 import graft.streaming.EventsStream
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -268,6 +268,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         val res = Pipeline.productionRun(spark, t1, t2, recs, cfg, "r0", dir, "prod_empty_test")
         assert(!res.slaMet)
         assert(res.mapping.count() == 0)
+        // every key's status row reaches the observation, though none maps
+        val qa = res.qa.head()
+        assert(qa.getAs[Long]("total_keys") == 3L)
+        assert(qa.getAs[Long]("mapped_keys") == 0L)
         assert(res.mapping.columns.toSeq ==
           Seq("key", "value1", "time2", "value2", "lag_offset", "method", "pipeline_run_id", "time1"))
         val status = res.sla.collect().map(r => r.getAs[String]("check") -> r.getAs[String]("status")).toMap
@@ -310,6 +314,102 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** Every serve route, for QA: Correlation (C), Either (E), DTW (D),
+    * Manual Review (M), no model row (N), a null stored lag (L), a t2-only
+    * key (T2), a model row whose key t1 lacks (X), and a t1 key whose only
+    * periods are null or malformed (P). */
+  private def qaFixture(unit: PeriodUnit): (DataFrame, DataFrame, DataFrame) = {
+    def period(i: Int) = unit match {
+      case PeriodUnit.Month => f"2024-$i%02d"
+      case PeriodUnit.Day   => f"2024-03-$i%02d"
+    }
+    val keys = Seq("C", "E", "D", "M", "N", "L")
+    // D's t2 runs one period ahead of its t1, so DTW maps some t1 rows backwards
+    def value(k: String, i: Int) = if (k == "D") 10.0 + 5 * (i % 4) else 10.0 + i * (k.head % 7) + i % 3
+    val rows1 = (for (k <- keys; i <- 1 to 8) yield (k, period(i), value(k, i))) ++
+      Seq(("P", null, 1.0), ("P", "2024-13", 2.0))
+    val rows2 = for (k <- keys :+ "T2"; i <- 1 to 9) yield (k, period(i), 0.5 * value(k, i + 1) + (if (k == "D") 0 else i * i % 4))
+    def canonical(rows: Seq[(String, String, Double)], name: String) =
+      SeriesTable.canonicalize(rows.toDF("k", "t", "v"), "k", "t", "v", unit, name)
+    val model = Seq[(String, String, Option[Int])](
+      ("C", "Correlation", Some(1)),
+      ("E", "Either (prefer Correlation for simplicity)", Some(2)),
+      ("D", "DTW", Some(0)),
+      ("M", "Complex - Manual Review", Some(0)),
+      ("L", "Correlation", None),
+      ("X", "Correlation", Some(1))).toDF("key", "recommended_method", "optimal_lag")
+    (canonical(rows1, "table1"), canonical(rows2, "table2"), model)
+  }
+
+  private def withAnsi[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try body
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("productionRun's observed QA row equals QualityChecks.check of its output and t1") {
+    for (unit <- Seq(PeriodUnit.Month, PeriodUnit.Day); ansi <- Seq(true, false)) {
+      val label = s"$unit, ANSI $ansi"
+      val before = spark.conf.getOption("spark.sql.ansi.enabled")
+      val (t1, t2, model) = qaFixture(unit)
+      val c = cfg.copy(periodUnit = unit)
+      withTempDir("graft_qa") { dir =>
+        try withAnsi(ansi) {
+          val res = Pipeline.productionRun(spark, t1, t2, model, c, "rq", dir, "prod_qa_test")
+          val qa = res.qa.head()
+          assert(qa == QualityChecks.check(res.mapping, t1).head(), label)
+          assert(qa.getAs[Long]("total_keys") == 7L, label) // P counts, T2 and X do not
+          assert(qa.getAs[Long]("mapped_keys") == 4L, label) // C, E, D, N
+          assert(res.mapping.select("key").distinct().as[String].collect().toSet == Set("C", "E", "D", "N"), label)
+          assert(qa.getAs[Long]("temporal_violations") > 0L, s"$label: the DTW path maps backwards somewhere")
+        } finally spark.sql("DROP TABLE IF EXISTS prod_qa_test")
+      }
+      assert(spark.conf.getOption("spark.sql.ansi.enabled") == before, label)
+    }
+  }
+
+  test("productionRun with empty t1, t2 and model reports total_keys 0, null coverage and ALERT") {
+    val empty = Seq.empty[(String, String, Double)].toDF("k", "t", "v")
+    def canonical(name: String) = SeriesTable.canonicalize(empty, "k", "t", "v", PeriodUnit.Month, name)
+    val model = Seq.empty[(String, String, Int)].toDF("key", "recommended_method", "optimal_lag")
+    withTempDir("graft_none") { dir =>
+      try {
+        val res = Pipeline.productionRun(
+          spark, canonical("table1"), canonical("table2"), model, cfg, "rn", dir, "prod_none_test")
+        val qa = res.qa.head()
+        assert(qa.getAs[Long]("total_keys") == 0L)
+        assert(qa.getAs[Long]("mapped_keys") == 0L)
+        assert(qa.isNullAt(qa.fieldIndex("coverage_pct")))
+        val status = res.sla.collect().map(r => r.getAs[String]("check") -> r.getAs[String]("status")).toMap
+        assert(status("coverage_pct") == "ALERT")
+        assert(status("sla_met") == "ALERT")
+        assert(!res.slaMet)
+      } finally spark.sql("DROP TABLE IF EXISTS prod_none_test")
+    }
+  }
+
+  test("productionRun starts no Spark job after its write but the catalog DDL's") {
+    // the same mapping written by writePartitioned and registered: the jobs
+    // of a run whose QA reads nothing back
+    val (t1, t2, model) = qaFixture(PeriodUnit.Month)
+    withTempDir("graft_jobs") { dir =>
+      try {
+        val (written, _) = jobsStarted {
+          Pipeline.writePartitioned(Pipeline.run(t1, t2, model, cfg, "w"), s"$dir/written")
+          Pipeline.registerExternalTable(spark, s"$dir/written", "prod_jobs_test")
+        }
+        val (ran, res) = jobsStarted(Pipeline.productionRun(spark, t1, t2, model, cfg, "rj", dir, "prod_jobs_test"))
+        assert(ran == written, s"productionRun started $ran jobs; its write and DDL alone start $written")
+        assert(res.qa.head().getAs[Long]("total_keys") == 7L)
+      } finally spark.sql("DROP TABLE IF EXISTS prod_jobs_test")
     }
   }
 

@@ -8,12 +8,14 @@ import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec}
+import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec, CollectMetricsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-import org.apache.spark.sql.functions.to_date
+import org.apache.spark.sql.functions.{lit, to_date}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression locks: the scale properties the engine
@@ -361,6 +363,57 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
       }
       assert(relational.isEmpty, plan)
     }
+  }
+
+  /** The executed plans of the file writes `body` runs. Query listeners
+    * run on the listener bus, so a marked query run after `body` flushes it. */
+  private def writePlans(body: => Unit): Seq[SparkPlan] = {
+    val marker = s"flush-${java.util.UUID.randomUUID}"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    @volatile var flushed = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined) plans.add(qe.executedPlan)
+        if (qe.analyzed.toString.contains(marker)) flushed = true
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(marker)).collect()
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!flushed && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(flushed, "the marked query never reached the listener")
+      plans.toArray(Array.empty[SparkPlan]).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("productionRun's write: the kernel's two key exchanges, one time1 exchange, QA observed above it") {
+    import spark.implicits._
+    val cfg = MappingConfig(periodUnit = PeriodUnit.Month, maxLag = 2)
+    def project(scale: Double, name: String) = SeriesTable.project(
+      (for (k <- Seq("A", "B", "C"); m <- 1 to 8) yield (k, f"2024-$m%02d", scale * m * (k.head - 'A' + 1)))
+        .toDF("k", "t", "v"), "k", "t", "v", cfg.periodUnit, name)
+    val model = Seq(("A", "Correlation", 1), ("B", "DTW", 0)).toDF("key", "recommended_method", "optimal_lag")
+    val plans = withTempDir("graft_write_plan") { dir =>
+      try writePlans(Pipeline.productionRun(
+        spark, project(1.0, "table1"), project(2.0, "table2"), model, cfg, "plan", dir, "plan_write_test"))
+      finally spark.sql("DROP TABLE IF EXISTS plan_write_test")
+    }
+    assert(plans.length == 1, plans)
+    val plan = plans.head
+    def hashed(p: SparkPlan): Seq[String] = collect(p) { case s: ShuffleExchangeExec => s.outputPartitioning }.map {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name
+      case other                                  => fail(s"not a hash of one column: $other\n$plan")
+    }
+    assert(hashed(plan).sorted == Seq("key", "key", "time1"), plan)
+    val observed = collect(plan) { case c: CollectMetricsExec => c }
+    assert(observed.length == 1, plan)
+    // above the time1 exchange, and in the result stage: under no exchange
+    assert(hashed(observed.head).sorted == Seq("key", "key", "time1"), plan)
+    assert(collect(plan) { case s: ShuffleExchangeExec => s }
+      .forall(s => collect(s) { case c: CollectMetricsExec => c }.isEmpty), plan)
   }
 
   test("m17: SLA prunes the QA row to its key counts; no (key, time1, time2) distinct count") {
