@@ -1,14 +1,10 @@
 package graft.operators
 
-import graft.core.PathStep
-
-/** One point of an entity's merged series: (period ISO string, v1, v2),
-  * the input of [[Dtw.align]]. */
-final case class PeriodPoint(period: String, v1: Double, v2: Double)
-
 /** Dynamic Time Warping kernel — pure Scala, primitive arrays, no
-  * dependencies. Runs in-JVM inside the per-entity kernel (MappingKernel;
-  * no Arrow / Python worker boundary, unlike the reference's pandas UDF).
+  * dependencies. Runs in-JVM inside the per-entity kernel, whose one DTW
+  * body (MappingKernel.align) calls [[distance]] on a key's period-sorted
+  * series (no Arrow / Python worker boundary, unlike the reference's
+  * pandas UDF).
   *
   * Behavior matches /root/reference/mapping_engine.py:109-216 exactly:
   *   - z-score normalization with population stddev; std==0 (or NaN) series
@@ -43,7 +39,8 @@ object Dtw {
     out
   }
 
-  /** DTW distance + optimal warping path.
+  /** DTW distance + optimal warping path of two non-empty series, in the
+    * order given (the caller sorts them).
     *
     * Storage is O(n·m) unconstrained, but only O(n·w) when a Sakoe-Chiba
     * band is given (row i stores the 2w+1 cells it can touch) — the path
@@ -67,11 +64,13 @@ object Dtw {
 
     // dp(i)(j) over the (n+1) x (m+1) grid; banded mode stores row i's
     // reachable columns [i-w, i+w] in a (2w+3)-wide stripe (+1 slack each
-    // side so the backtrack's (i, j-1) / (i-1, j) probes stay in range).
+    // side so the backtrack's (i, j-1) / (i-1, j) probes stay in range),
+    // shifted so column j of row i sits at offset j - i + w + 1.
     // Fill bounds use the RAW window — including the reference's behavior
     // that a corner outside the band stays +inf (mapping_engine.py:186-189).
-    val bandW = window.getOrElse(0)
-    val stripe = if (window.isDefined) 2 * bandW + 3 else m + 1
+    val banded = window.isDefined
+    val w = if (banded) window.get else 0
+    val stripe = if (banded) 2 * w + 3 else m + 1
     // Refuse before allocating: the cells must fit one Java array and a
     // quarter of the heap (an Int product wraps to an empty array at
     // 50,001 unbanded points).
@@ -79,21 +78,20 @@ object Dtw {
     val maxCells = math.min(Int.MaxValue - 8L, Runtime.getRuntime.maxMemory / 4 / 8)
     if (cells > maxCells)
       throw new IllegalArgumentException(
-        s"DTW of $n x $m points (window ${window.getOrElse("none")}) needs $cells cells > $maxCells")
-    val dp = Array.fill(cells.toInt)(inf)
-    @inline def slot(i: Int, j: Int): Int =
-      if (window.isDefined) i * stripe + (j - i + bandW + 1) else i * stripe + j
-    @inline def inStripe(i: Int, j: Int): Boolean =
-      j >= 0 && j <= m && (window.isEmpty || (j - i + bandW + 1 >= 0 && j - i + bandW + 1 < stripe))
+        s"DTW of $n x $m points (window ${if (banded) w else "none"}) needs $cells cells > $maxCells")
+    val dp = new Array[Double](cells.toInt)
+    java.util.Arrays.fill(dp, inf)
+    val rowStep = if (banded) stripe - 1 else stripe
+    val shift = if (banded) w + 1 else 0
     @inline def get(i: Int, j: Int): Double =
-      if (i < 0 || j < 0 || i > n || j > m || !inStripe(i, j)) inf else dp(slot(i, j))
-    dp(slot(0, 0)) = 0.0
+      if (i < 0 || j < 0 || i > n || j > m || (banded && math.abs(j - i) > w + 1)) inf
+      else dp(i * rowStep + j + shift)
+    dp(shift) = 0.0
 
     var i = 1
     while (i <= n) {
-      val jStart = window.map(w => math.max(1, i - w)).getOrElse(1)
-      val jEnd = window.map(w => math.min(m, i + w)).getOrElse(m)
-      var j = jStart
+      val jEnd = if (banded) math.min(m, i + w) else m
+      var j = if (banded) math.max(1, i - w) else 1
       while (j <= jEnd) {
         val cost = math.abs(a(i - 1) - b(j - 1))
         val up = get(i - 1, j)
@@ -102,18 +100,23 @@ object Dtw {
         var best = up
         if (left < best) best = left
         if (diag < best) best = diag
-        dp(slot(i, j)) = cost + best
+        dp(i * rowStep + j + shift) = cost + best
         j += 1
       }
       i += 1
     }
 
-    // Backtrack: first-minimum preference up > left > diag (Python min order).
-    val path = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    // Backtrack into the tails of two arrays (a path has at most n + m - 1
+    // steps): first-minimum preference up > left > diag (Python min order).
+    val pathI = new Array[Int](n + m - 1)
+    val pathJ = new Array[Int](n + m - 1)
+    var k = pathI.length
     var ci = n
     var cj = m
     while (ci > 0 && cj > 0) {
-      path += ((ci - 1, cj - 1))
+      k -= 1
+      pathI(k) = ci - 1
+      pathJ(k) = cj - 1
       val up = get(ci - 1, cj)
       val left = get(ci, cj - 1)
       val diag = get(ci - 1, cj - 1)
@@ -121,27 +124,7 @@ object Dtw {
       else if (left <= diag) cj -= 1
       else { ci -= 1; cj -= 1 }
     }
-    (get(n, m), path.reverse.toArray)
-  }
-
-  /** One entity's alignment from its (unsorted) points: sort by period
-    * (ISO dates sort chronologically as strings), run [[distance]], and
-    * label each path step with its periods and values. An empty series
-    * gets the reference's fallback, zero cost and an empty identity path
-    * (mapping_engine.py:313-315); any other kernel error propagates.
-    * Called by the mapping kernel's one DTW body (MappingKernel.align). */
-  def align(
-      points: Seq[PeriodPoint],
-      window: Option[Int],
-      normalizeInput: Boolean): (Double, Seq[PathStep]) = {
-    val pts = points.sortBy(_.period).toArray
-    val s1 = pts.map(_.v1)
-    val s2 = pts.map(_.v2)
-    val (cost, path) =
-      if (pts.isEmpty) (0.0, Array.empty[(Int, Int)])
-      else distance(s1, s2, window, normalizeInput)
-    (cost, path.toSeq.map { case (i, j) =>
-      PathStep(i, j, pts(i).period, pts(j).period, s1(i), s2(j))
-    })
+    val start = k
+    (get(n, m), Array.tabulate(pathI.length - start)(t => (pathI(start + t), pathJ(start + t))))
   }
 }

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   *     the highest `round(corr, 6)`, then the lowest lag;
   *   - the correlation join-back maps the key's canonical t1 rows, not only
   *     merged ones, to t2 at p + lag (SURVEY.md §7.3);
-  *   - DTW runs [[align]], the engine's one DTW body, on the merged series.
+  *   - DTW runs [[align]], the engine's one DTW body: [[Dtw.distance]] on
+  *     the merged series, sorted by period index.
   * [[lagCorrTable]] and [[dtwSummaries]] expose the scan's per-lag rows and
   * the DTW summaries of a merged table, so training, the staged queries and
   * `mapTables` share one scan and one DTW. The differential test checks
@@ -94,7 +95,7 @@ object MappingKernel {
     * makes it (05_prod_dev.py:329-447):
     *   - "Correlation" or "Either (prefer Correlation for simplicity)": the
     *     join-back at the stored lag, no lag scan; a null lag gives no rows;
-    *   - "DTW": [[Dtw.align]] on the merged series;
+    *   - "DTW": [[align]] on the merged series;
     *   - no model row, or one with a null method: the join-back at lag 1;
     *   - "Complex - Manual Review", or any other method: no rows.
     * Keys with no t1 rows give no rows; a key with two model rows fails.
@@ -357,21 +358,24 @@ object MappingKernel {
     }
   }
 
-  /** The engine's one DTW body: [[Dtw.align]] on one merged series, its
-    * raw cost and path. A null value fails, naming the key and period. */
-  private def align(
+  /** The engine's one DTW body: [[Dtw.distance]] on one merged series
+    * (periods ascending), its raw cost and path. A null value fails, naming
+    * the key and period; an empty series gets the reference's fallback,
+    * zero cost and no path (mapping_engine.py:313-315). */
+  private[graft] def align(
       key: String,
       period: Array[Int],
       v1: Array[Option[Double]],
       v2: Array[Option[Double]],
       cfg: MappingConfig): (Double, Seq[PathStep]) = {
-    val points = period.indices.map { i =>
-      if (v1(i).isEmpty || v2(i).isEmpty)
-        throw new IllegalStateException(
-          s"DTW needs non-null values: key=$key has a null value at ${isoDate(period(i), cfg.periodUnit)}")
-      PeriodPoint(isoDate(period(i), cfg.periodUnit), v1(i).get, v2(i).get)
+    val iso = period.map(isoDate(_, cfg.periodUnit))
+    period.indices.find(i => v1(i).isEmpty || v2(i).isEmpty).foreach { i =>
+      throw new IllegalStateException(s"DTW needs non-null values: key=$key has a null value at ${iso(i)}")
     }
-    Dtw.align(points, cfg.dtwWindow, cfg.dtwNormalize)
+    val (a, b) = (v1.map(_.get), v2.map(_.get))
+    val (cost, path) =
+      if (a.isEmpty) (0.0, Array.empty[(Int, Int)]) else Dtw.distance(a, b, cfg.dtwWindow, cfg.dtwNormalize)
+    (cost, path.toSeq.map { case (i, j) => PathStep(i, j, iso(i), iso(j), a(i), b(j)) })
   }
 
   /** Spark's `round(x, 6)` on a double: HALF_UP on its decimal string. */

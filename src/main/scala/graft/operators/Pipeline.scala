@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.core.{MappingConfig, SeriesTable}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -162,7 +164,7 @@ object Pipeline {
     val checks = slaRows.map { r =>
       s"""${js(r.getAs[String]("check"))}: ${js(r.getAs[String]("status"))}"""
     }.mkString(", ")
-    val metaPath = new org.apache.hadoop.fs.Path(s"$outputPath/metadata_$runId.json")
+    val metaPath = new Path(s"$outputPath/metadata_$runId.json")
     val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(metaPath, true)
     try out.write(
@@ -202,20 +204,26 @@ object Pipeline {
   /** External-table DDL + monitoring view over a [[writePartitioned]]
     * [[run]] output (05_prod_dev.py:872-876, 1252-1266), declared with the
     * persisted schema, so every run, empty or not, and every restore
-    * registers the same column types. */
+    * registers the same column types. One `ADD PARTITION` registers the
+    * path's `time1=` directories, listed once on the driver: what `MSCK
+    * REPAIR TABLE` finds, without its Spark job. An empty run adds none. */
   def registerExternalTable(spark: SparkSession, path: String, tableName: String): Unit = {
-    // Identifiers/paths are interpolated into DDL text: backtick-quote
+    // Identifiers/strings are interpolated into DDL text: backtick-quote
     // each dot-separated part of the (possibly database-qualified) table
-    // name, and backslash-escape quotes in the path (Spark's lexer uses
-    // backslash escapes; SQL-standard '' doubling would silently
+    // name, and backslash-escape quotes in string literals (Spark's lexer
+    // uses backslash escapes; SQL-standard '' doubling would silently
     // concatenate adjacent literals and mangle the location).
     def ident(part: String): String = "`" + part.replace("`", "``") + "`"
+    def str(s: String): String = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
     val tn = tableName.split('.').map(ident).mkString(".")
-    val p = path.replace("\\", "\\\\").replace("'", "\\'")
     spark.sql(s"DROP TABLE IF EXISTS $tn")
-    spark.sql(s"CREATE TABLE $tn ($persistedColumns) USING PARQUET PARTITIONED BY (time1) LOCATION '$p'")
-    // partitioned layout: populate the catalog's partition list
-    spark.sql(s"MSCK REPAIR TABLE $tn")
+    spark.sql(s"CREATE TABLE $tn ($persistedColumns) USING PARQUET PARTITIONED BY (time1) LOCATION ${str(path)}")
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val values = (if (fs.exists(dir)) fs.listStatus(dir).toSeq.filter(_.isDirectory) else Nil).map(_.getPath.getName)
+      .collect { case n if n.startsWith("time1=") => ExternalCatalogUtils.unescapePathName(n.stripPrefix("time1=")) }
+    if (values.nonEmpty)
+      spark.sql(s"ALTER TABLE $tn ADD IF NOT EXISTS " + values.map(v => s"PARTITION (time1=${str(v)})").mkString(" "))
     // the monitor view is temporary → always unqualified; flatten the
     // FULL qualified name into it (db1.mapping → db1_mapping_monitor) so
     // same-named tables in different databases don't clobber each

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{DtwSummary, MappingConfig, PeriodUnit}
-import graft.operators.{Dtw, DtwMapping, PeriodPoint}
+import graft.operators.{Dtw, DtwMapping, MappingKernel}
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -130,13 +130,36 @@ class DtwSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // array whose index error the fallback turned into cost 0 with an
     // identity path
     val n = 50001
-    val pts = (0 until n).map(i => PeriodPoint(f"$i%06d", i.toDouble, (i % 7).toDouble))
-    val e = intercept[IllegalArgumentException](Dtw.align(pts, None, normalizeInput = true))
+    val a = Array.tabulate(n)(_.toDouble)
+    val b = Array.tabulate(n)(i => (i % 7).toDouble)
+    val e = intercept[IllegalArgumentException](Dtw.distance(a, b, None, normalizeInput = true))
     assert(e.getMessage.contains("cells"), e.getMessage)
   }
 
   test("an empty series keeps the reference fallback: zero cost, empty path") {
-    assert(Dtw.align(Nil, None, normalizeInput = true) == ((0.0, Nil)))
+    val cfg = MappingConfig(periodUnit = PeriodUnit.Month)
+    assert(MappingKernel.align("K", Array.empty, Array.empty, Array.empty, cfg) == ((0.0, Nil)))
+  }
+
+  test("banded DTW equals the naive banded oracle: cost and path, ties and corners outside the band") {
+    val rng = new scala.util.Random(11)
+    // values from a few levels held for runs of points: plateaus make
+    // equal cells, so the backtrack's tie order decides the path
+    def plateaus(len: Int): Array[Double] =
+      Iterator.continually { val level = rng.nextInt(4).toDouble; Seq.fill(1 + rng.nextInt(4))(level) }
+        .flatten.take(len).toArray
+    val shapes = Seq((7, 7), (8, 5), (5, 9), (12, 4), (3, 10), (15, 13), (1, 4))
+    var outsideBand = 0
+    for ((n, m) <- shapes; w <- Seq(0, 1, 3, math.max(n, m)); norm <- Seq(true, false); _ <- 1 to 3) {
+      val (a, b) = (plateaus(n), plateaus(m))
+      val (cost, path) = Dtw.distance(a, b, Some(w), norm)
+      val (naiveCost, naivePath) = NaiveDtw.align(a.toSeq, b.toSeq, norm, Some(w))
+      val label = s"n=$n m=$m w=$w norm=$norm a=${a.toSeq} b=${b.toSeq}"
+      assert(cost == naiveCost || math.abs(cost - naiveCost) < 1e-9, s"$label: cost $cost != $naiveCost")
+      assert(path.toSeq == naivePath, s"$label: path ${path.toSeq} != $naivePath")
+      if (math.abs(n - m) > w) { assert(cost.isPosInfinity, label); outsideBand += 1 }
+    }
+    assert(outsideBand > 0, "some corner lies outside its band")
   }
 
   test("band constraint: path stays within window") {

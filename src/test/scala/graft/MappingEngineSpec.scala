@@ -182,6 +182,16 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(result.count() == 0)
   }
 
+  test("dtw on a key whose t1 and t2 share no period emits no rows and does not fail") {
+    // an empty merged series keeps the reference's fallback, zero cost and
+    // an empty path (mapping_engine.py:313-315), so the key maps to nothing
+    val t1 = Seq(("K1", "2024-01", 5.0), ("K1", "2024-02", 6.0), ("K2", "2024-01", 1.0), ("K2", "2024-02", 4.0))
+    val t2 = Seq(("K1", "2024-03", 3.0), ("K1", "2024-04", 4.0), ("K2", "2024-01", 2.0), ("K2", "2024-02", 1.0))
+    val rows = MappingEngine.mapTables(
+      t1.toDF("k", "t", "v"), t2.toDF("k", "t", "v"), "k", "t", "v", "v", cfg.copy(method = "dtw"))
+    assert(rows.select("key").as[String].collect().toSet == Set("K2"))
+  }
+
   test("autoMapping broadcasts are gated: broadcastSummaries=false forces no hint") {
     // the segment key lists route through the maybeBroadcast gate that
     // LagCorrelation.mappingWithLags also uses — at 1M+ entities the

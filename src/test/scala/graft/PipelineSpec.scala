@@ -5,6 +5,7 @@ import graft.operators.{Comparison, Pipeline, QualityChecks}
 import graft.streaming.EventsStream
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 import org.scalatest.funsuite.AnyFunSuite
@@ -79,6 +80,33 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(mon.columns.toSeq == Seq("method", "time1", "n_mappings", "n_keys"))
       assert(mon.count() > 0)
       spark.sql("DROP TABLE IF EXISTS mapping_test")
+    }
+  }
+
+  test("registerExternalTable lists the partitions MSCK REPAIR TABLE finds, none for an empty run") {
+    val (t1, t2) = seriesPair(3, 6)
+    val recs = Seq(("K1", "Correlation", 1), ("K2", "DTW", 0)).toDF("key", "recommended_method", "optimal_lag")
+    def partitions(table: String) = spark.sessionState.catalog
+      .listPartitions(TableIdentifier(table)).map(p => (p.spec, p.location)).toSet
+    withTempDir("graft_parts") { dir =>
+      try {
+        val review = Seq("K1", "K2", "K3").map(k => (k, "Complex - Manual Review", 0))
+          .toDF("key", "recommended_method", "optimal_lag")
+        Seq("full" -> recs, "empty" -> review).foreach { case (name, model) =>
+          Pipeline.writePartitioned(Pipeline.run(t1, t2, model, cfg, name), s"$dir/$name")
+          Pipeline.registerExternalTable(spark, s"$dir/$name", "parts_test")
+          spark.sql(s"CREATE TABLE parts_msck LIKE parts_test LOCATION '$dir/$name'")
+          spark.sql("MSCK REPAIR TABLE parts_msck")
+          val dirs = new java.io.File(s"$dir/$name").listFiles().count(_.getName.startsWith("time1="))
+          assert(partitions("parts_test") == partitions("parts_msck"), name)
+          assert(partitions("parts_test").size == dirs, name)
+          assert((dirs == 0) == (name == "empty"), name)
+          spark.sql("DROP TABLE parts_msck")
+        }
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS parts_test")
+        spark.sql("DROP TABLE IF EXISTS parts_msck")
+      }
     }
   }
 
