@@ -85,13 +85,6 @@ object SeriesTable {
       .groupBy(col("key"), col("period"))
       .agg(sum(col("value")).as("value"))
 
-  /** Period arithmetic matching the unit — the derived key of the
-    * lag-shifted equi-join (SURVEY.md §2.3 J2). */
-  def shiftPeriod(period: Column, lag: Column, unit: PeriodUnit): Column = unit match {
-    case PeriodUnit.Day   => date_add(period, lag)
-    case PeriodUnit.Month => add_months(period, lag)
-  }
-
   /** Inner-join the two canonical series on (key, period) — the reference's
     * "merge" step (/root/reference/mapping_engine.py:540-550). Equi-join on
     * both keys: Catalyst picks sort-merge or broadcast-hash under AQE. */

@@ -43,12 +43,7 @@ final case class MappingConfig(
     periodUnit: PeriodUnit = PeriodUnit.Month,
     dtwWindow: Option[Int] = None,        // Sakoe-Chiba band, mapping_engine.py:186-189
     dtwNormalize: Boolean = true,
-    maxSeriesLength: Int = 100000,        // guard: per-key series must fit in one task
-    // Explicitly broadcast per-entity summary tables in join-backs (the
-    // reference's choice, mapping_engine.py:617). One row per entity: set
-    // false at very high entity counts (e.g. >10M keys) and AQE picks the
-    // join strategy from runtime sizes instead.
-    broadcastSummaries: Boolean = true) {
+    maxSeriesLength: Int = 100000) {      // guard: per-key series must fit in one task
   require(
     Set("correlation", "dtw", "auto").contains(method),
     s"method must be correlation|dtw|auto, got $method") // mapping_engine.py:90-91

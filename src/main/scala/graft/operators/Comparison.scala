@@ -64,12 +64,11 @@ object Comparison {
     recommendationsFromSummaries(merged, DtwMapping.summarize(merged, cfg).toDF(), cfg)
 
   /** Recommendations from ALREADY-COMPUTED DTW summaries (key, total_cost,
-    * num_mappings, path). Callers that also need the row-level DTW mapping
-    * (e.g. the production pipeline's DTW segment) compute the summaries
-    * once — ideally cached — and feed both this and
-    * [[DtwMapping.mappingFromSummaries]], so the DTW kernel runs once.
-    * The correlation side is [[LagCorrelation.bestLag]], the argmax the
-    * mapping path uses. */
+    * num_mappings, path) of `merged`, such as a staged
+    * `DtwSummary` table that other queries read too. The correlation side
+    * is [[LagCorrelation.bestLag]] of the kernel's lag scan; serving the
+    * model this trains runs through the kernel ([[MappingKernel.serve]]),
+    * which computes its DTW keys' paths itself. */
   def recommendationsFromSummaries(
       merged: DataFrame,
       dtwSummaries: DataFrame,

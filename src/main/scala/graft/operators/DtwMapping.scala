@@ -4,11 +4,14 @@ import graft.core.{DtwSummary, MappingConfig}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** DTW mapping staged over the per-entity kernel's DTW
+/** DTW staged over the per-entity kernel's DTW
   * ([[MappingKernel.dtwSummaries]]): the reference's grouped-map pandas
-  * UDF and its explode (/root/reference/mapping_engine.py:277-337). A key's
-  * merged series is held in one task, bounded by `cfg.maxSeriesLength`; a
-  * Sakoe-Chiba band (`dtwWindow`) makes a long key O(n·w), not O(n²).
+  * UDF (mapping_engine.py:277-337) as per-key summaries,
+  * their cost-percentile gate and the explode of staged summaries. The
+  * row-level DTW mapping itself is the kernel's (`MappingEngine.mapSeries`
+  * with "dtw"). A key's merged series is held in one task, bounded by
+  * `cfg.maxSeriesLength`; a Sakoe-Chiba band (`dtwWindow`) makes a long key
+  * O(n·w), not O(n²).
   */
 object DtwMapping {
 
@@ -38,16 +41,12 @@ object DtwMapping {
       .drop("cost_threshold")
   }
 
-  /** Row-level DTW mapping: explode the warping path, matching the
-    * reference's explode-after-UDF shape (mapping_engine.py:662-675).
-    * Output schema aligns with the correlation mapping for unionByName. */
-  def mapping(merged: DataFrame, cfg: MappingConfig): DataFrame =
-    mappingFromSummaries(summarize(merged, cfg).toDF())
-
-  /** Same explode, from ALREADY-COMPUTED summaries (key, total_cost, path)
-    * — lets a caller that needed the summaries anyway (recommendation
-    * training, the staged auto mode) derive the row-level mapping without
-    * running the DTW kernel a second time. */
+  /** Row-level DTW mapping from DTW summaries (key, total_cost, path):
+    * explode the warping path, matching the reference's explode-after-UDF
+    * shape (mapping_engine.py:662-675); the columns align with the
+    * correlation mapping's for unionByName. The engine's own DTW mapping
+    * rows come from the kernel (`MappingEngine.mapSeries` with "dtw"); this
+    * serves a caller that staged the summaries anyway, as the m6 query does. */
   def mappingFromSummaries(summaries: DataFrame): DataFrame = {
     summaries
       .select(col("key"), round(col("total_cost"), 6).as("dtw_cost"), explode(col("path")).as("step"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{MappingConfig, SeriesTable}
+import graft.core.MappingConfig
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * The scan itself is the per-entity kernel's ([[MappingKernel.lagCorrTable]]):
   * one exchange of the merged series by key, one call per key that walks
   * the calendar lags 0..maxLag. The relational operators here stage its
-  * per-lag table: the best-lag argmax, the nested `all_lags` summary and
-  * the lag-shifted join-back. No driver-side collection anywhere.
+  * per-lag table: the best-lag argmax and the nested `all_lags` summary.
+  * The join-back at the best lags is the kernel's too ([[mapping]]). No
+  * driver-side collection anywhere.
   */
 object LagCorrelation {
 
@@ -88,54 +89,14 @@ object LagCorrelation {
       .join(stats, Seq("key"))
   }
 
-  /** Row-level mapping: join the *raw* (not merged) tables through the
-    * per-entity optimal lag — preserving the reference quirk that mapping
-    * rows may exist for periods absent from the merged set
-    * (mapping_engine.py:616-637, SURVEY.md §7.3).
-    *
-    * `best` is one row per entity; it is joined back ONCE, carrying the
-    * score into the output, and broadcast when `cfg.broadcastSummaries`
-    * (the reference's choice, mapping_engine.py:617, 641) — at very high
-    * entity counts set it false and AQE picks the strategy from runtime
-    * sizes.
-    */
-  def mapping(t1: DataFrame, t2: DataFrame, best: DataFrame, cfg: MappingConfig): DataFrame = {
-    val valid = best.filter(col("correlation") >= cfg.minCorrelation)
-    mappingWithLags(t1, t2, valid.select(col("key"), col("optimal_lag"), col("correlation")), cfg)
-  }
-
-  /** Broadcast per-entity summaries when the config says so (reference
-    * default); otherwise leave the join strategy to Catalyst/AQE. Shared
-    * by every operator that joins a one-row-per-entity table back to a
-    * fact table. */
-  private[operators] def maybeBroadcast(df: DataFrame, cfg: MappingConfig): DataFrame =
-    if (cfg.broadcastSummaries) broadcast(df) else df
-
-  /** The shared lag-shifted join-back: map t1 rows to t2 rows at
-    * period + optimal_lag, given per-entity lags `(key, optimal_lag, ...)`;
-    * any further columns of `lags` (e.g. `correlation`) are carried into
-    * the output after `method`. The lag-shifted join is derive-then-
-    * equi-join: compute `period + optimal_lag` as a column, then a plain
-    * equi-join. */
-  def mappingWithLags(t1: DataFrame, t2: DataFrame, lags: DataFrame, cfg: MappingConfig): DataFrame = {
-    val carried = lags.columns.toSeq.filterNot(Set("key", "optimal_lag")).map(col)
-    val withLag = t1.join(maybeBroadcast(lags, cfg), Seq("key"), "inner")
-    val right = t2.select(
-      col("key").as("r_key"),
-      col("period").as("r_period"),
-      col("value").as("value2"))
-    withLag
-      .withColumn(
-        "target_period",
-        SeriesTable.shiftPeriod(col("period"), col("optimal_lag"), cfg.periodUnit))
-      .join(right, col("key") === col("r_key") && col("target_period") === col("r_period"), "inner")
-      .select(Seq(
-        col("key"),
-        date_format(col("period"), "yyyy-MM-dd").as("time1"),
-        col("value").as("value1"),
-        date_format(col("r_period"), "yyyy-MM-dd").as("time2"),
-        col("value2"),
-        col("optimal_lag").as("lag_offset"),
-        lit("correlation").as("method")) ++ carried: _*)
-  }
+  /** Row-level mapping: the kernel's join-back
+    * ([[MappingKernel.mappingWithBest]]) maps each t1 row at p, not only
+    * merged ones, to t2 at p + the key's optimal lag, carrying the score
+    * (mapping_engine.py:616-637, SURVEY.md §7.3). `best` is one row per
+    * entity (key, optimal_lag, correlation); it is tagged onto t1's side of
+    * the kernel's cogroup, not joined. Keys under `cfg.minCorrelation`, and
+    * rows with a null lag or correlation, give no rows; a key with two rows
+    * fails, naming it. */
+  def mapping(t1: DataFrame, t2: DataFrame, best: DataFrame, cfg: MappingConfig): DataFrame =
+    MappingKernel.mappingWithBest(t1, t2, best, cfg.copy(method = "correlation"))
 }

@@ -22,15 +22,23 @@ import org.apache.spark.sql.functions._
   *     `n_overlap` as the pairs whose v2 is present, skips a lag under
   *     `minOverlap` or with an undefined correlation, and the best lag is
   *     the highest `round(corr, 6)`, then the lowest lag;
-  *   - the correlation join-back maps the key's canonical t1 rows, not only
-  *     merged ones, to t2 at p + lag (SURVEY.md §7.3);
+  *   - the correlation join-back, the engine's only one, maps the key's
+  *     canonical t1 rows, not only merged ones, to t2 at p + lag
+  *     (SURVEY.md §7.3);
   *   - DTW runs [[align]], the engine's one DTW body: [[Dtw.distance]] on
   *     the merged series, sorted by period index.
+  * A key's lag comes by one of three routes, all in one cogroup driver: the
+  * scan of its merged series ([[mapping]]), a given best-lag row
+  * ([[mappingWithBest]]) or a stored model row ([[served]]). The given and
+  * stored rows are tagged onto t1's side, at most one per key, so they ride
+  * under t1's key exchange: nothing is joined or broadcast. The scan and
+  * given routes share one method rule (the auto threshold and the
+  * `minCorrelation` gate).
   * [[lagCorrTable]] and [[dtwSummaries]] expose the scan's per-lag rows and
   * the DTW summaries of a merged table, so training, the staged queries and
   * `mapTables` share one scan and one DTW. The differential test checks
-  * them against a naive scan and a naive DTW, and the join-back and auto
-  * routing against the staged relational composition.
+  * every entry against naive driver-side oracles (scan, DTW, join-back and
+  * routing).
   *
   * [[served]] also emits one status row per t1 key with its QA counts, so
   * a production run observes its QA row in the write instead of re-reading.
@@ -56,15 +64,13 @@ object MappingKernel {
       correlation: Option[Double],
       dtw_cost: Option[Double])
 
-  /** t1's side of [[served]]: with `model`, the key's stored model row;
-    * otherwise an observation, whose period is None when it is null. */
-  final case class Served(
-      key: String,
-      period: Option[Int],
-      value: Option[Double],
-      method: Option[String],
-      lag: Option[Int],
-      model: Boolean)
+  /** A tagged row's payload: a stored model row's method and lag, or a
+    * given best lag and its correlation. */
+  final case class Stored(method: Option[String], lag: Option[Int], correlation: Option[Double])
+
+  /** t1's side of the cogroup: an observation, whose period is None when it
+    * is null, or, with `stored`, the key's tagged row. */
+  final case class T1Row(key: String, period: Option[Int], value: Option[Double], stored: Option[Stored])
 
   /** A t1 key's QA counts: whether it emitted mapping rows, and how many
     * of its rows repeat a (time1, time2) pair. */
@@ -73,15 +79,33 @@ object MappingKernel {
   /** One row of [[served]]: a mapping row or a key's status. */
   final case class ServeOut(row: Option[MappedRow], status: Option[KeyStatus])
 
+  /** How a key is routed: by `cfg.method`'s rule on the [[bestLag]] of its
+    * merged series (`Scan`) or on its tagged best-lag row (`Given`), or by
+    * [[serve]]'s rules on its tagged model row (`Model`). */
+  private sealed trait Route
+  private case object Scan extends Route
+  private case object Given extends Route
+  private case object Model extends Route
+
   private val rowColumns = Seq("key", "time1", "value1", "time2", "value2", "lag_offset", "method")
 
   /** Map two (key, period, value) tables with `cfg.method`. Duplicate
     * periods are summed here, so canonical and merely projected tables
     * ([[graft.core.SeriesTable.project]]) give the same rows. */
-  def mapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
+  def mapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame =
+    mapped(t1, None, t2, Scan, cfg)
+
+  /** [[mapping]] at a given best-lag table (key, optimal_lag, correlation)
+    * instead of the lag scan: its rows ride under t1's key exchange. A key
+    * with no row, or with a null lag or correlation, has no valid
+    * correlation (so "auto" sends it to DTW); a key with two rows fails. */
+  def mappingWithBest(t1: DataFrame, t2: DataFrame, best: DataFrame, cfg: MappingConfig): DataFrame =
+    mapped(t1, Some(tags(best, lit(null), col("optimal_lag"), col("correlation"))), t2, Given, cfg)
+
+  private def mapped(t1: DataFrame, tagged: Option[DataFrame], t2: DataFrame, route: Route, cfg: MappingConfig) = {
     val spark = t1.sparkSession
     import spark.implicits._
-    val rows = byKey[Obs](observations(t1, cfg)).cogroup(byKey[Obs](observations(t2, cfg)))(mapEntity(_, _, _, cfg))
+    val rows = cogroup(t1, tagged, t2, cfg)(mapKey(_, _, _, route, cfg).getOrElse(Iterator.empty))
     val methodColumns = cfg.method match {
       case "correlation" => Seq("correlation")
       case "dtw"         => Seq("dtw_cost")
@@ -113,17 +137,38 @@ object MappingKernel {
   def served(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame = {
     val spark = t1.sparkSession
     import spark.implicits._
-    // the model's rows ride under t1's one key exchange, tagged apart from
-    // t1's rows (whose period may be null too)
-    val stored = model.select(
-      col("key").cast("string").as("key"),
-      col("recommended_method").cast("string").as("method"),
-      col("optimal_lag").cast("int").as("lag"),
-      lit(true).as("model"))
-      .filter(col("key").isNotNull)
-    val t1Side = keyed(t1, cfg).withColumn("model", lit(false)).unionByName(stored, allowMissingColumns = true)
-    val rows = byKey[Served](t1Side).cogroup(byKey[Obs](observations(t2, cfg)))(serveEntity(_, _, _, cfg))
+    val stored = tags(model, col("recommended_method"), col("optimal_lag"), lit(null))
+    val rows = cogroup(t1, Some(stored), t2, cfg) { (key, a, b) =>
+      mapKey(key, a, b, Model, cfg).fold(Iterator.empty[ServeOut]) { out => // None: a key only t2 or the model holds
+        val mapped = out.toVector
+        val status = KeyStatus(mapped.nonEmpty, mapped.length - mapped.map(r => (r.time1, r.time2)).distinct.length)
+        mapped.iterator.map(r => ServeOut(Some(r), None)) ++ Iterator.single(ServeOut(None, Some(status)))
+      }
+    }
     rows.toDF().select(rowColumns.map(c => col(s"row.$c").as(c)) :+ col("status"): _*)
+  }
+
+  /** A table's tagged rows for the cogroup: key and the [[Stored]] struct,
+    * null keys dropped. */
+  private def tags(t: DataFrame, method: Column, lag: Column, correlation: Column): DataFrame =
+    t.select(
+        col("key").cast("string").as("key"),
+        struct(
+          method.cast("string").as("method"),
+          lag.cast("int").as("lag"),
+          correlation.cast("double").as("correlation")).as("stored"))
+      .filter(col("key").isNotNull)
+
+  /** The one mapping driver: t1's rows, and the tagged rows if any, under
+    * t1's one key exchange, cogrouped with t2's observations by key. An
+    * untagged row carries a null `stored`. */
+  private def cogroup[O: Encoder](t1: DataFrame, tagged: Option[DataFrame], t2: DataFrame, cfg: MappingConfig)(
+      f: (String, Iterator[T1Row], Iterator[Obs]) => Iterator[O]): Dataset[O] = {
+    val spark = t1.sparkSession
+    import spark.implicits._
+    val rows = keyed(t1, cfg).withColumn("stored", lit(null).cast(Encoders.product[Stored].schema))
+    val t1Side = tagged.fold(rows)(rows.unionByName(_, allowMissingColumns = true))
+    byKey[T1Row](t1Side).cogroup(byKey[Obs](observations(t2, cfg)))(f)
   }
 
   /** `(key, lag, correlation, n_overlap)` for every lag [[lagScan]] keeps
@@ -238,54 +283,52 @@ object MappingKernel {
     out.result().unzip3
   }
 
-  private def mapEntity(key: String, a: Iterator[Obs], b: Iterator[Obs], cfg: MappingConfig): Iterator[MappedRow] = {
-    val s1 = series(key, a, "table1", cfg.maxSeriesLength)
-    val s2 = series(key, b, "table2", cfg.maxSeriesLength)
-    val (period, v1, v2) = merge(s1, s2)
-    def best = bestLag(period, v1, v2, cfg)
-    cfg.method match {
-      case "correlation" =>
-        best.filter(_._2 >= cfg.minCorrelation).iterator.flatMap { case (lag, c) =>
-          joinBack(key, s1, s2, lag, Some(c), cfg)
-        }
-      case "dtw" => dtw(key, period, v1, v2, cfg)
-      case "auto" =>
-        best.filter(_._2 >= cfg.autoCorrThreshold) match {
-          case Some((lag, c)) =>
-            if (c >= cfg.minCorrelation) joinBack(key, s1, s2, lag, Some(c), cfg) else Iterator.empty
-          case None => dtw(key, period, v1, v2, cfg)
-        }
+  /** A key's mapping rows by `route`, or None when t1 has no row for the
+    * key. A key with two tagged rows fails, naming it. */
+  private def mapKey(key: String, a: Iterator[T1Row], b: Iterator[Obs], route: Route, cfg: MappingConfig)
+      : Option[Iterator[MappedRow]] = {
+    val (tagged, t1Rows) = a.toVector.partition(_.stored.isDefined)
+    if (tagged.length > 1) {
+      val table = if (route == Model) "model" else "best-lag table"
+      throw new IllegalArgumentException(s"$table has ${tagged.length} rows for key=$key")
     }
-  }
-
-  private def serveEntity(
-      key: String,
-      a: Iterator[Served],
-      b: Iterator[Obs],
-      cfg: MappingConfig): Iterator[ServeOut] = {
-    val (stored, t1Rows) = a.toVector.partition(_.model)
-    if (stored.length > 1) throw new IllegalArgumentException(s"model has ${stored.length} rows for key=$key")
+    val stored = tagged.headOption.flatMap(_.stored)
     val observed = t1Rows.filter(_.period.isDefined)
     // each route builds only the series it reads, so a key that emits no
     // rows is never bounded by maxSeriesLength
     lazy val s1 = series(key, observed.iterator.map(o => Obs(key, o.period.get, o.value)), "table1", cfg.maxSeriesLength)
     lazy val s2 = series(key, b, "table2", cfg.maxSeriesLength)
-    val rows =
-      if (observed.isEmpty) Vector.empty
-      else (stored.headOption.flatMap(_.method) match {
-        case None => joinBack(key, s1, s2, 1, None, cfg) // 05_prod_dev.py:410-414
-        case Some("Correlation" | "Either (prefer Correlation for simplicity)") =>
-          stored.head.lag.fold(Iterator.empty[MappedRow])(joinBack(key, s1, s2, _, None, cfg))
-        case Some("DTW") =>
-          val (period, v1, v2) = merge(s1, s2)
-          dtw(key, period, v1, v2, cfg)
-        case Some(_) => Iterator.empty
-      }).toVector
-    if (t1Rows.isEmpty) Iterator.empty // a key only t2 or the model holds
-    else {
-      val status = KeyStatus(rows.nonEmpty, rows.length - rows.map(r => (r.time1, r.time2)).distinct.length)
-      rows.iterator.map(r => ServeOut(Some(r), None)) ++ Iterator.single(ServeOut(None, Some(status)))
+    lazy val (period, v1, v2) = merge(s1, s2)
+    def dtwRows = dtw(key, period, v1, v2, cfg)
+    // cfg.method's rule on the key's best (lag, correlation); None when no
+    // lag has a valid correlation
+    def byRule(best: => Option[(Int, Double)]): Iterator[MappedRow] = cfg.method match {
+      case "dtw" => dtwRows
+      case "correlation" =>
+        best.filter(_._2 >= cfg.minCorrelation).fold(Iterator.empty[MappedRow]) { case (lag, c) =>
+          joinBack(key, s1, s2, lag, Some(c), cfg)
+        }
+      case "auto" =>
+        best.filter(_._2 >= cfg.autoCorrThreshold) match {
+          case Some((lag, c)) =>
+            if (c >= cfg.minCorrelation) joinBack(key, s1, s2, lag, Some(c), cfg) else Iterator.empty
+          case None => dtwRows
+        }
     }
+    if (t1Rows.isEmpty) None
+    else if (observed.isEmpty) Some(Iterator.empty)
+    else Some(route match {
+      case Scan  => byRule(bestLag(period, v1, v2, cfg))
+      case Given => byRule(stored.flatMap(s => s.lag.zip(s.correlation)))
+      case Model =>
+        stored.flatMap(_.method) match {
+          case None => joinBack(key, s1, s2, 1, None, cfg) // 05_prod_dev.py:410-414
+          case Some("Correlation" | "Either (prefer Correlation for simplicity)") =>
+            stored.flatMap(_.lag).fold(Iterator.empty[MappedRow])(joinBack(key, s1, s2, _, None, cfg))
+          case Some("DTW") => dtwRows
+          case Some(_)     => Iterator.empty
+        }
+    })
   }
 
   /** The calendar lag scan of one merged series (periods ascending): for

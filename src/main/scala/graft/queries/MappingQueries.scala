@@ -33,7 +33,7 @@ object MappingQueries {
   }
 
   // Third shared staging table: per-entity DTW summaries (cost + warping
-  // path) over the merged series. m6, m7 and m8 (m11 through m8's model)
+  // path) over the merged series. m6 and m8 (m11 through m8's model)
   // need them; caching means the DTW runs ONCE per (session, dir) and
   // every consumer derives from the stored paths.
   private def dtwSummaries(s: SparkSession, dir: String): DataFrame =
@@ -83,7 +83,7 @@ object MappingQueries {
         col("correlation"),
         col("n_overlap"))
     }),
-    // J2 lag-shifted equi-join + J3/J4 broadcast join-backs: full mapping
+    // J2 lag shift: the kernel's join-back at the staged best lags (no join)
     "m5_corr_mapping" -> ((s, dir) => {
       corrMapping(s, dir).select(
         col("key"),
@@ -102,11 +102,10 @@ object MappingQueries {
         col("time2"), round(col("value2"), 6).as("value2"),
         col("method"), col("dtw_cost"))
     }),
-    // auto mode: corr/dtw split at 0.7 + unionByName (rows-only)
+    // auto mode: the kernel's corr/dtw split at 0.7 on the staged best lags (rows-only)
     "m7_auto_mapping" -> ((s, dir) => {
       val (t1, t2) = series(s, dir)
-      MappingEngine.autoMapping(
-        merged(s, dir), t1, t2, cfg, Some(dtwSummaries(s, dir)), Some(bestLag(s, dir))).select(
+      MappingEngine.autoMapping(merged(s, dir), t1, t2, cfg, bestLag = Some(bestLag(s, dir))).select(
         col("key"), col("time1"), round(col("value1"), 6).as("value1"),
         col("time2"), round(col("value2"), 6).as("value2"),
         col("lag_offset").cast("long").as("lag_offset"),

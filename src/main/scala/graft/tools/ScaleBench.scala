@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.core.{MappingConfig, PeriodUnit}
-import graft.operators.{DtwMapping, LagCorrelation}
+import graft.operators.{LagCorrelation, MappingEngine}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2337,11 +2337,7 @@ object ScaleBench {
   /** Default mode: the lag-corr + DTW mapping kernels vs the reference
     * baseline tiers. */
   private def mappingMain(spark: SparkSession, nKeys: Long, nPeriods: Int): Unit = {
-    // at >=1M entities the per-entity summary is too big to force-broadcast
-    val cfg = MappingConfig(
-      periodUnit = PeriodUnit.Month,
-      maxLag = 6,
-      broadcastSummaries = nKeys < 1000000)
+    val cfg = MappingConfig(periodUnit = PeriodUnit.Month, maxLag = 6)
     val (t1, t2) = genSeries(spark, nKeys, nPeriods)
     val inputRows = nKeys * nPeriods + nKeys * (nPeriods - 1)
 
@@ -2357,7 +2353,7 @@ object ScaleBench {
       LagCorrelation.mapping(t1, t2, best, cfg).count()
     }
     val (dtwRows, dtwSec) = time {
-      DtwMapping.mapping(merged, cfg.copy(dtwWindow = Some(3))).count()
+      MappingEngine.mapSeries(t1, t2, cfg.copy(method = "dtw", dtwWindow = Some(3))).count()
     }
 
     println(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{DtwSummary, MappingConfig, PathStep, PeriodUnit, SeriesTable}
+import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
 import graft.operators.{Comparison, DtwMapping, LagCorrelation, MappingEngine, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -91,8 +91,7 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("dtw mapping: identical series align on the diagonal with zero cost") {
     val (txn, _) = simpleData(2, 6)
     val t1 = SeriesTable.canonicalize(txn, "customer_id", "month", "amount", PeriodUnit.Month)
-    val merged = SeriesTable.merge(t1, t1.withColumnRenamed("value", "value"))
-    val m = DtwMapping.mapping(merged, cfg.copy(method = "dtw"))
+    val m = MappingEngine.mapSeries(t1, t1, cfg.copy(method = "dtw"))
     val rows = m.collect()
     assert(rows.nonEmpty)
     m.select("dtw_cost").as[Double].collect().foreach(c => assert(c == 0.0))
@@ -192,28 +191,6 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(rows.select("key").as[String].collect().toSet == Set("K2"))
   }
 
-  test("autoMapping broadcasts are gated: broadcastSummaries=false forces no hint") {
-    // the segment key lists route through the maybeBroadcast gate that
-    // LagCorrelation.mappingWithLags also uses — at 1M+ entities the
-    // per-entity key set is exactly the table the gate exists to keep
-    // off the driver
-    val (txn, rev) = simpleData(5, 8)
-    val t1 = SeriesTable.canonicalize(txn, "customer_id", "month", "amount", PeriodUnit.Month)
-    val t2 = SeriesTable.canonicalize(rev, "customer_id", "month", "rev", PeriodUnit.Month)
-    val merged = SeriesTable.merge(t1, t2)
-    def run(bcast: Boolean) = MappingEngine.autoMapping(
-      merged, t1, t2, cfg.copy(method = "auto", broadcastSummaries = bcast))
-    val gated = run(false)
-    assert(
-      !gated.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "broadcastSummaries=false must leave the strategy to Catalyst/AQE")
-    assert(run(true).queryExecution.analyzed.toString.contains("ResolvedHint"))
-    // and the gate never changes answers
-    val a = gated.collect().map(_.toString).sorted
-    val b = run(true).collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-  }
-
   test("auto mode leaves nothing cached") {
     // fresh inputs: a cached plan from another test cannot be reused here
     val (txn, rev) = simpleData(7, 9)
@@ -255,7 +232,38 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(corrScores.toSeq == Seq("K_HI" -> best("K_HI")))
   }
 
-  /** Raw (k, t, v) tables for the kernel-vs-relational test. Periods are
+  test("a best-lag table with two rows for one key fails the staged mappings, naming the key") {
+    val (txn, rev) = simpleData(2, 6)
+    val t1 = SeriesTable.canonicalize(txn, "customer_id", "month", "amount", PeriodUnit.Month)
+    val t2 = SeriesTable.canonicalize(rev, "customer_id", "month", "rev", PeriodUnit.Month)
+    val best = Seq(("CUS_0001", 1, 0.9), ("CUS_0001", 2, 0.8), ("CUS_0002", 1, 0.9))
+      .toDF("key", "optimal_lag", "correlation")
+    Seq(
+      "mapping" -> (() => LagCorrelation.mapping(t1, t2, best, cfg).collect()),
+      "autoMapping" -> (() => MappingEngine.autoMapping(SeriesTable.merge(t1, t2), t1, t2, cfg, bestLag = Some(best))
+        .collect())).foreach { case (label, run) =>
+      val e = intercept[Exception](run())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("best-lag table has 2 rows for key=CUS_0001")), s"$label: $e")
+    }
+  }
+
+  test("a best-lag row with a null lag or correlation maps nothing; auto sends its key to DTW") {
+    val (txn, rev) = simpleData(3, 8)
+    val t1 = SeriesTable.canonicalize(txn, "customer_id", "month", "amount", PeriodUnit.Month)
+    val t2 = SeriesTable.canonicalize(rev, "customer_id", "month", "rev", PeriodUnit.Month)
+    val best = Seq[(String, Option[Int], Option[Double])](
+      ("CUS_0001", None, Some(0.9)), ("CUS_0002", Some(1), None), ("CUS_0003", Some(1), Some(0.9)))
+      .toDF("key", "optimal_lag", "correlation")
+    val corr = LagCorrelation.mapping(t1, t2, best, cfg)
+    assert(corr.select($"key").distinct().as[String].collect().toSeq == Seq("CUS_0003"))
+    val auto = MappingEngine.autoMapping(SeriesTable.merge(t1, t2), t1, t2, cfg, bestLag = Some(best))
+    val methods = auto.select($"key", $"method").distinct().as[(String, String)].collect().toSet
+    assert(methods == Set("CUS_0001" -> "dtw", "CUS_0002" -> "dtw", "CUS_0003" -> "correlation"), methods)
+  }
+
+  /** Raw (k, t, v) tables for the differential test. Periods are
     * dates; under Month they fall on varying days, so the projection's
     * truncation makes more duplicates. Keys: a lag-1 relation, gaps on
     * both sides, duplicate rows, a constant series, 2 periods, a key in
@@ -308,58 +316,56 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  /** The naive scan's best-lag table: (key, optimal_lag, correlation). */
-  private def naiveBestLag(merged: DataFrame, cfg: MappingConfig): DataFrame =
-    naiveScan(merged, cfg).groupBy(_._1).toSeq.flatMap { case (key, rows) =>
-      NaiveLagScan.best(rows.map(r => (r._2, r._3, r._4))).map { case (lag, c) => (key, lag, c) }
-    }.toDF("key", "optimal_lag", "correlation")
+  /** The naive scan's best (lag, correlation) per key. */
+  private def naiveBest(merged: DataFrame, cfg: MappingConfig): Map[String, (Int, Double)] =
+    naiveScan(merged, cfg).groupBy(_._1).flatMap { case (key, rows) =>
+      NaiveLagScan.best(rows.map(r => (r._2, r._3, r._4))).map(key -> _)
+    }
 
-  /** [[NaiveDtw]] of every key of `merged` (unbanded), on the driver, as
-    * DTW summaries (key, total_cost, num_mappings, path). A null value
-    * fails. */
-  private def naiveDtwSummaries(merged: DataFrame, cfg: MappingConfig): DataFrame = {
+  /** A best-lag table (key, optimal_lag, correlation). */
+  private def bestTable(best: Map[String, (Int, Double)]): DataFrame =
+    best.toSeq.map { case (key, (lag, c)) => (key, lag, c) }.toDF("key", "optimal_lag", "correlation")
+
+  /** [[NaiveDtw]] of every key of `merged` (unbanded), on the driver. A
+    * null value fails. */
+  private def naiveDtw(merged: DataFrame, cfg: MappingConfig): Map[String, NaiveJoinBack.Alignment] = {
     assert(cfg.dtwWindow.isEmpty, "the naive oracle is unbanded")
-    merged.collect().toSeq.groupBy(_.getAs[String]("key")).toSeq.map { case (key, rows) =>
+    merged.collect().toSeq.groupBy(_.getAs[String]("key")).map { case (key, rows) =>
       val points = rows.map { r =>
         require(!r.isNullAt(r.fieldIndex("v1")) && !r.isNullAt(r.fieldIndex("v2")), s"null value for key=$key")
-        (r.getAs[java.sql.Date]("period").toLocalDate.toString, r.getAs[Double]("v1"), r.getAs[Double]("v2"))
-      }.sortBy(_._1)
+        (r.getAs[java.sql.Date]("period").toLocalDate, r.getAs[Double]("v1"), r.getAs[Double]("v2"))
+      }.sortBy(_._1.toEpochDay)
       val (cost, path) = NaiveDtw.align(points.map(_._2), points.map(_._3), cfg.dtwNormalize)
-      DtwSummary(key, cost, path.length, path.map { case (i, j) =>
-        PathStep(i, j, points(i)._1, points(j)._1, points(i)._2, points(j)._3)
-      })
-    }.toDF()
-  }
-
-  /** The staged composition mapTables replaces, on canonical tables, with
-    * the naive scan's best lags and the naive DTW's summaries: the
-    * relational join-back, path explode and auto split are the kernel's
-    * oracle for everything after the scan and the DTW. */
-  private def relationalMapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
-    val merged = SeriesTable.merge(t1, t2)
-    cfg.method match {
-      case "correlation" => LagCorrelation.mapping(t1, t2, naiveBestLag(merged, cfg), cfg)
-      case "dtw"         => DtwMapping.mappingFromSummaries(naiveDtwSummaries(merged, cfg))
-      case "auto" =>
-        MappingEngine.autoMapping(merged, t1, t2, cfg,
-          dtwSummaries = Some(naiveDtwSummaries(merged, cfg)), bestLag = Some(naiveBestLag(merged, cfg)))
+      key -> NaiveJoinBack.Alignment(cost, path.map { case (i, j) => (points(i)._1, points(i)._2, points(j)._1, points(j)._3) })
     }
   }
 
-  /** Pipeline.run's former relational composition: the distinct t1 keys
-    * left-joined to the model; Correlation, Either and model-less keys
-    * join back at the stored lag or lag 1, DTW keys explode the naive
-    * DTW's paths of their merged rows, and the two parts union. */
-  private def relationalServe(t1: DataFrame, t2: DataFrame, model: DataFrame, cfg: MappingConfig): DataFrame = {
-    val withRec = t1.select($"key").distinct().join(model, Seq("key"), "left")
-    val lags = withRec
-      .filter($"recommended_method".isin("Correlation", "Either (prefer Correlation for simplicity)") ||
-        $"recommended_method".isNull)
-      .select($"key", when($"recommended_method".isNull, lit(1)).otherwise($"optimal_lag").as("optimal_lag"))
-    val dtwKeys = withRec.filter($"recommended_method" === "DTW").select($"key")
-    LagCorrelation.mappingWithLags(t1, t2, lags, cfg).unionByName(
-      DtwMapping.mappingFromSummaries(
-        naiveDtwSummaries(SeriesTable.merge(t1, t2), cfg).join(dtwKeys, Seq("key"), "left_semi")).drop("dtw_cost"))
+  /** A canonical table's rows with a period, collected for the oracle. */
+  private def observations(t: DataFrame): Seq[NaiveJoinBack.Obs] =
+    t.filter($"period".isNotNull).collect().toSeq.map { r =>
+      NaiveJoinBack.Obs(r.getAs[String]("key"), r.getAs[java.sql.Date]("period").toLocalDate,
+        if (r.isNullAt(r.fieldIndex("value"))) None else Some(r.getAs[Double]("value")))
+    }
+
+  private val rowColumns = Seq("key", "time1", "value1", "time2", "value2", "lag_offset", "method")
+
+  /** The oracle's rows with `columns`. */
+  private def oracle(rows: Seq[NaiveJoinBack.Mapped], columns: Seq[String]): DataFrame =
+    rows.toDF().select(columns.map(col): _*)
+
+  /** The naive mapping of canonical tables with `cfg.method`: the naive
+    * scan's best lags and the naive DTW's paths, through
+    * [[NaiveJoinBack.mapping]]. */
+  private def naiveMapping(t1: DataFrame, t2: DataFrame, cfg: MappingConfig): DataFrame = {
+    val merged = SeriesTable.merge(t1, t2)
+    val dtw = if (cfg.method == "correlation") Map.empty[String, NaiveJoinBack.Alignment] else naiveDtw(merged, cfg)
+    val methodColumns = cfg.method match {
+      case "correlation" => Seq("correlation")
+      case "dtw"         => Seq("dtw_cost")
+      case "auto"        => Seq("correlation", "dtw_cost")
+    }
+    oracle(NaiveJoinBack.mapping(observations(t1), observations(t2), naiveBest(merged, cfg), dtw, cfg),
+      rowColumns ++ methodColumns)
   }
 
   /** Same columns; keys, methods, times and lags equal; values,
@@ -378,7 +384,7 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  test("mapTables' per-entity kernel gives the relational path's rows for every method and unit") {
+  test("every kernel entry gives the naive oracles' rows for every method and unit") {
     for (unit <- Seq(PeriodUnit.Day, PeriodUnit.Month)) {
       val (raw1, raw2) = kernelFixture(unit)
       val t1 = SeriesTable.canonicalize(raw1, "k", "t", "v", unit)
@@ -394,18 +400,21 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         "K_NOISE"), s"fixture coverage $unit")
       assert(got.map(r => (r._1, r._2, r._4)) == want.map(r => (r._1, r._2, r._4)), s"lags $unit")
       got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) <= 1e-9, s"$unit: $g vs $w") }
+      val best = bestTable(naiveBest(merged, scanCfg))
       val configs = Seq("correlation", "dtw", "auto").map(m => MappingConfig(method = m, periodUnit = unit)) :+
         MappingConfig(method = "auto", periodUnit = unit, autoCorrThreshold = 0.5, minCorrelation = 0.9)
       configs.foreach { cfg =>
         val label = s"${cfg.method} $unit threshold=${cfg.autoCorrThreshold} min=${cfg.minCorrelation}"
         val got = MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", cfg)
-        assertSameRows(got, relationalMapping(t1, t2, cfg), label)
-        // the staged auto mode without summaries runs the kernel's DTW on
-        // the keys its split leaves to DTW
-        if (cfg.method == "auto")
-          assertSameRows(
-            MappingEngine.autoMapping(merged, t1, t2, cfg, bestLag = Some(naiveBestLag(merged, cfg))),
-            relationalMapping(t1, t2, cfg), s"$label, staged DTW")
+        val want = naiveMapping(t1, t2, cfg)
+        assertSameRows(got, want, label)
+        // the staged entries run the same kernel at the naive best lags
+        cfg.method match {
+          case "correlation" => assertSameRows(LagCorrelation.mapping(t1, t2, best, cfg), want, s"$label, staged")
+          case "auto" =>
+            assertSameRows(MappingEngine.autoMapping(merged, t1, t2, cfg, bestLag = Some(best)), want, s"$label, staged")
+          case "dtw" =>
+        }
         val byMethod = got.select($"key", $"method").distinct().as[(String, String)].collect().toMap
         // fixture coverage: each case lands where the test needs it
         assert(!byMethod.contains("K_ONLY1") && !byMethod.contains("K_ONLY2"), label)
@@ -421,11 +430,11 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       // mapSeries on the canonical tables runs the same kernel
       assertSameRows(
         MappingEngine.mapSeries(t1, t2, MappingConfig(periodUnit = unit)),
-        relationalMapping(t1, t2, MappingConfig(periodUnit = unit)), s"mapSeries $unit")
+        naiveMapping(t1, t2, MappingConfig(periodUnit = unit)), s"mapSeries $unit")
       // the stored-model run: every route, a null stored lag, an unknown
       // method, a key only in t2, a model row for a key absent from t1;
       // K_ONLY1, K_SHORT and K_MID have no model row
-      val model = Seq[(String, String, Option[Int])](
+      val modelRows = Seq[(String, String, Option[Int])](
         ("K_LAG1", "Correlation", Some(1)),
         ("K_GAPS", "Either (prefer Correlation for simplicity)", Some(2)),
         ("K_DUPS", "DTW", Some(0)),
@@ -434,11 +443,14 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         ("K_TWO", "Unknown", Some(1)),
         ("K_OUTSIDE", "Correlation", None),
         ("K_ONLY2", "Correlation", Some(0)),
-        ("K_ABSENT", "Correlation", Some(1))).toDF("key", "recommended_method", "optimal_lag")
+        ("K_ABSENT", "Correlation", Some(1)))
+      val model = modelRows.toDF("key", "recommended_method", "optimal_lag")
       val serveCfg = MappingConfig(periodUnit = unit)
       val served = Pipeline.run(t1, t2, model, serveCfg, "served")
       assert(served.columns.last == "pipeline_run_id", unit)
-      assertSameRows(served.drop("pipeline_run_id"), relationalServe(t1, t2, model, serveCfg), s"served $unit")
+      val naiveServed = NaiveJoinBack.serve(observations(t1), observations(t2),
+        modelRows.map { case (k, m, lag) => k -> (Some(m), lag) }.toMap, naiveDtw(merged, serveCfg), unit)
+      assertSameRows(served.drop("pipeline_run_id"), oracle(naiveServed, rowColumns), s"served $unit")
       val servedBy = served.select($"key", $"method", $"lag_offset").distinct()
         .collect().map(r => r.getString(0) -> (r.getString(1), Option(r.get(2)))).toMap
       assert(servedBy == Map(
@@ -457,7 +469,7 @@ class MappingEngineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val t2 = SeriesTable.canonicalize(raw2, "k", "t", "v", PeriodUnit.Month)
     val got = MappingEngine.mapTables(raw1, raw2, "k", "t", "v", "v", corr)
     assert(got.filter($"value1".isNull || $"value2".isNull).count() > 0, "fixture maps null values")
-    assertSameRows(got, relationalMapping(t1, t2, corr), "nulls, correlation")
+    assertSameRows(got, naiveMapping(t1, t2, corr), "nulls, correlation")
     val dtw = corr.copy(method = "dtw")
     // the first null by period is t1's, in April; the error names it
     def failure(run: => Any): String =

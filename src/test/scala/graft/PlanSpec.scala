@@ -3,7 +3,7 @@ package graft
 import graft.core.{MappingConfig, PeriodUnit, SeriesTable}
 import graft.operators.{Comparison, DtwMapping, LagCorrelation, MappingEngine, Pipeline}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join, LogicalPlan}
@@ -39,10 +39,18 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("m5: per-entity tables broadcast; no cartesian product") {
-    val p = plan("m5_corr_mapping")
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
+  test("m5: the best lags ride the kernel's key exchanges: no join, no cartesian product") {
+    val out = SparkEntry.queries("m5_corr_mapping")(spark, dir)
+    out.collect()
+    val plan = out.queryExecution.executedPlan // the final adaptive plan, after the collect
+    val shuffles = collect(plan) { case s: ShuffleExchangeExec => s.outputPartitioning }
+    assert(shuffles.length == 2, plan)
+    shuffles.foreach {
+      case HashPartitioning(Seq(a: Attribute), _) => assert(a.name == "key", plan)
+      case other                                  => fail(s"not a hash of key: $other\n$plan")
+    }
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    assert(!plan.toString.contains("CartesianProduct"), plan)
   }
 
   test("m3: lag scan is one kernel: one key exchange, no window or join") {
@@ -302,7 +310,7 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
     } finally sc.removeSparkListener(listener)
   }
 
-  test("auto mode routes by filtering the best-lag table: no semi/anti join, one lag scan") {
+  test("auto mode tags the best-lag table onto the kernel: one lag scan, no join, no broadcast") {
     import spark.implicits._
     def joinTypes(p: LogicalPlan): Seq[JoinType] = p.collect { case j: Join => j.joinType }
     val cfg = MappingConfig(method = "auto", periodUnit = PeriodUnit.Month, maxLag = 2)
@@ -310,29 +318,28 @@ class PlanSpec extends AnyFunSuite with SparkSessionTestWrapper with AdaptiveSpa
     val t1 = SeriesTable.canonicalize(rows, "k", "t", "v", PeriodUnit.Month)
     val t2 = SeriesTable.canonicalize(rows, "k", "t", "v", PeriodUnit.Month)
     val out = MappingEngine.autoMapping(SeriesTable.merge(t1, t2), t1, t2, cfg)
-    val auto = joinTypes(out.queryExecution.optimizedPlan)
-    assert(!auto.contains(LeftAnti) && !auto.contains(LeftSemi), auto)
-    // both segments join the same broadcast best-lag relation, so AQE
-    // reuses it: the lag scan's argmax runs once, not once per segment
+    // the merge that feeds the lag scan is the plan's only join: no semi,
+    // anti or outer join splits the segments
+    assert(joinTypes(out.queryExecution.optimizedPlan) == Seq(Inner), out.queryExecution.optimizedPlan)
+    assert(!out.queryExecution.analyzed.toString.contains("ResolvedHint"), out.queryExecution.analyzed)
     out.collect()
     val executed = out.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan.toString // the final plan, without the initial one
       case p => p.toString
     }
     assert(executed.linesIterator.count(_.contains("WindowGroupLimit")) == 1, executed)
-    // the best-lag table is built once, whatever branches AQE prunes after;
-    // with size-based broadcasts off, its hints are the only broadcasts
+    // with size-based broadcasts off, nothing is broadcast at all
     val sizeBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val builds =
       try broadcastsBuilt(MappingEngine.autoMapping(SeriesTable.merge(t1, t2), t1, t2, cfg).collect())
       finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", sizeBroadcast)
-    assert(builds.length == 1, builds)
-    // the correlation join-back joins the best-lag table once: t1 ⋈ best,
-    // then ⋈ t2 at the shifted period — no second join to attach the score
+    assert(builds.isEmpty, builds)
+    // the correlation join-back at a given best-lag table joins nothing
     val best = Seq(("A", 1, 0.9, 5L)).toDF("key", "optimal_lag", "correlation", "n_overlap")
-    val corr = joinTypes(LagCorrelation.mapping(t1, t2, best, cfg).queryExecution.optimizedPlan)
-    assert(corr.length == 2, corr)
+    val corr = LagCorrelation.mapping(t1, t2, best, cfg).queryExecution.optimizedPlan
+    assert(joinTypes(corr).isEmpty, corr)
+    assert(!corr.toString.contains("ResolvedHint"), corr)
   }
 
   test("mapTables runs one per-entity kernel: two exchanges hashing key, no window, no join") {
